@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from searchengine_spark.analysis import ann, dedup, events, multimodal, textstats
+from searchengine_spark.analysis.textstats import WORD_SPLIT
 from searchengine_spark.config import EngineConfig
 from searchengine_spark.oracle.sqlgen import (
     h32_sql,
@@ -58,8 +59,6 @@ EMBED_DIM = 64  # testdata embeddings.parquet width (TESTDATA.md)
 # keeps 16+ bits so bucket count scales with the corpus
 ENTRY_LSH_BITS = 8
 IVF_CENTROIDS, IVF_NPROBE = 16, 4
-
-_WORD_SPLIT = "[^A-Za-zА-ЯЁа-яё]+"
 
 
 # ---------------------------------------------------------------------------
@@ -643,7 +642,7 @@ wrd as (
   select doc_id, w as word
   from (
     select doc_id,
-           unnest(regexp_split_to_array(lower(text), '{_WORD_SPLIT}')) as w
+           unnest(regexp_split_to_array(lower(text), '{WORD_SPLIT}')) as w
     from documents where text is not null and text <> ''
   ) where w <> ''
 )
@@ -657,7 +656,7 @@ def _grams_cte(n: int = 3) -> str:
 {_WRD},
 toks as (
   select doc_id,
-         list_filter(regexp_split_to_array(lower(text), '{_WORD_SPLIT}'),
+         list_filter(regexp_split_to_array(lower(text), '{WORD_SPLIT}'),
                      x -> x <> '') as arr
   from documents where text is not null and text <> ''
 ),
@@ -901,7 +900,7 @@ agg as (
 ),
 toks as (
   select doc_id,
-         list_filter(regexp_split_to_array(lower(text), '{_WORD_SPLIT}'),
+         list_filter(regexp_split_to_array(lower(text), '{WORD_SPLIT}'),
                      x -> x <> '') as arr
   from documents where text is not null and text <> ''
 ),
@@ -1331,7 +1330,7 @@ agg as (
 ),
 toks as (
   select doc_id,
-         list_filter(regexp_split_to_array(lower(text), '{_WORD_SPLIT}'),
+         list_filter(regexp_split_to_array(lower(text), '{WORD_SPLIT}'),
                      x -> x <> '') as arr
   from documents where text is not null and text <> ''
 ),

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 from searchengine_spark.analysis.textstats import (
     h32_col,
     quality_score,
+    tokens_col,
     word_ngrams,
     words,
 )
@@ -188,9 +189,7 @@ def minhash_signatures(documents: DataFrame, k: int = N_MINHASH) -> DataFrame:
     explode, no distinct shuffle, no groupBy. Docs with zero letter tokens
     are absent, matching the previous aggregate-over-words shape; values are
     identical (same H32, same affine permutations, same min)."""
-    from searchengine_spark.analysis.textstats import WORD_SPLIT
-
-    ws = F.filter(F.split(F.lower("text"), WORD_SPLIT), lambda x: x != "")
+    ws = tokens_col()
     harr = F.transform(F.array_distinct(ws), lambda x: h32_col(x))
     return (
         documents.filter(F.col("text").isNotNull() & (F.length("text") > 0))
@@ -263,9 +262,7 @@ def simhash(documents: DataFrame, bits: int = 16) -> DataFrame:
     ``aggregate`` — no (doc, word) tf shuffle, no per-doc groupBy (the
     previous shape paid both, corpus-wide). Docs with zero letter tokens are
     absent, as before; values are identical."""
-    from searchengine_spark.analysis.textstats import WORD_SPLIT
-
-    ws = F.filter(F.split(F.lower("text"), WORD_SPLIT), lambda x: x != "")
+    ws = tokens_col()
     harr = F.transform(ws, lambda x: h32_col(x))
     base = (
         documents.filter(F.col("text").isNotNull() & (F.length("text") > 0))

@@ -4,9 +4,8 @@ The container has no PIL/ffmpeg, but a real decoder for the two most common
 uncompressed-ish formats needs neither: PNG is zlib (stdlib) + per-scanline
 unfiltering (numpy), WAV is a RIFF header walk + a dtype view. These make
 the multimodal pipeline's decode step REAL for ``image/png`` and
-``audio/wav`` payloads — only JPEG/video remain stubbed
-(``multimodal.decode_image_stub``), since DCT/ffmpeg codecs are genuinely
-out of scope for a from-scratch build.
+``audio/wav`` payloads. JPEG and video are out of scope (SURVEY §2.6):
+their DCT/ffmpeg codecs are not available and not built from scratch.
 
 Both decoders are deterministic pure functions of the payload bytes, so
 executors, the driver, and tests agree byte-for-byte. Encoders exist to

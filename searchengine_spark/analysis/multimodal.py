@@ -9,9 +9,9 @@ Decode status by format:
 - ``image/png`` and ``audio/wav``: REAL decoders, written from the public
   specs in numpy + stdlib zlib/struct (``analysis/media_codecs.py``) —
   :func:`decode_media_features` runs them inside the Arrow batches.
-- JPEG / video: still a clearly-marked STUB (:func:`decode_image_stub`
-  raises ``NotImplementedError``) — DCT/ffmpeg codecs aren't in this
-  container and are out of scope for a from-scratch build.
+- JPEG / video: out of scope (SURVEY §2.6). Their DCT/ffmpeg codecs are
+  not available and a from-scratch build of them is not planned;
+  :func:`decode_media_features` rejects such payloads with ``ValueError``.
 - :func:`extract_features` (+ :func:`_fake_features`) remains the
   format-agnostic pure-bytes featurizer with a byte-accurate DuckDB oracle
   (``q_multimodal_binary``); the PNG/WAV path is pytest-verified via
@@ -61,18 +61,6 @@ def synthetic_binary_payloads(documents: DataFrame) -> DataFrame:
         F.unhex(F.md5(F.col("doc_id").cast("string"))).alias("payload"),
         F.element_at(mt, (F.col("doc_id") % 3 + 1).cast("int")).alias("media_type"),
         F.lit(16).alias("n_bytes"),
-    )
-
-
-def decode_image_stub(payload: bytes) -> "object":
-    """STUB for the formats that genuinely need external codecs (JPEG's DCT,
-    video via ffmpeg — not installed in this container, and a from-scratch
-    DCT pipeline is out of scope). PNG and PCM WAV decode is REAL — see
-    :mod:`searchengine_spark.analysis.media_codecs` and
-    :func:`decode_media_features`."""
-    raise NotImplementedError(
-        "JPEG/video decode requires PIL/ffmpeg; PNG and WAV are implemented "
-        "in analysis/media_codecs.py"
     )
 
 

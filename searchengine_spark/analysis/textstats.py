@@ -23,6 +23,13 @@ def h32_col(col) -> Column:
 #: split regex shared with the DuckDB oracles (letters only, incl. Cyrillic)
 WORD_SPLIT = "[^A-Za-zА-ЯЁа-яё]+"
 
+
+def tokens_col(col: str = "text") -> Column:
+    """The analysis tokenizer as one in-row expression: the lowercased
+    text's letter runs, in order, as an array (empty splits dropped)."""
+    return F.filter(F.split(F.lower(col), WORD_SPLIT), lambda x: x != "")
+
+
 #: tiny English function-word list for the language-ID heuristic
 EN_MARKERS = ("the", "a", "an", "of", "and", "in", "on", "is", "to", "it")
 
@@ -51,7 +58,7 @@ def token_stats(documents: DataFrame) -> DataFrame:
     projection — no (doc, word) explode, no shuffle, no join-back. A doc
     with no letter runs gets an empty array, so its counts are 0 exactly as
     the previous left-join + fillna emitted."""
-    ws = F.filter(F.split(F.lower("text"), WORD_SPLIT), lambda x: x != "")
+    ws = tokens_col()
     return documents.filter(
         F.col("text").isNotNull() & (F.length("text") > 0)
     ).select(
@@ -60,9 +67,6 @@ def token_stats(documents: DataFrame) -> DataFrame:
         F.length("text").alias("n_chars"),
         F.size(ws).cast("long").alias("n_tokens"),
         F.size(F.array_distinct(ws)).cast("long").alias("n_distinct"),
-    ).select(
-        # column order of the previous join-based shape
-        "doc_id", "n_ws_tokens", "n_chars", "n_tokens", "n_distinct"
     )
 
 
@@ -104,7 +108,7 @@ def lang_id(documents: DataFrame) -> DataFrame:
     # in-row counts over the doc's own token array — no (doc, word) explode,
     # no shuffle. Docs with zero letter tokens are absent, matching the
     # previous groupBy-over-words shape.
-    ws = F.filter(F.split(F.lower("text"), WORD_SPLIT), lambda x: x != "")
+    ws = tokens_col()
     d = (
         documents.filter(F.col("text").isNotNull() & (F.length("text") > 0))
         .select(
@@ -318,9 +322,7 @@ def _gram_counts(documents: DataFrame, n: int) -> DataFrame:
         F.col("text").isNotNull() & (F.length("text") > 0)
     ).select(
         "doc_id",
-        F.filter(F.split(F.lower("text"), WORD_SPLIT), lambda x: x != "").alias(
-            "ws"
-        ),
+        tokens_col().alias("ws"),
     )
     grams = F.when(
         F.size("ws") >= n,
@@ -380,9 +382,7 @@ def word_ngrams(documents: DataFrame, n: int = 3) -> DataFrame:
         F.col("text").isNotNull() & (F.length("text") > 0)
     ).select(
         "doc_id",
-        F.filter(
-            F.split(F.lower("text"), WORD_SPLIT), lambda x: x != ""
-        ).alias("ws"),
+        tokens_col().alias("ws"),
     )
     # slide a window of n over the array: transform over 0..len-n
     idxs = F.when(
@@ -527,9 +527,7 @@ def fingerprint(documents: DataFrame, n: int = 3) -> DataFrame:
         F.col("text").isNotNull() & (F.length("text") > 0)
     ).select(
         "doc_id",
-        F.filter(
-            F.split(F.lower("text"), WORD_SPLIT), lambda x: x != ""
-        ).alias("ws"),
+        tokens_col().alias("ws"),
         F.lower("text").alias("_lt"),
     )
     idxs = F.when(

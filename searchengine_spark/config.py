@@ -108,33 +108,6 @@ class EngineConfig:
     # between batches, never inside one.
     compact_every_epochs: int = 8
 
-    # Two-pass cross-shard WAND threshold sharing (bm25): pass 1 runs the
-    # kernel on the single highest-upper-bound shard; its k-th score θ is
-    # broadcast into every other shard's kernel (theta_init), which then
-    # prunes from the first term, and — when an exact count isn't requested
-    # — shards whose metadata upper bound falls below θ are never scanned
-    # at all. Engages only when ≥ wand_min_shards shards hold query-term
-    # blocks (below that, one job beats two). Ranking stays exact: θ only
-    # elides work for docs provably outside the global top-k.
-    wand_two_pass: bool = True
-    wand_min_shards: int = 4
-    # Two-pass engagement heuristics (measured r4, BENCH/RUN_1v4_bench4.md):
-    # pass 1 SERIALIZES one shard ahead of the rest, so it only pays when the
-    # skipped shards exceed what the cluster's parallel slots would have
-    # absorbed anyway. Engage iff BOTH hold:
-    #  - enough shards per core: n_shards ≥ max(wand_min_shards,
-    #    wand_shards_per_core × defaultParallelism) — below that, one wave of
-    #    tasks covers every shard and pass 1 just adds a wave;
-    #  - prunable skew exists: ≥ wand_skew_min_frac of the shards have a
-    #    metadata UB < wand_skew_gate × the max shard UB. θ lands well below
-    #    the max UB, so near-uniform shard UBs (synthetic uniform corpora,
-    #    round-robin doc assignment) can never be skipped and pass 1's wave
-    #    is pure cost. Set both *_frac knobs to 0 to force engagement
-    #    (tests do).
-    wand_shards_per_core: float = 2.0
-    wand_skew_gate: float = 0.6
-    wand_skew_min_frac: float = 0.25
-
     def shard_size(self, n_docs: int) -> int:
         """Resolve docs_per_shard: aim ≈4 shards/core, with a floor of 4096
         docs/shard so shard count (== query-kernel task count) never explodes

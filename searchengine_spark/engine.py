@@ -64,42 +64,32 @@ class SearchEngine:
             # are maintained counters, site ranges live in the sites table —
             # NO corpus-sized job runs before the first query
             meta = cat.read_meta()
-            if "shard_size" not in meta:
+            sites_df = cat.read("sites")
+            missing = [
+                k for k in ("shard_size", "n_docs", "sum_doc_len", "term_buckets")
+                if k not in meta
+            ] + [f"sites.{c}" for c in ("lo", "hi") if c not in sites_df.columns]
+            if missing:
                 raise RuntimeError(
-                    "index format too old: index_meta lacks 'shard_size' — "
+                    f"index format too old: index lacks {', '.join(missing)} — "
                     "rebuild the index with SearchEngine.build()"
                 )
-            sites_df = cat.read("sites")
             site_rows = sites_df.collect()
-            site_ids = {r["site"]: int(r["sid"]) for r in site_rows}
-            # compat: warehouses built before the maintained-counter /
-            # site-range format fall back to BlockSearcher's documents-scan
-            # derivation (None args) instead of KeyError-ing — same posture
-            # as the .get fallbacks for flat_group_docs / mut_seq
-            site_ranges = (
-                {r["site"]: (int(r["lo"]), int(r["hi"])) for r in site_rows}
-                if {"lo", "hi"} <= set(sites_df.columns)
-                else None
-            )
-            if "n_docs" in meta and "sum_doc_len" in meta:
-                n_docs = int(meta["n_docs"])
-                avgdl = meta["sum_doc_len"] / n_docs if n_docs else 0.0
-            else:
-                n_docs = avgdl = None
+            n_docs = int(meta["n_docs"])
             self._searcher = BlockSearcher(
                 blocks=cat.read("postings"),
                 documents=cat.read("documents"),
                 terms=cat.read("terms"),
                 cfg=self.cfg,
                 transcripts=self._transcripts,
-                shard_size=int(meta["shard_size"]),
-                site_ids=site_ids,
-                term_buckets=int(meta["term_buckets"])
-                if "term_buckets" in meta
-                else None,
                 n_docs=n_docs,
-                avgdl=avgdl,
-                site_ranges=site_ranges,
+                avgdl=meta["sum_doc_len"] / n_docs if n_docs else 0.0,
+                site_ranges={
+                    r["site"]: (int(r["lo"]), int(r["hi"])) for r in site_rows
+                },
+                site_ids={r["site"]: int(r["sid"]) for r in site_rows},
+                shard_size=int(meta["shard_size"]),
+                term_buckets=int(meta["term_buckets"]),
             )
         return self._searcher
 

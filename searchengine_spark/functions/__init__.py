@@ -3,7 +3,6 @@ from searchengine_spark.functions.lemmatize import (  # noqa: F401
     lemmatize_token,
     lemma_counts,
     query_lemmas,
-    lemmas_udf,
     lemma_counts_udf,
 )
 from searchengine_spark.functions.links import (  # noqa: F401

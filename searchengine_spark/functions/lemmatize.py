@@ -196,40 +196,6 @@ def query_lemmas(query: str) -> set[str]:
 # per-page prototype-bean analog). No per-row Python UDFs anywhere
 # (BASELINE.json input_hint hard requirement) — this is an Arrow-batched
 # pandas UDF; the per-value loop runs inside the worker over an Arrow batch.
-def lemmas_udf():
-    """Return a pandas UDF mapping a text column to ``array<string>`` lemmas.
-
-    Lazy so importing this module never requires an active SparkSession.
-    """
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("array<string>")
-    def _lemmas(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        # worker-persistent token→lemmas cache: Zipf-distributed corpora hit
-        # it for ~all occurrences, replacing regex+suffix work with one dict
-        # lookup. Pure function of the token, so caching preserves
-        # determinism; the Iterator form keeps the dict across batches
-        # (the per-worker-state pattern, SURVEY §2.6).
-        cache: dict[str, list[str]] = {}
-
-        def lem_text(text):
-            if not text:
-                return []
-            out: list[str] = []
-            for tok in tokenize(strip_html(text)):
-                r = cache.get(tok)
-                if r is None:
-                    r = lemmatize_token(tok)
-                    cache[tok] = r
-                out.extend(r)
-            return out
-
-        for s in batches:
-            yield s.map(lem_text)
-
-    return _lemmas
-
-
 def lemma_counts_udf():
     """Pandas UDF mapping a text column to ``map<string,int>`` lemma→tf.
 
@@ -241,6 +207,11 @@ def lemma_counts_udf():
 
     @F.pandas_udf("map<string,int>")
     def _counts(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        # worker-persistent token→lemmas cache: Zipf-distributed corpora hit
+        # it for ~all occurrences, replacing regex+suffix work with one dict
+        # lookup. Pure function of the token, so caching preserves
+        # determinism; the Iterator form keeps the dict across batches
+        # (the per-worker-state pattern, SURVEY §2.6).
         cache: dict[str, list[str]] = {}
 
         def count_text(text):

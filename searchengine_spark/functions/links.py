@@ -90,8 +90,6 @@ HREF_PATTERNS = [
     r"(?i)<a\s[^>]*href\s*=\s*'([^']*)'",
     r"""(?i)<a\s[^>]*href\s*=\s*([^\s>"'][^\s>]*)""",
 ]
-#: legacy single-pattern alias (double-quoted form) — prefer HREF_PATTERNS
-HREF_PATTERN = HREF_PATTERNS[0]
 
 
 def site_link_patterns(sub_domain: str = "") -> list[str]:

@@ -9,17 +9,13 @@ Tiebreak is deterministic here — (score DESC, doc_id ASC), where doc_id order
 == (conv_id, turn_idx) order — replacing the reference's unstable HashMap
 iteration order.
 
-Two interchangeable physical paths:
-
-- :func:`naive_search` — pure DataFrame ops over the *uncompressed* flat
-  postings (broadcast term filter → hash agg gate → sum(tf)/BM25 →
-  TakeOrderedAndProject). Kept as the always-on differential cross-check
-  (SURVEY §7.6) and as the plan Catalyst fully optimizes on its own.
-- :class:`BlockSearcher` — the target design: scan only the query terms'
-  compressed blocks (parquet min/max pruning on the term-sorted table),
-  one ``applyInPandas`` kernel per doc-range shard doing block-max WAND
-  (bm25) / early-exit intersection (reference), per-shard top-K heaps,
-  driver merge of ≤ shards×K rows (SURVEY §4.3.4).
+One physical path, :class:`BlockSearcher`: scan only the query terms'
+compressed blocks (parquet min/max pruning on the term-sorted table), one
+``groupBy("shard").applyInPandas`` job running the per-shard kernel —
+block-max WAND (bm25) / early-exit intersection (reference) with a per-shard
+top-K heap — then a driver merge of ≤ shards×K rows (SURVEY §4.3.4). The
+pandas oracle (``oracle/oracle.py``) and the DuckDB oracles in
+``__spark_entry__.py`` are its cross-checks.
 
 Rank determinism across float addition orders: both this module and the
 pandas oracle rank by ``round(score, SCORE_DECIMALS)`` (then doc order), so
@@ -29,12 +25,11 @@ order (SURVEY §7 float-equality risk).
 
 from __future__ import annotations
 
-import threading
 from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from searchengine_spark.config import BM25Params, EngineConfig
@@ -58,16 +53,14 @@ KERNEL_SCHEMA = "shard long, doc_id long, score double, cand long"
 
 #: per-searcher memo bound: a long-lived serving process under an
 #: adversarial query stream (millions of distinct cold terms) keeps the
-#: driver-side memos at O(cap), not O(distinct terms ever queried)
+#: driver-side term-stats memo at O(cap), not O(distinct terms ever queried)
 MEMO_CAP = 65_536
 
 
 class _LRUCache(OrderedDict):
     """Bounded dict memo: reads refresh recency, inserts past ``cap`` evict
-    the least-recently-used entries. Individual ops are GIL-atomic enough
-    for the async-warm thread that shares the mtf memo (same posture as the
-    plain dict it replaces — the lock guards the inflight set, not the
-    memo)."""
+    the least-recently-used entries (``update`` inherits the eviction: it
+    routes through ``__setitem__``)."""
 
     def __init__(self, cap: int = MEMO_CAP):
         super().__init__()
@@ -84,89 +77,9 @@ class _LRUCache(OrderedDict):
         while len(self) > self.cap:
             self.popitem(last=False)
 
-    def update(self, other):  # route bulk inserts through the eviction path
-        for k, v in other.items():
-            self[k] = v
-
 
 class EmptySearchQueryError(ValueError):
     """Analog of EmptySearchQueryException → 400 (SearchServiceImpl.java:42-45)."""
-
-
-# --------------------------------------------------------------------------
-# Naive DataFrame path (differential baseline; Catalyst-optimized end to end)
-# --------------------------------------------------------------------------
-def naive_search(
-    flat: DataFrame,
-    documents: DataFrame,
-    query: str,
-    site: str | None = None,
-    offset: int = 0,
-    limit: int = 20,
-    mode: str = "reference",
-    n_docs: int | None = None,
-    avgdl: float | None = None,
-    cfg: EngineConfig | None = None,
-) -> tuple[pd.DataFrame, int]:
-    """Pure-DataFrame search over flat postings (term, doc_id, site, doc_len,
-    tf). Returns (result page as pandas, total candidate count)."""
-    cfg = cfg or EngineConfig()
-    lemmas = query_lemmas(query)
-    if not lemmas:
-        raise EmptySearchQueryError(query)
-    terms = sorted(lemmas)
-    p = flat.filter(F.col("term").isin(terms))
-    if mode == "reference":
-        scoped = p.filter(F.col("site") == site) if site is not None else p
-        cand = (
-            scoped.groupBy("doc_id")
-            .agg(
-                F.count("*").alias("_nterms"),
-                F.sum(F.col("tf").cast("double")).alias("score"),
-            )
-            .filter(F.col("_nterms") == len(terms))
-            .drop("_nterms")
-        )
-        w = Window.partitionBy()
-        cand = cand.withColumn("relevance", F.col("score") / F.max("score").over(w))
-    elif mode == "bm25":
-        k1, b = cfg.bm25.k1, cfg.bm25.b
-        gstats = p.groupBy("term").agg(F.count("*").alias("df_g"))
-        scoped = p.filter(F.col("site") == site) if site is not None else p
-        scored = scoped.join(F.broadcast(gstats), "term").withColumn(
-            "part",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(n_docs)) - F.col("df_g") + F.lit(0.5))
-                / (F.col("df_g") + F.lit(0.5))
-            )
-            * F.col("tf")
-            * F.lit(k1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avgdl))
-            ),
-        )
-        cand = scored.groupBy("doc_id").agg(F.sum("part").alias("score"))
-        cand = cand.withColumn("relevance", F.col("score"))
-    else:
-        raise ValueError(mode)
-
-    count = cand.count()
-    page = (
-        cand.join(documents.select("doc_id", "conv_id", "turn_idx", "site"), "doc_id")
-        .orderBy(
-            F.round(F.col("score"), SCORE_DECIMALS).desc(),
-            F.col("conv_id"),
-            F.col("turn_idx"),
-        )
-        .limit(offset + limit)
-        .toPandas()
-        .iloc[offset : offset + limit]
-        .reset_index(drop=True)
-    )
-    return page[["doc_id", "conv_id", "turn_idx", "site", "score", "relevance"]], count
 
 
 # --------------------------------------------------------------------------
@@ -185,7 +98,7 @@ def _decode_block_rows(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     return np.concatenate(ids), np.concatenate(tfs)
 
 
-#: slack subtracted from a shared θ before it prunes: scores are ranked by
+#: slack subtracted from θ before it prunes: scores are ranked by
 #: round(score, 9), so a doc strictly below θ by > 1e-9 provably rounds
 #: below it (|round(x)−x| ≤ 0.5e-9 each side) and can never tie-win
 THETA_GUARD = 1e-9
@@ -201,7 +114,6 @@ def make_shard_kernel(
     avgdl: float,
     allowed_site_ids: list[int] | None,
     exact_count: bool = False,
-    theta_init: float = -np.inf,
 ):
     """Build the per-shard applyInPandas kernel.
 
@@ -211,13 +123,9 @@ def make_shard_kernel(
     on every emitted row; a count-only shard emits one doc_id=-1 sentinel
     row the driver drops after summing counts).
 
-    ``theta_init`` is a cross-shard score threshold (two-pass WAND): a
-    lower bound on the GLOBAL top-k'th score, measured on the densest shard
-    and broadcast into the rest. Docs provably below it are skipped without
-    scoring — the surviving ranking is still exact because only
-    can't-reach-top-k work is elided (same soundness argument as the
-    per-shard θ, applied from the first term instead of after k local
-    candidates accumulate).
+    Pruning is per shard: θ is the shard's own running k-th score, so a
+    doc is skipped only when it provably cannot reach this shard's top-k,
+    and hence not the global top-k either — the merged ranking is exact.
     """
 
     def topk_rows(
@@ -355,7 +263,7 @@ def make_shard_kernel(
             # One term ⇒ a doc's total score is exactly its contribution
             # here, so per-BLOCK upper bounds prune soundly: decode blocks
             # in descending block-UB order and stop as soon as the next
-            # block's UB falls below θ (local kth, seeded by theta_init).
+            # block's UB falls below θ (the local k-th score).
             # The exact candidate count is the metadata `count` sum — a doc
             # appears in exactly one block per (term, shard) — so a hot
             # term's count costs ZERO decodes (site-scoped exact counts
@@ -367,7 +275,7 @@ def make_shard_kernel(
             bmt = g["block_max_tf"].to_numpy(np.float64)
             bub = idf[t] * bmt * (k1 + 1.0) / (bmt + k1 * (1.0 - b))
             border = np.argsort(-bub, kind="stable")
-            theta = theta_init
+            theta = -np.inf
             ids_l: list[np.ndarray] = []
             sc_l: list[np.ndarray] = []
             # θ lives on a BOUNDED top-k score buffer, and blocks decode in
@@ -429,19 +337,11 @@ def make_shard_kernel(
         for i, t in enumerate(order):
             remaining_ub = sum(ubs[o] for o in order[i:])
             theta = (
-                max(
-                    theta_init,
-                    float(np.partition(acc.to_numpy(), len(acc) - k)[len(acc) - k]),
-                )
+                float(np.partition(acc.to_numpy(), len(acc) - k)[len(acc) - k])
                 if len(acc) >= k
-                else theta_init
+                else -np.inf
             )
-            # with a cross-shard theta_init, pruning is sound even before k
-            # local candidates exist (an unseen doc's partial is 0, so its
-            # total is ≤ remaining_ub)
-            prune = remaining_ub < theta - THETA_GUARD and (
-                len(acc) > 0 or theta_init > -np.inf
-            )
+            prune = len(acc) > 0 and remaining_ub < theta - THETA_GUARD
             if decoded is not None:
                 t_ids, t_tfs = decoded[t]
                 if prune:
@@ -494,55 +394,37 @@ class BlockSearcher:
         blocks: DataFrame,
         documents: DataFrame,
         terms: DataFrame,
+        *,
+        n_docs: int,
+        avgdl: float,
+        site_ranges: dict[str, tuple[int, int]],
+        site_ids: dict[str, int],
+        shard_size: int,
+        term_buckets: int,
         cfg: EngineConfig | None = None,
         transcripts: DataFrame | None = None,
-        shard_size: int | None = None,
-        site_ids: dict[str, int] | None = None,
-        term_buckets: int | None = None,
-        n_docs: int | None = None,
-        avgdl: float | None = None,
-        site_ranges: dict[str, tuple[int, int]] | None = None,
     ):
         self.blocks = blocks
         self.documents = documents
         self.terms = terms
         self.cfg = cfg or EngineConfig()
         self.transcripts = transcripts
-        # bucket count of the term-partitioned tables (index_meta): lets the
-        # term-stats lookup prune to the query terms' partitions
-        self.term_buckets = term_buckets if "bucket" in terms.columns else None
-        # corpus stats + per-site ranges come from index_meta / the sites
-        # table when built through the engine (searcher init then runs ZERO
-        # corpus-sized jobs); the aggregation fallback serves ad-hoc
-        # construction in tests
-        if n_docs is not None and avgdl is not None:
-            self.n_docs, self.avgdl = int(n_docs), float(avgdl)
-        else:
-            row = documents.agg(
-                F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
-            ).collect()[0]
-            self.n_docs, self.avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
+        # corpus stats are index_meta's maintained counters, so searcher
+        # init runs ZERO corpus-sized jobs
+        self.n_docs, self.avgdl = int(n_docs), float(avgdl)
         # per-site doc-id [min, max] — a sound SUPERSET bound for shard-scan
         # pruning even after incremental appends (exact filtering is the
         # kernel's SITE_TERM job, not this)
-        if site_ranges is not None:
-            self.site_ranges = dict(site_ranges)
-        else:
-            self.site_ranges = {
-                r["site"]: (int(r["lo"]), int(r["hi"]))
-                for r in documents.groupBy("site")
-                .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-                .collect()
-            }
-        # stable mapping from the build-time `sites` table when provided
-        # (incrementally-added sites append ids; sorted-derive is only the
-        # fallback for ad-hoc construction in tests)
-        self.site_ids = site_ids or {
-            s: i for i, s in enumerate(sorted(self.site_ranges))
-        }
-        # the build-time shard geometry (index_meta) must win over one
-        # re-derived from n_docs — doc-range shards are physical layout
-        self.shard_size = shard_size or self.cfg.shard_size(self.n_docs)
+        self.site_ranges = dict(site_ranges)
+        # stable mapping from the build-time `sites` table (incrementally
+        # added sites append ids)
+        self.site_ids = site_ids
+        # the build-time shard geometry (index_meta) — doc-range shards are
+        # physical layout, never re-derived from n_docs
+        self.shard_size = int(shard_size)
+        # bucket count of the term-partitioned tables (index_meta): lets the
+        # term-stats lookup prune to the query terms' partitions
+        self.term_buckets = int(term_buckets)
         # driver-side memo of term stats: (term) → list of per-site rows.
         # Each query only ever touches its own lemmas, so this stays tiny
         # even with a 10^8-term vocabulary; it removes one terms-table scan
@@ -551,13 +433,6 @@ class BlockSearcher:
         # adversarial stream of distinct cold terms can't grow a serving
         # process without bound.
         self._term_stats_cache: dict[str, list] = _LRUCache()
-        # per-term {shard: max block_max_tf} memo for two-pass WAND: sized
-        # O(shards) per distinct query term, shared across queries (the
-        # hot-term case the threshold sharing targets). Warmed ASYNC on
-        # first sight of a term (see _shard_ubs_if_cached). Same LRU bound.
-        self._shard_mtf_cache: dict[str, dict[int, float]] = _LRUCache()
-        self._mtf_lock = threading.Lock()
-        self._mtf_inflight: set[str] = set()
 
     # -- query planning (driver side, analog of SearchServiceImpl.java:48-105)
     def _plan(self, query: str, site: str | None, mode: str):
@@ -567,17 +442,13 @@ class BlockSearcher:
         tl = sorted(lemmas)
         missing = [t for t in tl if t not in self._term_stats_cache]
         if missing:
-            scan = self.terms
-            if self.term_buckets:
-                # partition pruning: a term lives in exactly one bucket dir
-                from searchengine_spark.operators.postings import term_bucket_py
+            # partition pruning: a term lives in exactly one bucket dir
+            from searchengine_spark.operators.postings import term_bucket_py
 
-                bks = sorted(
-                    {term_bucket_py(t, self.term_buckets) for t in missing}
-                )
-                scan = scan.filter(F.col("bucket").isin(bks))
+            bks = sorted({term_bucket_py(t, self.term_buckets) for t in missing})
             fetched = (
-                scan.filter(F.col("term").isin(missing))
+                self.terms.filter(F.col("bucket").isin(bks))
+                .filter(F.col("term").isin(missing))
                 .select("term", "site", "df")
                 .collect()
             )
@@ -616,155 +487,6 @@ class BlockSearcher:
         scan_ranges = sorted(self.site_ranges[s] for s in gated)
         return tl, idf, gated, allowed_site_ids, scan_ranges
 
-    def _fetch_mtf(self, terms: list[str]) -> None:
-        """One metadata job: max block_max_tf per (term, shard) for
-        ``terms``, into the memo. Whole-term dicts are assigned atomically
-        (GIL), so a concurrent reader sees a term fully or not at all."""
-        fetched = (
-            self.blocks.filter(F.col("term").isin(terms))
-            .groupBy("term", "shard")
-            .agg(F.max("block_max_tf").alias("mtf"))
-            .collect()
-        )
-        built: dict[str, dict[int, float]] = {t: {} for t in terms}
-        for r in fetched:
-            built[r["term"]][int(r["shard"])] = float(r["mtf"])
-        self._shard_mtf_cache.update(built)
-
-    def _warm_mtf_async(self, terms: list[str]) -> None:
-        def run() -> None:
-            try:
-                self._fetch_mtf(terms)
-            except Exception:
-                pass  # next cold query retries; serving never depends on it
-            finally:
-                with self._mtf_lock:
-                    self._mtf_inflight.difference_update(terms)
-
-        threading.Thread(target=run, name="wand-ub-warm", daemon=True).start()
-
-    def _shard_ubs_if_cached(
-        self,
-        tl: list[str],
-        idf: dict[str, float],
-        shard_bounds: tuple[int, int] | None,
-    ) -> dict[int, float] | None:
-        """Cache-only UB lookup with ASYNC warming. A cold term set must
-        not serialize the block-metadata round-trip into its own critical
-        path (measured 0.5-1.4 s per query on a 3.9M-turn index — more
-        than two-pass ever saves): on a miss the fetch is submitted on a
-        background thread, THIS query runs one-pass, and the repeat/hot
-        queries two-pass targets find the memo warm. Returns None while
-        cold. ``_shard_ubs`` stays the synchronous variant (tests /
-        explicit warm-up)."""
-        missing = [t for t in tl if t not in self._shard_mtf_cache]
-        if not missing:
-            return self._shard_ubs(tl, idf, shard_bounds)
-        with self._mtf_lock:
-            to_fetch = [t for t in missing if t not in self._mtf_inflight]
-            self._mtf_inflight.update(to_fetch)
-        if to_fetch:
-            self._warm_mtf_async(to_fetch)
-        return None
-
-    def _two_pass_possible(self) -> bool:
-        """Driver-only pre-gate: if the WHOLE index has fewer shards than
-        the engagement floor, two-pass can never pay here — skip even the
-        async warm (no thread, no metadata job, ever)."""
-        cfg = self.cfg
-        n_shards = max(hi for _, hi in self.site_ranges.values()) // self.shard_size + 1 if self.site_ranges else 0
-        par = max(1, self.blocks.sparkSession.sparkContext.defaultParallelism)
-        return n_shards >= max(
-            cfg.wand_min_shards, int(np.ceil(cfg.wand_shards_per_core * par))
-        )
-
-    def _shard_ubs(
-        self,
-        tl: list[str],
-        idf: dict[str, float],
-        shard_bounds: tuple[int, int] | None,
-    ) -> dict[int, float]:
-        """{shard: Σ per-term upper bound} from block metadata only (max
-        block_max_tf per (term, shard) — small columns, term-pruned scan,
-        no posting decode). Memoized per term, so repeated/hot queries pay
-        zero metadata jobs. The UB uses the same dl→0 bound as the kernel's
-        term_ub, with the CURRENT idf — sound across incremental updates."""
-        missing = [t for t in tl if t not in self._shard_mtf_cache]
-        if missing:
-            self._fetch_mtf(missing)
-        k1, b = self.cfg.bm25.k1, self.cfg.bm25.b
-        ubs: dict[int, float] = {}
-        for t in tl:
-            w = idf.get(t)
-            if not w:
-                continue
-            for s, mtf in self._shard_mtf_cache[t].items():
-                if shard_bounds is not None and not (
-                    shard_bounds[0] <= s <= shard_bounds[1]
-                ):
-                    continue
-                ubs[s] = ubs.get(s, 0.0) + w * mtf * (k1 + 1.0) / (
-                    mtf + k1 * (1.0 - b)
-                )
-        return ubs
-
-    def _two_pass_pays(self, shard_ub: dict[int, float]) -> bool:
-        """Driver-side engagement heuristic for two-pass WAND (metadata
-        only, zero jobs). Pass 1 serializes one shard ahead of the rest, so
-        it must buy back ≥ one task-wave of skipped shards: require both
-        enough shards per parallel slot AND visible UB skew (a shard is
-        skippable only when its UB falls below θ, and θ sits well under the
-        max shard UB — near-uniform UBs can never prune). Measured r4: on a
-        uniform fixture (16 shards, 4 cores, zero-skew UBs) unconditional
-        two-pass cost +35% hot-term latency; see config.wand_* docs."""
-        cfg = self.cfg
-        n = len(shard_ub)
-        par = max(1, self.blocks.sparkSession.sparkContext.defaultParallelism)
-        min_shards = max(
-            cfg.wand_min_shards, int(np.ceil(cfg.wand_shards_per_core * par))
-        )
-        if n < min_shards:
-            return False
-        ub_max = max(shard_ub.values())
-        prunable = sum(
-            1 for u in shard_ub.values() if u < cfg.wand_skew_gate * ub_max
-        )
-        return prunable >= np.ceil(cfg.wand_skew_min_frac * n)
-
-    def _search_two_pass(
-        self, blocks: DataFrame, shard_ub: dict[int, float], mk_kernel, k: int,
-        exact_count: bool,
-    ) -> pd.DataFrame:
-        """Two-pass cross-shard WAND: run the highest-UB shard first, take
-        its k-th score as a global-θ lower bound, then (a) skip whole shards
-        whose UB can't reach θ (when no exact count is owed — their docs
-        provably miss the top-k) and (b) seed the remaining kernels with θ
-        so they prune from the first term instead of warming a local θ."""
-        seed = max(shard_ub, key=lambda s: (shard_ub[s], -s))
-        rows1 = (
-            blocks.filter(F.col("shard") == seed)
-            .groupBy("shard")
-            .applyInPandas(mk_kernel(), KERNEL_SCHEMA)
-            .toPandas()
-        )
-        real = rows1[rows1["doc_id"] >= 0]
-        theta = -np.inf
-        if len(real) >= k:
-            sc = real["score"].to_numpy(np.float64)
-            theta = float(np.partition(sc, len(sc) - k)[len(sc) - k]) - THETA_GUARD
-        others = [s for s in shard_ub if s != seed]
-        if not exact_count and theta > -np.inf:
-            others = [s for s in others if shard_ub[s] >= theta]
-        if not others:
-            return rows1
-        rows2 = (
-            blocks.filter(F.col("shard").isin(others))
-            .groupBy("shard")
-            .applyInPandas(mk_kernel(theta), KERNEL_SCHEMA)
-            .toPandas()
-        )
-        return pd.concat([rows1, rows2], ignore_index=True)
-
     def search(
         self,
         query: str,
@@ -800,33 +522,15 @@ class BlockSearcher:
         if allowed_site_ids is not None:
             scan_terms.append(SITE_TERM)
         blocks = self.blocks.filter(F.col("term").isin(scan_terms))
-        shard_bounds = None
         if len(gated) < len(self.site_ranges):
             lo = min(r[0] for r in scan_ranges) // self.shard_size
             hi = max(r[1] for r in scan_ranges) // self.shard_size
-            shard_bounds = (lo, hi)
             blocks = blocks.filter(F.col("shard").between(lo, hi))
-
-        def mk_kernel(theta_init: float = -np.inf):
-            return make_shard_kernel(
-                tl, mode, k, idf, cfg.bm25.k1, cfg.bm25.b, self.avgdl,
-                allowed_site_ids, exact_count=exact_count,
-                theta_init=theta_init,
-            )
-
-        shard_ub = None
-        if mode == "bm25" and cfg.wand_two_pass and self._two_pass_possible():
-            shard_ub = self._shard_ubs_if_cached(tl, idf, shard_bounds)
-        if shard_ub and self._two_pass_pays(shard_ub):
-            rows = self._search_two_pass(
-                blocks, shard_ub, mk_kernel, k, exact_count
-            )
-        else:
-            rows = (
-                blocks.groupBy("shard")
-                .applyInPandas(mk_kernel(), KERNEL_SCHEMA)
-                .toPandas()
-            )
+        kernel = make_shard_kernel(
+            tl, mode, k, idf, cfg.bm25.k1, cfg.bm25.b, self.avgdl,
+            allowed_site_ids, exact_count=exact_count,
+        )
+        rows = blocks.groupBy("shard").applyInPandas(kernel, KERNEL_SCHEMA).toPandas()
         count = (
             int(rows.drop_duplicates("shard")["cand"].sum()) if len(rows) else 0
         )

@@ -99,7 +99,7 @@ def build_index(
     Stages (each checkpointed as a table):
       1. ``documents`` — eligibility filter + lemmatize + dense doc-ids;
          also writes ``postings_flat`` (the uncompressed posting rows, the
-         direct ``search_index`` analog and the naive query path's input).
+         direct ``search_index`` analog and the block encoder's input).
       2. ``terms`` (per-site df/cf/idf) + ``terms_global``.
       3. ``postings`` — delta+varint blocks incl. co-sharded doc_len blocks.
     """

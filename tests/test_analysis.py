@@ -94,8 +94,6 @@ def test_multimodal_plumbing(docs):
     assert feats.loc[0, "n_bytes"] == len("alpha beta gamma delta epsilon zeta")
     assert feats.loc[0, "first_byte"] == ord("a")
     assert feats.loc[0, "head_sum"] == sum(b"alpha be")
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image_stub(b"\x89PNG")
 
 
 def test_multimodal_real_binary(docs):

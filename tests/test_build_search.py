@@ -12,7 +12,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from searchengine_spark.operators.search import EmptySearchQueryError, naive_search
+from searchengine_spark.operators.search import EmptySearchQueryError
 from searchengine_spark.sources.transcripts import transcripts_spark_df
 from tests.conftest import REFERENCE_QUERIES
 
@@ -97,22 +97,6 @@ def test_query_order_and_duplicates_invariant(engine):
     assert list(a["doc_id"]) == list(b["doc_id"])
 
 
-def test_naive_path_differential(engine, oracle):
-    """The pure-DataFrame path (Catalyst end-to-end) must agree with both the
-    block path and the oracle (SURVEY §7: naive path as always-on check)."""
-    cat = engine.catalog
-    flat = cat.read("postings_flat")
-    docs = cat.read("documents")
-    s = engine.searcher
-    for q in ["hotalpha", "data the", "поиск"]:
-        for mode in ["reference", "bm25"]:
-            page, count = naive_search(
-                flat, docs, q, mode=mode, n_docs=s.n_docs, avgdl=s.avgdl
-            )
-            opage, ocount = oracle.search(q, mode=mode)
-            assert_page_matches(page, opage, count, ocount, q, f"naive/{mode}")
-
-
 def test_per_turn_text_equality(spark, tiny_pdf):
     """input_hint invariant: per-turn text equality under stable
     (conv_id, turn_idx) ordering after ingest."""
@@ -189,77 +173,3 @@ def test_search_response_shape(engine):
     assert "<b>" in item["snippet"]  # highlight present (P2)
     resp2 = engine.search_response("the of")
     assert resp2["result"] is False
-
-
-def test_two_pass_wand_on_off_equivalence(engine):
-    """Cross-shard θ sharing must be invisible in results: identical page
-    (docs AND scores) with the optimization on vs off, identical exact
-    counts; the non-exact count stays a valid lower bound. The engine
-    fixture's docs_per_shard=256 spans ≥4 shards, so the path engages."""
-    import pandas as pd
-
-    import dataclasses
-
-    sr = engine.searcher
-    tl, idf, *_ = sr._plan("hotalpha hotbeta", None, "bm25")
-    ubs = sr._shard_ubs(tl, idf, None)
-    assert len(ubs) >= sr.cfg.wand_min_shards
-    # force past the engagement heuristics (shards-per-core + UB skew): the
-    # tiny uniform fixture would otherwise — correctly — pick one-pass
-    cfg_base = sr.cfg
-    cfg_on = dataclasses.replace(
-        sr.cfg, wand_shards_per_core=0.0, wand_skew_min_frac=0.0
-    )
-    cfg_off = dataclasses.replace(cfg_on, wand_two_pass=False)
-    sr.cfg = cfg_on
-    assert sr._two_pass_pays(ubs)
-    try:
-        for q in ["hotalpha", "hotbeta hotgamma", "hotdelta поиск",
-                  "walking walked walks"]:
-            for exact in (True, False):
-                sr.cfg = cfg_on
-                p_on, c_on = engine.search(q, mode="bm25", exact_count=exact)
-                sr.cfg = cfg_off
-                p_off, c_off = engine.search(q, mode="bm25", exact_count=exact)
-                pd.testing.assert_frame_equal(p_on, p_off)
-                if exact:
-                    assert c_on == c_off
-                else:
-                    # two-pass may skip provably-irrelevant shards, so its
-                    # lower-bound count can only shrink — never exceed
-                    assert len(p_on) <= c_on <= c_off
-    finally:
-        sr.cfg = cfg_base
-
-
-def test_two_pass_cold_async_warm_then_engage(engine):
-    """A cold term set must not pay the UB metadata job in its own critical
-    path: the first bm25 query runs one-pass while a background thread warms
-    the memo; once warm, the same query engages two-pass with identical
-    results (and the inflight set drains)."""
-    import dataclasses
-    import time as _t
-
-    import pandas as pd
-
-    sr = engine.searcher
-    cfg_base = sr.cfg
-    sr._shard_mtf_cache.clear()
-    sr.cfg = dataclasses.replace(
-        sr.cfg, wand_shards_per_core=0.0, wand_skew_min_frac=0.0
-    )
-    try:
-        assert sr._two_pass_possible()
-        p1, c1 = engine.search("hotalpha hotbeta", mode="bm25", exact_count=True)
-        deadline = _t.time() + 120
-        while _t.time() < deadline and (sr._mtf_inflight or not sr._shard_mtf_cache):
-            _t.sleep(0.05)
-        assert not sr._mtf_inflight
-        assert sr._shard_mtf_cache  # warm: the async fetch landed
-        tl, idf, *_ = sr._plan("hotalpha hotbeta", None, "bm25")
-        assert sr._shard_ubs_if_cached(tl, idf, None)  # engages now
-        p2, c2 = engine.search("hotalpha hotbeta", mode="bm25", exact_count=True)
-        pd.testing.assert_frame_equal(p1, p2)
-        assert c1 == c2
-    finally:
-        sr.cfg = cfg_base

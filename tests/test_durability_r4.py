@@ -11,9 +11,7 @@
   committed state — the previously-unrecoverable empty-bucket window;
 - a crashed upsert interleaved with a subsequent APPEND is completed first
   (otherwise the append would claim the same mut_seq and its term
-  increments would be swallowed by the upsert's bucket stamps);
-- searcher init over a pre-counter-format warehouse falls back to the
-  documents-scan derivation instead of KeyError.
+  increments would be swallowed by the upsert's bucket stamps).
 """
 
 from __future__ import annotations
@@ -29,7 +27,7 @@ from pyspark.sql import functions as F
 import searchengine_spark.plans.incremental as inc_mod
 from searchengine_spark.config import EngineConfig
 from searchengine_spark.engine import SearchEngine
-from searchengine_spark.sources.catalog import TableCatalog, tiny_df
+from searchengine_spark.sources.catalog import TableCatalog
 from searchengine_spark.sources.transcripts import (
     generate_transcripts,
     transcripts_spark_df,
@@ -240,32 +238,4 @@ def test_append_completes_crashed_upsert_first(spark, corpus, monkeypatch):
         .collect()
     }
     assert tg == {"pendingword": 1, "afterword": 1}
-    shutil.rmtree(wh, ignore_errors=True)
-
-
-def test_searcher_compat_without_maintained_counters(spark, corpus):
-    """ADVICE low (engine.py:64): a warehouse from before the maintained
-    counters / sites lo-hi format must still serve queries (documents-scan
-    fallback), not KeyError."""
-    eng, wh = _build(spark, corpus)
-    ref_page, ref_count = eng.search("hotalpha", mode="bm25", exact_count=True)
-
-    cat = eng.catalog
-    meta = {
-        k: v
-        for k, v in cat.read_meta().items()
-        if k not in ("n_docs", "sum_doc_len")
-    }
-    cat.write_meta(meta)
-    sites = cat.read("sites").select("site", "sid").collect()
-    cat.replace(
-        tiny_df(spark, [(r["site"], int(r["sid"])) for r in sites],
-                "site string, sid long"),
-        "sites",
-    )
-
-    eng2 = SearchEngine(spark, wh)  # fresh facade: re-inits the searcher
-    page, count = eng2.search("hotalpha", mode="bm25", exact_count=True)
-    assert count == ref_count
-    assert list(page["conv_id"]) == list(ref_page["conv_id"])
     shutil.rmtree(wh, ignore_errors=True)

@@ -134,6 +134,6 @@ def test_memo_lru_cap_bounds_adversarial_term_stream():
         assert len(cache) <= S.MEMO_CAP
     assert hot in cache
     assert len(cache) == S.MEMO_CAP
-    # bulk update routes through eviction too (the async mtf warm path)
+    # bulk update routes through eviction too
     cache.update({f"bulk{i}": {0: 1.0} for i in range(S.MEMO_CAP + 10)})
     assert len(cache) == S.MEMO_CAP
