@@ -416,28 +416,6 @@ def ivf_centroids(
     )
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iters: int = IVF_ITERS,
-) -> DataFrame:
-    """(vec_id, cid): each vector's inverted-list assignment — nearest
-    k-means centroid by cosine (see :func:`ivf_centroids`)."""
-    spark = embeddings.sparkSession
-    vecs = _ivf_vecs(embeddings, id_col, vec_col)
-    rows = _lloyd_rounds(
-        vecs, _seed_rows(embeddings, n_centroids, id_col, vec_col), iters
-    )
-    # lazy consumer reads the persisted projection; ContextCleaner reclaims
-    # the blocks once the returned plan is unreferenced
-    dim = len(rows[0][1]) if rows else None
-    return _nearest_cid(vecs, _cents_literal(spark, rows), dim).select(
-        "vec_id", "cid"
-    )
-
-
 def ivf_topk(
     embeddings: DataFrame,
     probe_ids: list[int],

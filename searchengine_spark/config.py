@@ -134,7 +134,7 @@ class EngineConfig:
         width = max(1, math.ceil(n_shards / self.max_flat_groups))
         return shard_size * width
 
-    def n_term_buckets(self, n_docs: int | None = None) -> int:
+    def n_term_buckets(self, n_docs: int) -> int:
         """Resolve term_buckets (physical partition count of term-keyed
         tables). Scales DOWN with tiny corpora (≈1 bucket per 256 docs,
         floor 8) so toy builds don't pay 64 directory commits per table;
@@ -144,6 +144,4 @@ class EngineConfig:
         if self.term_buckets is not None:
             return self.term_buckets
         full = max(64, 2 * self.parallelism)
-        if n_docs is None:
-            return full
         return max(8, min(full, n_docs // 256))

@@ -26,7 +26,7 @@ from searchengine_spark.operators.search import BlockSearcher, EmptySearchQueryE
 from searchengine_spark.plans.build_index import BuildResult, build_index
 from searchengine_spark.plans.incremental import reindex_turn as _reindex
 from searchengine_spark.plans.stats import statistics as _statistics
-from searchengine_spark.sources.catalog import TableCatalog
+from searchengine_spark.sources.catalog import TableCatalog, check_index_format
 
 __all__ = ["SearchEngine", "EmptySearchQueryError"]
 
@@ -65,15 +65,7 @@ class SearchEngine:
             # NO corpus-sized job runs before the first query
             meta = cat.read_meta()
             sites_df = cat.read("sites")
-            missing = [
-                k for k in ("shard_size", "n_docs", "sum_doc_len", "term_buckets")
-                if k not in meta
-            ] + [f"sites.{c}" for c in ("lo", "hi") if c not in sites_df.columns]
-            if missing:
-                raise RuntimeError(
-                    f"index format too old: index lacks {', '.join(missing)} — "
-                    "rebuild the index with SearchEngine.build()"
-                )
+            check_index_format(meta, sites_df)
             site_rows = sites_df.collect()
             n_docs = int(meta["n_docs"])
             self._searcher = BlockSearcher(

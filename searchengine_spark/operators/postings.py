@@ -11,8 +11,9 @@ delta+varint block columns built inside a streaming ``mapInArrow`` kernel
 Scale notes (10^12 turns):
 - tf is counted INSIDE the lemmatizer UDF (per-doc ``map<term,tf>``), so no
   per-occurrence row ever crosses a shuffle — the tf agg stage is gone;
-  ``site``/``doc_len`` ride along as functionally-dependent columns.
-- the block-encode shuffle carries (term_id, doc_id, tf, score) — terms are
+  ``site`` rides along as a functionally-dependent column; a doc's length
+  is its ``#doc_len`` marker row's tf.
+- the block-encode shuffle carries (term_id, doc_id, tf) — terms are
   dictionary-encoded to dense ints BEFORE the shuffle (the string column
   was ~40% of the bytes moved) — grouped as ONE ``list<struct>`` row per
   (shard, term) via ``sort_array(collect_list(...))``: Spark's per-top-
@@ -40,16 +41,14 @@ from searchengine_spark.operators.doc_ids import assign_doc_ids
 
 BLOCKS_SCHEMA = (
     "term string, shard long, block_id int, min_doc long, max_doc long, "
-    "count int, block_max_tf int, block_max_score double, "
-    "doc_gaps binary, tfs binary"
+    "count int, block_max_tf int, doc_gaps binary, tfs binary"
 )
 
 #: mapInArrow output before the term_id → term string join (1/block_size the
 #: row count of the postings themselves, so the join input is small)
 _ENC_SCHEMA = (
     "term_id long, shard long, block_id int, min_doc long, max_doc long, "
-    "count int, block_max_tf int, block_max_score double, "
-    "doc_gaps binary, tfs binary"
+    "count int, block_max_tf int, doc_gaps binary, tfs binary"
 )
 
 #: reserved negative ids for the forward-structure pseudo-terms (real term
@@ -108,13 +107,6 @@ def term_bucket_py(term: str, n_buckets: int) -> int:
     return zlib.crc32(term.encode("utf-8")) % n_buckets
 
 
-def site_id_map(documents: DataFrame) -> dict[str, int]:
-    """Dense site → id mapping: sorted site names. Deterministic, shared by
-    the build (SITE_TERM encoding) and the searcher (site filter planning)."""
-    sites = sorted(r["site"] for r in documents.select("site").distinct().collect())
-    return {s: i for i, s in enumerate(sites)}
-
-
 def lemmatize_transcripts(transcripts: DataFrame) -> DataFrame:
     """Eligibility filter (T7, ``PageIndexer.java:65-67``) + site derivation
     (SURVEY §1.4) + vectorized lemmatization with in-UDF tf counting (T1–T6)
@@ -137,7 +129,7 @@ def lemmatize_transcripts(transcripts: DataFrame) -> DataFrame:
 
 
 def flat_postings(rows_with_ids: DataFrame) -> DataFrame:
-    """Uncompressed postings ``(term, doc_id, site, doc_len, tf)`` — the
+    """Uncompressed postings ``(term, doc_id, site, tf)`` — the
     direct analog of one ``search_index`` row (``model/Index.java:14-40``).
     T6 tf counting (``LemmaSearcherImpl.java:25,73-74``) already happened
     inside the lemmatizer UDF and the maps were exploded pre-shuffle, so
@@ -146,7 +138,7 @@ def flat_postings(rows_with_ids: DataFrame) -> DataFrame:
     eligible docs with zero lemmas (they live in `documents` only)."""
     return (
         rows_with_ids.filter(F.col("term").isNotNull())
-        .select("doc_id", "site", "doc_len", "term", F.col("tf").cast("long"))
+        .select("doc_id", "site", "term", F.col("tf").cast("long"))
     )
 
 
@@ -218,7 +210,7 @@ def _binary_array(data: np.ndarray, value_offsets: np.ndarray):
 
 def make_group_encoder(block_size: int):
     """Build the mapInArrow kernel: record batches of
-    ``(shard, term_id, ps: list<struct<doc_id,tf,score>>)`` — one row per
+    ``(shard, term_id, ps: list<struct<doc_id,tf>>)`` — one row per
     (shard, term) group, postings pre-sorted by doc_id JVM-side
     (``sort_array``) — → posting-block rows (_ENC_SCHEMA).
 
@@ -251,16 +243,15 @@ def make_group_encoder(block_size: int):
             ("max_doc", pa.int64()),
             ("count", pa.int32()),
             ("block_max_tf", pa.int32()),
-            ("block_max_score", pa.float64()),
             ("doc_gaps", pa.binary()),
             ("tfs", pa.binary()),
         ]
     )
 
-    def encode_batch(shard_rows, tid_rows, off, doc, tf, score):
+    def encode_batch(shard_rows, tid_rows, off, doc, tf):
         """One batch of complete (shard, term) groups → one RecordBatch.
         ``off`` (len n_groups+1, zero-based) are the run boundaries into the
-        flat ``doc``/``tf``/``score`` arrays — straight from the Arrow list
+        flat ``doc``/``tf`` arrays — straight from the Arrow list
         offsets, so runs tile [0, len) contiguously."""
         run_starts, run_ends = off[:-1], off[1:]
         run_lens = run_ends - run_starts
@@ -291,7 +282,6 @@ def make_group_encoder(block_size: int):
                 pa.array(
                     np.maximum.reduceat(tf, bstart).astype(np.int32), pa.int32()
                 ),
-                pa.array(np.maximum.reduceat(score, bstart), pa.float64()),
                 _binary_array(gap_bytes, gap_off[cut]),
                 _binary_array(tf_bytes, tf_off[cut]),
             ],
@@ -309,7 +299,6 @@ def make_group_encoder(block_size: int):
             vals = ps.values
             doc = vals.field("doc_id").to_numpy(zero_copy_only=False)
             tf = vals.field("tf").to_numpy(zero_copy_only=False)
-            score = vals.field("score").to_numpy(zero_copy_only=False)
             # a sliced ListArray's offsets index into the un-sliced child:
             # normalize to zero-based and trim the child arrays
             base, end = int(raw_off[0]), int(raw_off[-1])
@@ -319,7 +308,6 @@ def make_group_encoder(block_size: int):
                 raw_off - base,
                 doc[base:end],
                 tf[base:end],
-                score[base:end],
             )
 
     return encode_groups
@@ -328,26 +316,28 @@ def make_group_encoder(block_size: int):
 def encode_posting_blocks(
     flat: DataFrame,
     n_docs: int,
-    avgdl: float,
+    avgdl: float | None,
     global_stats: DataFrame,
     cfg: EngineConfig,
-    documents: DataFrame | None = None,
-    site_ids: dict[str, int] | None = None,
+    *,
+    documents: DataFrame,
+    site_ids: dict[str, int],
 ) -> DataFrame:
     """flat postings → compressed block table (BLOCKS_SCHEMA).
 
     Each output row is one block of ≤``cfg.block_size`` postings of one
     ``(term, shard)``: doc-id gaps delta+varint encoded, tfs varint encoded,
-    with (min_doc, max_doc, block_max_tf, block_max_score) metadata for
-    block-max WAND pruning (SURVEY §4.3.2/§4.3.4). block_max_score is the
-    BM25 upper bound of any posting in the block (uses true per-doc lengths).
+    with (min_doc, max_doc, block_max_tf) metadata for block-max WAND
+    pruning (SURVEY §4.3.2/§4.3.4). The query kernel bounds a block by
+    block_max_tf and the query-time idf, so no score is stored. ``n_docs``
+    fixes the shard size; ``avgdl`` is unused and stays in the signature
+    only for ``perfbench/layers.py``'s positional call.
 
     Physical plan (the stage the 2-vs-8-core efficiency hinges on):
     1. dense int ``term_id`` per term (two-pass range assign over the
        vocabulary-sized terms table — NOT the postings);
-    2. join ids+idf onto flat postings, compute the BM25 score — the
-       shuffle then carries (term_id, doc_id, tf, score), ~28 B/row vs ~44
-       with the term string;
+    2. join ids onto flat postings — the shuffle then carries
+       (term_id, doc_id, tf) instead of the term string;
     3. ``groupBy(shard, term_id).agg(sort_array(collect_list(struct(...))))``
        — groups are sorted by doc_id JVM-side and cross the Python boundary
        as ~1/avg-run-length as many top-level rows (list<struct> layout);
@@ -358,83 +348,56 @@ def encode_posting_blocks(
     5. join the block rows (1/block_size the posting count) back to term
        strings — AQE broadcasts the dictionary at small vocab, SMJ at 10^9.
 
-    When ``documents`` is given, two forward structures are encoded into the
-    same table under reserved pseudo-terms, co-sharded with real postings so
-    the query kernel never joins the 10^12-row documents table:
+    Two forward structures from ``documents`` are encoded into the same
+    table under reserved pseudo-terms, co-sharded with real postings so the
+    query kernel never joins the 10^12-row documents table:
     - ``DOCLEN_TERM``: (doc_id → doc_len) for BM25 length normalization;
-    - ``SITE_TERM``: (doc_id → dense site id) for exact site-scoped search
-      (``SearchServiceImpl.java:51-54``) under any doc-id layout, including
-      after incremental appends (no contiguity assumption).
+    - ``SITE_TERM``: (doc_id → dense site id from ``site_ids``) for exact
+      site-scoped search (``SearchServiceImpl.java:51-54``) under any doc-id
+      layout, including after incremental appends (no contiguity
+      assumption). ``site_ids`` must be the CORPUS-WIDE mapping, also when
+      re-encoding a shard subset (plans/incremental.py).
     """
     from searchengine_spark.operators.search import DOCLEN_TERM, SITE_TERM
+    from searchengine_spark.sources.catalog import tiny_df
 
     spark = flat.sparkSession
     shard_size = cfg.shard_size(n_docs)
-    k1, b = cfg.bm25.k1, cfg.bm25.b
 
     # term_id comes FROM the terms_global table (persistent dictionary —
     # assigned once at build by global_term_stats, appended-to by
     # incremental updates); deriving ids here would silently disagree with
     # a cached/stale plan across incremental runs.
-    stats = global_stats.select("term", "idf", "term_id")
-
-    scored = (
-        flat.join(stats, "term")
-        .select(
-            F.col("term_id"),
-            "doc_id",
-            F.col("tf").cast("int").alias("tf"),
-            (
-                F.col("idf")
-                * F.col("tf")
-                * F.lit(k1 + 1.0)
-                / (
-                    F.col("tf")
-                    + F.lit(k1)
-                    * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avgdl))
-                )
-            ).alias("score"),
-        )
+    postings = flat.join(global_stats.select("term", "term_id"), "term").select(
+        "term_id", "doc_id", F.col("tf").cast("int").alias("tf")
     )
-    if documents is not None:
-        doclen_rows = documents.select(
-            F.lit(_TERM_ID_DOCLEN).cast("long").alias("term_id"),
-            "doc_id",
-            F.col("doc_len").cast("int").alias("tf"),
-            F.lit(0.0).alias("score"),
-        )
-        # site_ids must be the CORPUS-WIDE mapping — when re-encoding a shard
-        # subset (plans/incremental.py) the caller passes the global one
-        sids = site_ids if site_ids is not None else site_id_map(documents)
-        from searchengine_spark.sources.catalog import tiny_df
-
-        sid_df = F.broadcast(
-            tiny_df(spark, sorted(sids.items()), "site string, _sid int")
-        )
-        site_rows = documents.join(sid_df, "site").select(
-            F.lit(_TERM_ID_SITE).cast("long").alias("term_id"),
-            "doc_id",
-            F.col("_sid").alias("tf"),
-            F.lit(0.0).alias("score"),
-        )
-        scored = scored.unionByName(doclen_rows).unionByName(site_rows)
+    doclen_rows = documents.select(
+        F.lit(_TERM_ID_DOCLEN).cast("long").alias("term_id"),
+        "doc_id",
+        F.col("doc_len").cast("int").alias("tf"),
+    )
+    sid_df = F.broadcast(
+        tiny_df(spark, sorted(site_ids.items()), "site string, _sid int")
+    )
+    site_rows = documents.join(sid_df, "site").select(
+        F.lit(_TERM_ID_SITE).cast("long").alias("term_id"),
+        "doc_id",
+        F.col("_sid").alias("tf"),
+    )
+    postings = postings.unionByName(doclen_rows).unionByName(site_rows)
 
     shard_col = (F.col("doc_id") / F.lit(shard_size)).cast("long")
-    grouped = scored.groupBy(
+    grouped = postings.groupBy(
         shard_col.alias("shard"), F.col("term_id")
     ).agg(
-        F.sort_array(
-            F.collect_list(F.struct("doc_id", "tf", "score"))
-        ).alias("ps")
+        F.sort_array(F.collect_list(F.struct("doc_id", "tf"))).alias("ps")
     )
     encoded = grouped.mapInArrow(
         make_group_encoder(cfg.block_size), _ENC_SCHEMA
     )
 
-    from searchengine_spark.sources.catalog import tiny_df as _tiny
-
     dict_df = global_stats.select("term_id", "term").unionByName(
-        _tiny(
+        tiny_df(
             spark,
             [(_TERM_ID_DOCLEN, DOCLEN_TERM), (_TERM_ID_SITE, SITE_TERM)],
             "term_id long, term string",
@@ -442,5 +405,5 @@ def encode_posting_blocks(
     )
     return encoded.join(dict_df, "term_id").select(
         "term", "shard", "block_id", "min_doc", "max_doc", "count",
-        "block_max_tf", "block_max_score", "doc_gaps", "tfs",
+        "block_max_tf", "doc_gaps", "tfs",
     )

@@ -252,8 +252,9 @@ def make_shard_kernel(
 
         # Per-term upper bound in this shard, from immutable block_max_tf and
         # the *current* idf: score ≤ idf·tf·(k1+1)/(tf + k1·(1−b)) (the dl→0
-        # limit). Unlike the stored block_max_score, this stays a sound bound
-        # after incremental updates shift avgdl/idf (M1, plans/incremental.py).
+        # limit). Unlike a score stored at encode time, this stays a sound
+        # bound after incremental updates shift avgdl/idf (M1,
+        # plans/incremental.py).
         def term_ub(t: str) -> float:
             mtf = float(by_term[t]["block_max_tf"].max())
             return idf[t] * mtf * (k1 + 1.0) / (mtf + k1 * (1.0 - b))

@@ -248,13 +248,13 @@ def build_index(
             partition_by=["bucket", "sgrp"],
             sort_by=["bucket", "sgrp", "doc_id", "term"],
         )
-        # documents = every eligible turn; doc_len comes from the marker
-        # partition (one pruned directory, n_docs skinny rows — never a
-        # posting-sized aggregation, never a second lemmatizer pass)
+        # documents = every eligible turn; doc_len is the marker row's tf
+        # (one pruned directory, n_docs skinny rows — never a posting-sized
+        # aggregation, never a second lemmatizer pass)
         markers = (
             cat.read("postings_flat")
             .filter(F.col("bucket") == MARKER_BUCKET)
-            .select("doc_id", "doc_len")
+            .select("doc_id", F.col("tf").cast("int").alias("doc_len"))
         )
         # markers is doc-cardinality too, but its STATIC size estimate is
         # the pruned marker directory's parquet bytes — sorted int64 pairs
@@ -377,7 +377,7 @@ def build_index(
             "sites",
         )
         blocks = encode_posting_blocks(
-            flat, res.n_docs, res.avgdl, cat.read("terms_global"), cfg,
+            flat, res.n_docs, None, cat.read("terms_global"), cfg,
             documents=documents, site_ids=sids,
         )
         # PARTITIONED by doc-range shard: the incremental path rewrites one

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from searchengine_spark.config import EngineConfig
 from searchengine_spark.operators.postings import encode_posting_blocks
+from searchengine_spark.plans.incremental import complete_pending_mutation
 from searchengine_spark.sources.catalog import TableCatalog
 
 
@@ -40,26 +41,12 @@ def compact_shard(
     count after compaction."""
     cfg = cfg or EngineConfig()
     cat = TableCatalog(spark, warehouse)
-    cat.recover_all()  # repair any crash-interrupted partition swap first
-    meta = cat.read_meta()
     # a crashed append/upsert must be repaired/completed before re-encoding
     # from postings_flat, or orphan rows / missing term_ids leak into blocks
-    from searchengine_spark.plans.incremental import complete_pending_mutation
-    from searchengine_spark.plans.latedata import fence_orphans
-
-    fence_orphans(
-        cat,
-        int(meta["max_doc_id"]) + 1,
-        int(meta["shard_size"]),
-        int(meta.get("flat_group_docs", meta["shard_size"])),
-    )
-    if complete_pending_mutation(spark, cat, cfg):
-        meta = cat.read_meta()
+    meta, _ = complete_pending_mutation(spark, cat, cfg)
     shard_size = int(meta["shard_size"])
-    fgd = int(meta.get("flat_group_docs", shard_size))
+    fgd = int(meta["flat_group_docs"])
     n_docs = int(meta["n_docs"])
-    sum_doc_len = int(meta["sum_doc_len"])
-    avgdl = sum_doc_len / n_docs if n_docs else 0.0
 
     lo, hi = shard * shard_size, (shard + 1) * shard_size
     dgrp = lo // fgd  # the whole shard lives in one doc-range group
@@ -73,7 +60,7 @@ def compact_shard(
     sids = {r["site"]: int(r["sid"]) for r in cat.read("sites").collect()}
     cfg_frozen = dataclasses.replace(cfg, docs_per_shard=shard_size)
     blocks = encode_posting_blocks(
-        flat, n_docs, avgdl, cat.read("terms_global"), cfg_frozen,
+        flat, n_docs, None, cat.read("terms_global"), cfg_frozen,
         documents=shard_docs.select("doc_id", "conv_id", "turn_idx", "site", "doc_len"),
         site_ids=sids,
     )

@@ -24,10 +24,9 @@ O(one document), never O(corpus):
   updated rows; the searcher recomputes idf at query time anyway;
 - ``postings`` blocks: re-encode the affected ``(term, shard)`` groups —
   the doc's shard × (old ∪ new terms + the doc_len/site pseudo-terms) —
-  and rewrite that ONE shard partition. Other blocks keep their (now
-  approximate) block_max_score; the query kernel's pruning bound is derived
-  from immutable block_max_tf + current idf, so pruning stays sound under
-  drift (operators/search.py);
+  and rewrite that ONE shard partition. Blocks store no score: the query
+  kernel bounds a block by its immutable block_max_tf and the current idf,
+  so pruning stays sound as corpus stats drift (operators/search.py);
 - ``index_meta`` commits the counter updates LAST (atomic swap).
 
 Crash safety — the WRITE-AHEAD JOURNAL. The upsert's deltas depend on the
@@ -45,7 +44,8 @@ terms_global join). So ``reindex_turn``:
    committed mut_seq + 1), COMPLETES that mutation first from the
    journaled old state — every table write is a deterministic function of
    (journal, committed meta), and ``apply_term_deltas``'s mut_seq stamps
-   skip whatever buckets the crashed attempt already committed;
+   skip whatever buckets the crashed attempt already committed. Steps 1-2
+   are :func:`complete_pending_mutation`, shared by every mutation;
 3. derives the new mutation's old state from committed tables ONLY, writes
    it to ``mutation_journal`` (atomic swap) BEFORE the first table write,
    then applies. A journal whose mut_seq ≤ committed mut_seq is stale
@@ -77,7 +77,11 @@ from searchengine_spark.plans.latedata import (
     fence_orphans,
     update_sites,
 )
-from searchengine_spark.sources.catalog import TableCatalog, tiny_df
+from searchengine_spark.sources.catalog import (
+    TableCatalog,
+    check_index_format,
+    tiny_df,
+)
 from searchengine_spark.sources.transcripts import site_of_conv
 
 JOURNAL_TABLE = "mutation_journal"
@@ -126,20 +130,30 @@ def _write_journal(cat: TableCatalog, st: dict) -> None:
 
 def complete_pending_mutation(
     spark: SparkSession, cat: TableCatalog, cfg: EngineConfig
-) -> bool:
-    """Complete a crashed upsert left in ``mutation_journal`` (journal
-    mut_seq == committed mut_seq + 1). EVERY mutation entry point (upsert,
-    streaming append, compaction) calls this after swap recovery + orphan
-    fencing — otherwise a later append would claim the same mut_seq as the
+) -> tuple[dict, dict | None]:
+    """The recovery step EVERY mutation entry point (upsert, streaming
+    append, compaction) runs before reading committed state: repair
+    crash-interrupted partition swaps, check the index format, fence a
+    crashed append's orphan rows, then complete a crashed upsert left in
+    ``mutation_journal`` (journal mut_seq == committed mut_seq + 1) —
+    otherwise a later append would claim the same mut_seq as the
     half-applied upsert and its bucket increments would be skipped by the
-    upsert's stamps. Returns True if a pending mutation was applied (the
-    caller re-reads index_meta)."""
+    upsert's stamps. Returns (committed index_meta, the completed journal
+    or None)."""
+    cat.recover_all()
     meta = cat.read_meta()
+    check_index_format(meta, cat.read("sites"))
+    fence_orphans(
+        cat,
+        int(meta["max_doc_id"]) + 1,
+        int(meta["shard_size"]),
+        int(meta["flat_group_docs"]),
+    )
     j = _read_journal(cat)
-    if j is None or j["mut_seq"] != int(meta.get("mut_seq", 0)) + 1:
-        return False
+    if j is None or j["mut_seq"] != int(meta["mut_seq"]) + 1:
+        return meta, None
     _apply_upsert(spark, cat, j, cfg, meta)
-    return True
+    return cat.read_meta(), j
 
 
 def reindex_turn(
@@ -156,23 +170,12 @@ def reindex_turn(
     cat = TableCatalog(spark, warehouse)
     turn_idx = int(turn_idx)
 
-    # -- recovery: clean committed state before reading any of it ------------
-    cat.recover_all()
-    meta = cat.read_meta()
-    fence_orphans(
-        cat,
-        int(meta["max_doc_id"]) + 1,
-        int(meta["shard_size"]),
-        int(meta.get("flat_group_docs", meta["shard_size"])),
-    )
-
-    # -- complete a crashed upsert from its journaled old state --------------
-    j = _read_journal(cat)
-    if j is not None and j["mut_seq"] == int(meta.get("mut_seq", 0)) + 1:
-        _apply_upsert(spark, cat, j, cfg, meta)
-        if (j["conv_id"], j["turn_idx"], j["text"]) == (conv_id, turn_idx, text):
-            return j["doc_id"]  # the crashed mutation WAS this request
-        meta = cat.read_meta()
+    # -- recovery: clean committed state, complete a crashed upsert ----------
+    meta, j = complete_pending_mutation(spark, cat, cfg)
+    if j is not None and (j["conv_id"], j["turn_idx"], j["text"]) == (
+        conv_id, turn_idx, text
+    ):
+        return j["doc_id"]  # the crashed mutation WAS this request
 
     # -- derive the new mutation's old state from COMMITTED tables only ------
     st = _derive_state(cat, meta, conv_id, turn_idx, text)
@@ -187,8 +190,7 @@ def _derive_state(
     """The mutation record: everything a (re-)application needs that the
     mutation itself will overwrite — the doc's id, previous doc_len, and
     previous postings_flat rows."""
-    shard_size = int(meta["shard_size"])
-    fgd = int(meta.get("flat_group_docs", shard_size))
+    fgd = int(meta["flat_group_docs"])
 
     docs = cat.read("documents")
     # conv_id filter → parquet row-group pruning (doc ids are assigned in
@@ -216,7 +218,7 @@ def _derive_state(
         ).select("term", "tf").collect()
     }
     return {
-        "mut_seq": int(meta.get("mut_seq", 0)) + 1,
+        "mut_seq": int(meta["mut_seq"]) + 1,
         "conv_id": conv_id,
         "turn_idx": turn_idx,
         "text": text,
@@ -246,8 +248,8 @@ def _apply_upsert(
     # frozen physical geometry + maintained corpus counters (index_meta):
     # layout is never re-derived, stats are never re-scanned
     shard_size = int(meta["shard_size"])
-    nb = int(meta.get("term_buckets", cfg.n_term_buckets()))
-    fgd = int(meta.get("flat_group_docs", shard_size))
+    nb = int(meta["term_buckets"])
+    fgd = int(meta["flat_group_docs"])
     mut_seq = st["mut_seq"]
     dshard = doc_id // shard_size
     dgrp = doc_id // fgd
@@ -264,9 +266,9 @@ def _apply_upsert(
     #     (+ the doc's marker cell — its #doc_len row changes too) ----------
     new_rows = tiny_df(
         spark,
-        [(doc_id, site, doc_len, t, c) for t, c in sorted(counts.items())]
-        + [(doc_id, site, doc_len, DOCLEN_TERM, doc_len)],
-        "doc_id long, site string, doc_len int, term string, tf long",
+        [(doc_id, site, t, c) for t, c in sorted(counts.items())]
+        + [(doc_id, site, DOCLEN_TERM, doc_len)],
+        "doc_id long, site string, term string, tf long",
     )
     cells = [(b, dgrp) for b in abuckets] + [(MARKER_BUCKET, dgrp)]
     cell_cond = F.lit(False)
@@ -275,7 +277,7 @@ def _apply_upsert(
     flat = cat.read("postings_flat")
     keep_rows = flat.filter(
         cell_cond & (F.col("sgrp") == dgrp) & (F.col("doc_id") != doc_id)
-    ).select("doc_id", "site", "doc_len", "term", "tf")
+    ).select("doc_id", "site", "term", "tf")
     from searchengine_spark.operators.postings import flat_bucket_col, sgrp_col
 
     cat.replace_partitions(
@@ -310,7 +312,6 @@ def _apply_upsert(
     # --- corpus counters (maintained, never re-scanned) ---------------------
     n_docs = int(meta["n_docs"]) + (1 if st["is_insert"] else 0)
     sum_doc_len = int(meta["sum_doc_len"]) - old_doc_len + doc_len
-    avgdl = sum_doc_len / n_docs if n_docs else 0.0
 
     # --- terms / terms_global: exact ±increments, bucket rewrites -----------
     deltas = []
@@ -339,7 +340,7 @@ def _apply_upsert(
         (F.col("shard") == dshard) & ~F.col("term").isin(re_terms)
     ).select(
         "term", "block_id", "min_doc", "max_doc", "count",
-        "block_max_tf", "block_max_score", "doc_gaps", "tfs",
+        "block_max_tf", "doc_gaps", "tfs",
         F.col("shard").cast("long").alias("shard"),
     )
     lo, hi = dshard * shard_size, (dshard + 1) * shard_size
@@ -356,7 +357,7 @@ def _apply_upsert(
     cfg_frozen = dataclasses.replace(cfg, docs_per_shard=shard_size)
     sids = update_sites(cat, {site: (doc_id, doc_id)})
     re_blocks = encode_posting_blocks(
-        re_flat, n_docs, avgdl, cat.read("terms_global"), cfg_frozen,
+        re_flat, n_docs, None, cat.read("terms_global"), cfg_frozen,
         documents=shard_docs, site_ids=sids,
     )
     cat.replace_partitions(

@@ -34,6 +34,25 @@ def tiny_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 
+def check_index_format(meta: dict, sites: DataFrame) -> None:
+    """The searcher and every mutation read these index_meta keys (every
+    build writes them, plans/build_index.py) and the ``sites`` table's
+    ``lo``/``hi`` range directly. A warehouse from before that format raises
+    an explicit 'index format too old' error naming what is missing."""
+    keys = (
+        "shard_size", "n_docs", "sum_doc_len", "term_buckets",
+        "flat_group_docs", "mut_seq",
+    )
+    missing = [k for k in keys if k not in meta] + [
+        f"sites.{c}" for c in ("lo", "hi") if c not in sites.columns
+    ]
+    if missing:
+        raise RuntimeError(
+            f"index format too old: index lacks {', '.join(missing)} — "
+            "rebuild the index with SearchEngine.build()"
+        )
+
+
 class TableCatalog:
     def __init__(self, spark: SparkSession, warehouse: str, iceberg_catalog: str | None = None):
         self.spark = spark

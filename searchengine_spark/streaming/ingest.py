@@ -76,11 +76,8 @@ from searchengine_spark.operators.postings import (
     counts_with_marker,
     sgrp_col,
 )
-from searchengine_spark.plans.latedata import (
-    apply_term_deltas,
-    fence_orphans,
-    update_sites,
-)
+from searchengine_spark.plans.incremental import complete_pending_mutation
+from searchengine_spark.plans.latedata import apply_term_deltas, update_sites
 from searchengine_spark.sources.catalog import TableCatalog
 from searchengine_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
@@ -110,8 +107,12 @@ def append_turns(
     keeps the bare epoch comparison."""
     cfg = cfg or EngineConfig()
     cat = TableCatalog(spark, warehouse)
-    cat.recover_all()  # repair any crash-interrupted partition swap first
-    meta = cat.read_meta()
+    # repair a crashed attempt's partial appends (no-op in the happy path:
+    # three partition-pruned probes of the tail shards/cells) and complete a
+    # crashed UPSERT before claiming its mut_seq (journal protocol,
+    # plans/incremental.py): its bucket stamps would otherwise swallow this
+    # batch's term increments
+    meta, _ = complete_pending_mutation(spark, cat, cfg)
     if epoch is not None:
         # a warehouse with stream_epoch but NO stream_run predates the
         # run-id fence: treat it as a run MISMATCH (process the batch —
@@ -125,23 +126,10 @@ def append_turns(
         if same_run and int(meta.get("stream_epoch", -1)) >= epoch:
             return 0  # fully committed epoch replayed by the checkpoint
     shard_size = int(meta["shard_size"])
-    nb = int(meta.get("term_buckets", cfg.n_term_buckets()))
-    fgd = int(meta.get("flat_group_docs", shard_size))
+    nb = int(meta["term_buckets"])
+    fgd = int(meta["flat_group_docs"])
     base_id = int(meta["max_doc_id"]) + 1
-    mut_seq = int(meta.get("mut_seq", 0)) + 1
-
-    # repair a crashed attempt's partial appends (no-op in the happy path:
-    # three partition-pruned probes of the tail shards/cells)
-    fence_orphans(cat, base_id, shard_size, fgd)
-    # complete a crashed UPSERT before claiming its mut_seq (journal protocol,
-    # plans/incremental.py): its bucket stamps would otherwise swallow this
-    # batch's term increments
-    from searchengine_spark.plans.incremental import complete_pending_mutation
-
-    if complete_pending_mutation(spark, cat, cfg):
-        meta = cat.read_meta()
-        base_id = int(meta["max_doc_id"]) + 1
-        mut_seq = int(meta.get("mut_seq", 0)) + 1
+    mut_seq = int(meta["mut_seq"]) + 1
 
     # deterministic winner for intra-batch duplicate keys: latest ts, then
     # lexically greatest text (a replayed epoch re-picks the same row);
@@ -223,7 +211,6 @@ def append_turns(
     batch_sum_dl = int(agg["s"] or 0)
     n_docs = int(meta["n_docs"]) + n_new
     sum_doc_len = int(meta["sum_doc_len"]) + batch_sum_dl
-    avgdl = sum_doc_len / n_docs if n_docs else 0.0
 
     # --- sites: merge ranges / append new sids (tiny table) ------------------
     site_ranges = {
@@ -262,7 +249,7 @@ def append_turns(
     )
     cfg_frozen = dataclasses.replace(cfg, docs_per_shard=shard_size)
     new_blocks = encode_posting_blocks(
-        real, n_docs, avgdl, cat.read("terms_global"), cfg_frozen,
+        real, n_docs, None, cat.read("terms_global"), cfg_frozen,
         documents=docs_new.select("doc_id", "conv_id", "turn_idx", "site", "doc_len"),
         site_ids=sids,
     )

@@ -80,19 +80,14 @@ def test_group_encoder_sliced_list_array():
     from searchengine_spark.functions.codec import varint_decode
     from searchengine_spark.operators.postings import make_group_encoder
 
-    ps_type = pa.list_(
-        pa.struct(
-            [("doc_id", pa.int64()), ("tf", pa.int32()), ("score", pa.float64())]
-        )
-    )
+    ps_type = pa.list_(pa.struct([("doc_id", pa.int64()), ("tf", pa.int32())]))
     rows = [
-        [(5, 2, 0.5), (9, 1, 0.25)],
-        [(1, 3, 1.0), (2, 1, 0.1), (300, 7, 2.0)],
-        [(4, 1, 0.9)],
+        [(5, 2), (9, 1)],
+        [(1, 3), (2, 1), (300, 7)],
+        [(4, 1)],
     ]
     ps = pa.array(
-        [[{"doc_id": d, "tf": t, "score": s} for d, t, s in r] for r in rows],
-        type=ps_type,
+        [[{"doc_id": d, "tf": t} for d, t in r] for r in rows], type=ps_type
     )
     shard = pa.array([0, 0, 1], pa.int64())
     tid = pa.array([7, 8, 7], pa.int64())

@@ -185,14 +185,20 @@ def built_wh(spark):
 
 
 @pytest.mark.parametrize(
-    "missing", ["shard_size", "n_docs", "sum_doc_len", "term_buckets", "sites.lo_hi"]
+    "missing",
+    [
+        "shard_size", "n_docs", "sum_doc_len", "term_buckets",
+        "flat_group_docs", "mut_seq", "sites.lo_hi",
+    ],
 )
 def test_too_old_index_format_raises_explicit_error(spark, built_wh, missing):
     """VERDICT r4 #7: a warehouse from before the current meta format — an
-    index_meta key the searcher needs is absent, or the ``sites`` table has
-    no ``lo``/``hi`` doc-id range — gets an explicit 'index format too old'
-    error naming what is missing, not a KeyError or a corpus-scan
-    fallback."""
+    index_meta key the searcher or a mutation needs is absent, or the
+    ``sites`` table has no ``lo``/``hi`` doc-id range — gets an explicit
+    'index format too old' error naming what is missing, not a KeyError or
+    a corpus-scan fallback. A streaming append raises it before writing."""
+    from searchengine_spark.streaming.ingest import append_turns
+
     wh = os.path.join(tempfile.mkdtemp(prefix="se_oldfmt_"), "wh")
     shutil.copytree(built_wh, wh)
     cat = TableCatalog(spark, wh)
@@ -212,4 +218,11 @@ def test_too_old_index_format_raises_explicit_error(spark, built_wh, missing):
     stale = SearchEngine(spark, wh)
     with pytest.raises(RuntimeError, match=f"index format too old: .*{match}"):
         stale.search("hotalpha")
+    batch = spark.createDataFrame(
+        [("convzz-990001", 0, "user", "oldformatword", None, None)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    with pytest.raises(RuntimeError, match=f"index format too old: .*{match}"):
+        append_turns(spark, wh, batch)
     shutil.rmtree(os.path.dirname(wh), ignore_errors=True)

@@ -32,11 +32,16 @@ def test_hot_terms_split_across_shards(engine):
 
 def test_blocks_decode_to_flat_postings(engine):
     """Compressed blocks are a lossless re-encoding of the flat posting rows
-    (the `search_index` analog)."""
-    blocks = engine.catalog.read("postings").filter(
-        ~F.col("term").isin([DOCLEN_TERM, SITE_TERM])
-    )
+    (the `search_index` analog), and both tables hold only the columns
+    something reads (partition columns come last)."""
+    postings = engine.catalog.read("postings")
     flat = engine.catalog.read("postings_flat")
+    assert postings.columns == [
+        "term", "block_id", "min_doc", "max_doc", "count", "block_max_tf",
+        "doc_gaps", "tfs", "shard",
+    ]
+    assert flat.columns == ["doc_id", "site", "term", "tf", "bucket", "sgrp"]
+    blocks = postings.filter(~F.col("term").isin([DOCLEN_TERM, SITE_TERM]))
     for term in ["hotalpha", "поиск"]:
         brows = (
             blocks.filter(F.col("term") == term)
@@ -63,14 +68,19 @@ def test_blocks_decode_to_flat_postings(engine):
 
 
 def test_block_metadata_bounds(engine):
-    """block_max_* are true upper bounds (WAND pruning soundness)."""
-    blocks = engine.catalog.read("postings")
-    bad = blocks.filter(
-        (F.col("min_doc") > F.col("max_doc"))
-        | (F.col("count") <= 0)
-        | (F.col("block_max_tf") < 0)
-    ).count()
-    assert bad == 0
+    """Every block's metadata matches its decoded postings: block_max_tf is
+    the exact max tf (the query kernel's WAND bound), min_doc/max_doc are
+    the first/last doc ids and count is the posting count."""
+    blocks = engine.catalog.read("postings").select(
+        "term", "min_doc", "max_doc", "count", "block_max_tf", "doc_gaps", "tfs"
+    ).collect()
+    assert blocks
+    for r in blocks:
+        ids = np.cumsum(varint_decode(bytes(r["doc_gaps"])).astype(np.int64))
+        tfs = varint_decode(bytes(r["tfs"])).astype(np.int64)
+        assert len(ids) == len(tfs) == r["count"] > 0, r["term"]
+        assert r["block_max_tf"] == tfs.max(), r["term"]
+        assert (r["min_doc"], r["max_doc"]) == (ids[0], ids[-1]), r["term"]
 
 
 def test_doc_id_assignment_parallelism_invariant(spark, tiny_pdf):
