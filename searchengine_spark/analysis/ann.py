@@ -526,10 +526,9 @@ def build_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     iters: int = IVF_ITERS,
-    prefix: str = "ann",
 ) -> dict:
-    """Build and PERSIST the IVF index: ``{prefix}_centroids`` (cid, cvec,
-    cnrm — k literal rows) and ``{prefix}_lists`` (cid, vec_id, vec, vnrm —
+    """Build and PERSIST the IVF index: ``ann_centroids`` (cid, cvec,
+    cnrm — k literal rows) and ``ann_lists`` (cid, vec_id, vec, vnrm —
     the inverted lists, PARTITIONED BY cid, carrying each vector + its norm
     so serving never joins back to the source table). ``catalog`` is a
     ``sources.catalog.TableCatalog``.
@@ -564,14 +563,9 @@ def build_ivf_index(
         # replace (temp-dir + atomic swap), NOT write: a plain overwrite
         # deletes the previous lists before writing, so a crash mid-rebuild
         # would leave surviving centroids pointing at partial/missing lists
-        catalog.replace(
-            lists, f"{prefix}_lists",
-            partition_by=["cid"], sort_by=["cid", "vec_id"],
-        )
-        catalog.replace(cents, f"{prefix}_centroids")
-        n_vectors = int(
-            catalog.read(f"{prefix}_lists").count()
-        )
+        catalog.replace(lists, "ann_lists")
+        catalog.replace(cents, "ann_centroids")
+        n_vectors = int(catalog.read("ann_lists").count())
     finally:
         vecs.unpersist()
     return {"n_centroids": len(rows), "n_vectors": n_vectors}
@@ -585,7 +579,6 @@ def ivf_topk_indexed(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    prefix: str = "ann",
 ) -> DataFrame:
     """(query_id, rank, vec_id, cosine): IVF top-k served FROM the persisted
     index (:func:`build_ivf_index`) — bit-identical results to
@@ -601,7 +594,7 @@ def ivf_topk_indexed(
     join back to the source table (the lists carry vec + norm).
     ``embeddings`` supplies only the PROBE vectors (vec_id-pruned read)."""
     spark = embeddings.sparkSession
-    crows = catalog.read(f"{prefix}_centroids").collect()
+    crows = catalog.read("ann_centroids").collect()
     cents = spark.createDataFrame(
         [(int(r["cid"]), [float(x) for x in r["cvec"]], float(r["cnrm"]))
          for r in crows],
@@ -647,7 +640,7 @@ def ivf_topk_indexed(
         )
     )
     # cid isin → partition pruning: only the probed lists' files are read
-    lists = catalog.read(f"{prefix}_lists").filter(F.col("cid").isin(cids))
+    lists = catalog.read("ann_lists").filter(F.col("cid").isin(cids))
     scored = (
         lists.join(pc, "cid")
         .filter(F.col("vec_id") != F.col("query_id"))

@@ -38,50 +38,62 @@ def assign_doc_ids(
     parallelism: int = 32,
     id_col: str = "doc_id",
     persist: bool = True,
-    expect_unique: bool = False,
+    expect_unique: bool = True,
 ) -> DataFrame:
     """Add a dense 0-based ``id_col`` ordered by ``key_cols``.
 
-    Keys MAY repeat across rows (e.g. one row per posting of a document):
-    ids are assigned per distinct key via ``dense_rank`` within each range
-    partition + per-partition distinct-count offsets, so the caller can
-    explode payload BEFORE this shuffle and keep the shuffled rows skinny.
-    (Shuffling or caching ``map``-typed payload was measured ~10× the cost
-    of the shuffle itself — complex-type serialization dominates — so the
-    build pipeline explodes the per-doc tf maps first and sends only flat
-    posting rows through here.)
+    Keys must be unique: repeated keys raise :class:`DuplicateKeysError`
+    (M4), checked in the same job that computes the id offsets, so the
+    validation costs no extra pass. ``expect_unique`` is ignored — the check
+    always runs; the parameter stays only for ``perfbench/layers.py``'s
+    keyword call.
 
-    The returned DataFrame is persisted (the offsets job already
-    materialized the exchange; later actions would otherwise recompute the
-    whole upstream, since physical plans are not shared across actions).
-    Callers should ``unpersist()`` when done.
+    With ``persist`` the range shuffle runs once: its output is cached for
+    the offsets job, the returned frame is cached and materialized from it,
+    and the shuffle's cache is released before returning. The caller owns
+    the returned frame's cache and ``unpersist()``s it when done. Without
+    ``persist`` nothing is cached and every action re-runs the shuffle
+    (for inputs small enough that this is cheaper than a cache).
     """
     parts = df.repartitionByRange(
         parallelism, *[F.col(c) for c in key_cols]
     ).withColumn("_pid", F.spark_partition_id())
-    if persist:
-        parts = parts.persist(StorageLevel.MEMORY_AND_DISK)
-    # one job: per-partition distinct-key counts (the id offsets) and — in
-    # the same pass — raw row counts for the M4 duplicate-PK check
+    if not persist:
+        return _ranked(parts, key_cols, id_col)
+    parts = parts.persist(StorageLevel.MEMORY_AND_DISK)
+    ids = None
+    try:
+        ids = _ranked(parts, key_cols, id_col).persist(StorageLevel.MEMORY_AND_DISK)
+        ids.count()  # fill the cache from ``parts`` before releasing it
+        return ids
+    except BaseException:
+        if ids is not None:
+            ids.unpersist()
+        raise
+    finally:
+        parts.unpersist()
+
+
+def _ranked(parts: DataFrame, key_cols: tuple[str, ...], id_col: str) -> DataFrame:
+    """``parts`` (range-partitioned, with ``_pid``) plus ``id_col``: one
+    job collects per-partition key counts (the id offsets, and the M4
+    duplicate check), then ids are windowed per partition id."""
     count_rows = (
         parts.groupBy("_pid")
         .agg(F.countDistinct(*key_cols).alias("n"), F.count("*").alias("raw"))
         .collect()
     )
-    counts = {r["_pid"]: r["n"] for r in count_rows}
-    if expect_unique:
-        n_dup = sum(r["raw"] - r["n"] for r in count_rows)
-        if n_dup:
-            raise DuplicateKeysError(
-                f"{n_dup} input rows repeat an existing {key_cols} key"
-            )
+    n_dup = sum(r["raw"] - r["n"] for r in count_rows)
+    if n_dup:
+        raise DuplicateKeysError(
+            f"{n_dup} input rows repeat an existing {key_cols} key"
+        )
     offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    spark = df.sparkSession
+    for r in sorted(count_rows, key=lambda r: r["_pid"]):
+        offsets[r["_pid"]] = acc
+        acc += r["n"]
     offsets_df = F.broadcast(
-        spark.createDataFrame(
+        parts.sparkSession.createDataFrame(
             [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _offset long"
         )
     )

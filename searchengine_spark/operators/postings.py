@@ -22,7 +22,7 @@ Scale notes (10^12 turns):
   the kernel sorted runs zero-copy (see :func:`make_group_encoder`).
 - memory in the kernel is bounded by one Arrow batch; a (term, shard)
   group is ≤ min(df_in_shard, docs_per_shard) postings and
-  ``EngineConfig.max_docs_per_shard`` caps that bound independently of
+  ``config.MAX_DOCS_PER_SHARD`` caps that bound independently of
   corpus size (a df≈N stopword term is still split into contiguous,
   independently compressed doc ranges — explicit skew handling; no group
   is ever O(df)). Shards are doc-range aligned across terms, which is
@@ -39,12 +39,17 @@ from searchengine_spark.config import EngineConfig
 from searchengine_spark.functions.lemmatize import lemma_counts_udf
 from searchengine_spark.operators.doc_ids import assign_doc_ids
 
+#: postings per block (SURVEY §4.3.2): one block = ≤BLOCK_SIZE postings of
+#: one (term, shard); block metadata powers block-max WAND pruning. Frozen
+#: into index_meta at build time.
+BLOCK_SIZE = 128
+
 BLOCKS_SCHEMA = (
     "term string, shard long, block_id int, min_doc long, max_doc long, "
     "count int, block_max_tf int, doc_gaps binary, tfs binary"
 )
 
-#: mapInArrow output before the term_id → term string join (1/block_size the
+#: mapInArrow output before the term_id → term string join (1/BLOCK_SIZE the
 #: row count of the postings themselves, so the join input is small)
 _ENC_SCHEMA = (
     "term_id long, shard long, block_id int, min_doc long, max_doc long, "
@@ -185,7 +190,8 @@ def global_term_stats(
     of term strings. It lives in the table — never re-derived on the fly —
     so every later consumer (incremental re-encodes included) sees one
     stable dictionary; new terms get max_id+1… appends
-    (plans/incremental.py)."""
+    (plans/incremental.py). The result comes back cached (see
+    ``assign_doc_ids``): the caller ``unpersist()``s it once written."""
     g = per_site.groupBy("term").agg(
         F.sum("df").alias("df_global"), F.sum("cf").alias("cf_global")
     ).withColumn("idf", idf_col(F.col("df_global"), n_docs))
@@ -228,7 +234,7 @@ def make_group_encoder(block_size: int):
     arithmetic on the list offsets, per-block metadata via ``reduceat``,
     ONE varint encode per batch split at block offsets. Peak memory is one
     Arrow batch; a group is ≤ min(df_in_shard, docs_per_shard) postings
-    (``EngineConfig.max_docs_per_shard`` caps it independently of corpus
+    (``config.MAX_DOCS_PER_SHARD`` caps it independently of corpus
     size)."""
     import pyarrow as pa
 
@@ -325,7 +331,7 @@ def encode_posting_blocks(
 ) -> DataFrame:
     """flat postings → compressed block table (BLOCKS_SCHEMA).
 
-    Each output row is one block of ≤``cfg.block_size`` postings of one
+    Each output row is one block of ≤``BLOCK_SIZE`` postings of one
     ``(term, shard)``: doc-id gaps delta+varint encoded, tfs varint encoded,
     with (min_doc, max_doc, block_max_tf) metadata for block-max WAND
     pruning (SURVEY §4.3.2/§4.3.4). The query kernel bounds a block by
@@ -345,7 +351,7 @@ def encode_posting_blocks(
        bottleneck of this stage, see :func:`make_group_encoder`;
     4. ``mapInArrow`` block encode (:func:`make_group_encoder`) — fully
        vectorized over the batch's flat child arrays;
-    5. join the block rows (1/block_size the posting count) back to term
+    5. join the block rows (1/BLOCK_SIZE the posting count) back to term
        strings — AQE broadcasts the dictionary at small vocab, SMJ at 10^9.
 
     Two forward structures from ``documents`` are encoded into the same
@@ -393,7 +399,7 @@ def encode_posting_blocks(
         F.sort_array(F.collect_list(F.struct("doc_id", "tf"))).alias("ps")
     )
     encoded = grouped.mapInArrow(
-        make_group_encoder(cfg.block_size), _ENC_SCHEMA
+        make_group_encoder(BLOCK_SIZE), _ENC_SCHEMA
     )
 
     dict_df = global_stats.select("term_id", "term").unionByName(

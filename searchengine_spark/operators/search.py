@@ -50,6 +50,11 @@ SCORE_DECIMALS = 9
 
 KERNEL_SCHEMA = "shard long, doc_id long, score double, cand long"
 
+#: page defaults — the reference's API defaults
+#: (controllers/ApiController.java:59-64)
+DEFAULT_LIMIT = 20
+DEFAULT_OFFSET = 0
+
 
 #: per-searcher memo bound: a long-lived serving process under an
 #: adversarial query stream (millions of distinct cold terms) keeps the
@@ -508,8 +513,8 @@ class BlockSearcher:
         disjunctive candidate count (SearchResponse.count parity). Reference
         mode counts are always exact (conjunctive intersection)."""
         cfg = self.cfg
-        offset = cfg.default_offset if offset is None else offset
-        limit = cfg.default_limit if limit is None else limit
+        offset = DEFAULT_OFFSET if offset is None else offset
+        limit = DEFAULT_LIMIT if limit is None else limit
         tl, idf, gated, allowed_site_ids, scan_ranges = self._plan(query, site, mode)
         empty = pd.DataFrame(
             columns=["doc_id", "conv_id", "turn_idx", "site", "score", "relevance"]

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from searchengine_spark.config import EngineConfig
 from searchengine_spark.operators.doc_ids import assign_doc_ids
 from searchengine_spark.operators.postings import (
+    BLOCK_SIZE,
     encode_posting_blocks,
     flat_postings,
     lemmatize_transcripts,
@@ -57,15 +58,11 @@ class BuildResult:
 
 
 def _append_state(cat: TableCatalog, rows: list[tuple]) -> None:
-    tiny_df(cat.spark, rows, BUILD_STATE_SCHEMA).write.mode("append").parquet(
-        cat.path("build_state")
-    )
+    cat.write(tiny_df(cat.spark, rows, BUILD_STATE_SCHEMA), "build_state", mode="append")
 
 
 def _append_metrics(cat: TableCatalog, rows: list[tuple]) -> None:
-    tiny_df(cat.spark, rows, METRICS_SCHEMA).write.mode("append").parquet(
-        cat.path("metrics")
-    )
+    cat.write(tiny_df(cat.spark, rows, METRICS_SCHEMA), "metrics", mode="append")
 
 
 def _done_stages(cat: TableCatalog) -> set[str]:
@@ -185,13 +182,10 @@ def build_index(
         eligible_keys = src.filter(
             F.col("text").isNotNull() & (F.length("text") > 0)
         ).select("conv_id", "turn_idx")
-        # expect_unique: duplicate (conv_id, turn_idx) keys fail the build
-        # loudly (M4) instead of silently collapsing inside dense_rank
-        ids = assign_doc_ids(
-            eligible_keys, parallelism=cfg.parallelism,
-            expect_unique=cfg.validate_input_keys,
-        )
-        n_ids = ids.count()  # materializes the cache; n_docs for free
+        # duplicate (conv_id, turn_idx) keys fail the build loudly (M4);
+        # ids comes back cached, released once documents is written
+        ids = assign_doc_ids(eligible_keys, parallelism=cfg.parallelism)
+        n_ids = ids.count()
 
         from searchengine_spark.operators.postings import (
             MARKER_BUCKET,
@@ -226,13 +220,6 @@ def build_index(
         else:
             id_side = ids.hint("merge")
         joined = rows.join(id_side, ["conv_id", "turn_idx"])
-        # physical layout for incremental upserts (M1): postings_flat is
-        # PARTITIONED by (term-hash bucket, doc-range group) — an upsert
-        # rewrites only the touched CELLS (corpus/(nb·n_groups) rows each),
-        # and the streaming recovery fence reads only the tail group's cells.
-        # Files are sorted by doc_id so doc-range predicates (M1 old-term
-        # lookup, shard re-encode, orphan fencing) hit parquet row-group
-        # min/max pruning.
         nb = cfg.n_term_buckets(n_ids)
         shard_size = cfg.shard_size(n_ids)
         fgd = cfg.flat_group_docs(shard_size, n_ids)
@@ -242,12 +229,7 @@ def build_index(
             .withColumn("bucket", flat_bucket_col(F.col("term"), nb))
             .withColumn("sgrp", sgrp_col(F.col("doc_id"), fgd))
         )
-        cat.write(
-            flat_b.repartition(cfg.parallelism, "bucket"),
-            "postings_flat",
-            partition_by=["bucket", "sgrp"],
-            sort_by=["bucket", "sgrp", "doc_id", "term"],
-        )
+        cat.write(flat_b.repartition(cfg.parallelism, "bucket"), "postings_flat")
         # documents = every eligible turn; doc_len is the marker row's tf
         # (one pruned directory, n_docs skinny rows — never a posting-sized
         # aggregation, never a second lemmatizer pass)
@@ -271,12 +253,7 @@ def build_index(
                 "shard", (F.col("doc_id") / F.lit(shard_size)).cast("long")
             )
         )
-        cat.write(
-            docs.repartition(cfg.parallelism, "shard"),
-            "documents",
-            partition_by=["shard"],
-            sort_by=["shard", "doc_id"],
-        )
+        cat.write(docs.repartition(cfg.parallelism, "shard"), "documents")
         ids.unpersist()
         d = cat.read("documents")
         lineage = (
@@ -336,23 +313,15 @@ def build_index(
             .withColumn("bucket", term_bucket_col(F.col("term"), nb))
             .withColumn("mut_epoch", F.lit(0).cast("long"))
         )
+        cat.write(per_site.repartition(cfg.parallelism, "bucket"), "terms")
+        g = global_term_stats(cat.read("terms"), res.n_docs, cfg.parallelism)
         cat.write(
-            per_site.repartition(cfg.parallelism, "bucket"),
-            "terms",
-            partition_by=["bucket"],
-            sort_by=["bucket", "term"],
-        )
-        g = (
-            global_term_stats(cat.read("terms"), res.n_docs, cfg.parallelism)
-            .withColumn("bucket", term_bucket_col(F.col("term"), nb))
+            g.withColumn("bucket", term_bucket_col(F.col("term"), nb))
             .withColumn("mut_epoch", F.lit(0).cast("long"))
-        )
-        cat.write(
-            g.repartition(cfg.parallelism, "bucket"),
+            .repartition(cfg.parallelism, "bucket"),
             "terms_global",
-            partition_by=["bucket"],
-            sort_by=["bucket", "term"],
         )
+        g.unpersist()
         n_terms = cat.read("terms_global").count()
         return [(0, n_terms, "")]
 
@@ -380,18 +349,11 @@ def build_index(
             flat, res.n_docs, None, cat.read("terms_global"), cfg,
             documents=documents, site_ids=sids,
         )
-        # PARTITIONED by doc-range shard: the incremental path rewrites one
-        # shard's directory, and a site/doc-range-scoped query could prune
-        # whole partitions. The encode exchange is hashed on (shard, term),
-        # which scatters a shard's blocks across tasks — re-cluster the
-        # (small, 1/block_size-sized) block rows by shard first so each
-        # task writes only its own few shard dirs, not shards×tasks files
-        cat.write(
-            blocks.repartition(cfg.parallelism, "shard"),
-            "postings",
-            partition_by=["shard"],
-            sort_by=["shard", "term"],
-        )
+        # The encode exchange is hashed on (shard, term), which scatters a
+        # shard's blocks across tasks — re-cluster the (small,
+        # 1/BLOCK_SIZE-sized) block rows by shard first so each task writes
+        # only its own few shard dirs, not shards×tasks files
+        cat.write(blocks.repartition(cfg.parallelism, "shard"), "postings")
         # freeze the physical geometry (shard size, bucket count, flat group
         # width — layout, never re-derived from drifting corpus stats) and
         # seed the MAINTAINED counters: every late-data path reads corpus
@@ -405,7 +367,7 @@ def build_index(
         cat.write_meta(
             {
                 "shard_size": shard_size,
-                "block_size": cfg.block_size,
+                "block_size": BLOCK_SIZE,
                 "built_n_docs": res.n_docs,
                 "term_buckets": cfg.n_term_buckets(res.n_docs),
                 "flat_group_docs": cfg.flat_group_docs(shard_size, res.n_docs),

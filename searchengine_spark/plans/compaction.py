@@ -8,7 +8,7 @@ minus any text change — restoring fresh-build block geometry. Reference
 analog: the bulk-save consolidation that folds per-page maps into one write
 (``indexing/IndexingThread.java:127-149``).
 
-Scale shape: a shard is ≤ max_docs_per_shard docs; its flat rows live in ONE
+Scale shape: a shard is ≤ MAX_DOCS_PER_SHARD docs; its flat rows live in ONE
 doc-range group's cells (flat_group_docs is a multiple of shard_size), read
 partition-pruned + doc-id row-group-pruned. Run it per-shard from a scheduler
 (e.g. after every N micro-batches, over the shards the stream touched) — each
@@ -64,9 +64,7 @@ def compact_shard(
         documents=shard_docs.select("doc_id", "conv_id", "turn_idx", "site", "doc_len"),
         site_ids=sids,
     )
-    cat.replace_partitions(
-        blocks, "postings", "shard", [int(shard)], sort_by=["shard", "term"]
-    )
+    cat.replace_partitions(blocks, "postings", [int(shard)])
     return int(
         cat.read("postings").filter(F.col("shard") == shard).count()
     )

@@ -285,9 +285,7 @@ def _apply_upsert(
         .withColumn("bucket", flat_bucket_col(F.col("term"), nb))
         .withColumn("sgrp", sgrp_col(F.col("doc_id"), fgd)),
         "postings_flat",
-        ["bucket", "sgrp"],
         sorted(cells),
-        sort_by=["bucket", "sgrp", "doc_id", "term"],
     )
 
     # --- documents: rewrite the doc's shard partition -----------------------
@@ -301,13 +299,7 @@ def _apply_upsert(
     keep_docs = docs.filter(
         (F.col("shard") == dshard) & (F.col("doc_id") != doc_id)
     ).select("doc_id", "conv_id", "turn_idx", "site", "doc_len", "shard")
-    cat.replace_partitions(
-        keep_docs.unionByName(new_doc),
-        "documents",
-        "shard",
-        [dshard],
-        sort_by=["shard", "doc_id"],
-    )
+    cat.replace_partitions(keep_docs.unionByName(new_doc), "documents", [dshard])
 
     # --- corpus counters (maintained, never re-scanned) ---------------------
     n_docs = int(meta["n_docs"]) + (1 if st["is_insert"] else 0)
@@ -360,13 +352,7 @@ def _apply_upsert(
         re_flat, n_docs, None, cat.read("terms_global"), cfg_frozen,
         documents=shard_docs, site_ids=sids,
     )
-    cat.replace_partitions(
-        keep_blocks.unionByName(re_blocks),
-        "postings",
-        "shard",
-        [dshard],
-        sort_by=["shard", "term"],
-    )
+    cat.replace_partitions(keep_blocks.unionByName(re_blocks), "postings", [dshard])
 
     # --- commit: counters last (atomic swap — see latedata protocol) --------
     committed = dict(meta)

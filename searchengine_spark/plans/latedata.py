@@ -78,8 +78,8 @@ def apply_term_deltas(
     parallelism: int,
 ) -> int:
     """Fold exact (df, cf) increments into terms / terms_global by rewriting
-    ONLY the affected term-hash buckets (vocabulary-sized partitions —
-    Iceberg ``overwritePartitions``), reading NOTHING posting-sized.
+    ONLY the affected term-hash buckets (vocabulary-sized partitions,
+    ``TableCatalog.replace_partitions``), reading NOTHING posting-sized.
 
     ``delta_site``: (term, site, d_df, d_cf); ``delta_glob``:
     (term, d_df, d_cf). Updated rows get fresh idf (from ``n_docs_after``)
@@ -140,9 +140,7 @@ def apply_term_deltas(
             )
             .select(*TERMS_GLOBAL_COLS)
         )
-        cat.replace_partitions(
-            merged, "terms_global", "bucket", rw, sort_by=["bucket", "term"]
-        )
+        cat.replace_partitions(merged, "terms_global", rw)
 
     ts = cat.read("terms")
     rw_s = _uncommitted_buckets(ts, abuckets, mut_seq)
@@ -168,9 +166,7 @@ def apply_term_deltas(
             )
             .filter(F.col("df") > 0)
         )
-        cat.replace_partitions(
-            merged_s, "terms", "bucket", rw_s, sort_by=["bucket", "term"]
-        )
+        cat.replace_partitions(merged_s, "terms", rw_s)
     return n_vocab
 
 
@@ -197,9 +193,7 @@ def fence_orphans(
     )
     if bad:
         keep = docs.filter(F.col("shard").isin(bad) & (F.col("doc_id") < base_id))
-        cat.replace_partitions(
-            keep, "documents", "shard", bad, sort_by=["shard", "doc_id"]
-        )
+        cat.replace_partitions(keep, "documents", bad)
         removed = True
 
     blocks = cat.read("postings")
@@ -213,9 +207,7 @@ def fence_orphans(
         keep_b = blocks.filter(
             F.col("shard").isin(bad_b) & (F.col("min_doc") < base_id)
         )
-        cat.replace_partitions(
-            keep_b, "postings", "shard", bad_b, sort_by=["shard", "term"]
-        )
+        cat.replace_partitions(keep_b, "postings", bad_b)
         removed = True
 
     g0 = base_id // flat_group_docs
@@ -241,13 +233,7 @@ def fence_orphans(
             for b, g in cells:
                 cond = cond | ((F.col("bucket") == b) & (F.col("sgrp") == g))
             keep_f = flat_tail.filter(cond & (F.col("doc_id") < base_id))
-            cat.replace_partitions(
-                keep_f,
-                "postings_flat",
-                ["bucket", "sgrp"],
-                sorted(cells),
-                sort_by=["bucket", "sgrp", "doc_id", "term"],
-            )
+            cat.replace_partitions(keep_f, "postings_flat", sorted(cells))
             removed = True
     return removed
 

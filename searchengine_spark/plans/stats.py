@@ -65,14 +65,7 @@ def statistics(
     terms: DataFrame,
     build_state: DataFrame | None = None,
 ) -> dict:
-    pages = documents.groupBy("site").agg(F.count("*").alias("pages"))
-    lemmas = terms.groupBy("site").agg(F.countDistinct("term").alias("lemmas"))
-    per_site = (
-        pages.join(lemmas, "site", "left")
-        .fillna(0, subset=["lemmas"])
-        .orderBy("site")
-        .collect()
-    )
+    per_site = statistics_df(documents, terms).orderBy("site").collect()
     status, status_time, error = build_status(build_state)
     detailed = [
         {

@@ -13,6 +13,11 @@ against a minimal interface with two backends:
   ``df.writeTo(f"{cat}.{db}.{name}")`` — enabled automatically when
   ``spark.sql.catalog.*`` for an Iceberg catalog is configured.
 
+Each table's physical layout (partition columns and write order) is
+declared once, with the table, in :data:`LAYOUT` — as an Iceberg table's
+partition spec and sort order are table properties — and every write of
+that table applies it. Writers pass only the rows.
+
 Everything above this module (build pipeline, checkpoints, query path) is
 backend-agnostic, so pointing the engine at a real Iceberg catalog on a
 cluster is a config change, not a code change.
@@ -21,8 +26,51 @@ cluster is a config change, not a code change.
 from __future__ import annotations
 
 import os
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+#: table name → (partition columns, write order). The write order emulates
+#: Iceberg's ``WRITE ORDERED BY``: files sorted within their partition give
+#: parquet row-group min/max stats file-level skipping power (SURVEY §4.1
+#: pushdown row).
+#:
+#: - ``postings_flat`` by (term-hash bucket, doc-range group): an upsert
+#:   rewrites only the touched CELLS (corpus/(nb·n_groups) rows each) and the
+#:   streaming recovery fence reads only the tail group's cells; doc_id order
+#:   lets doc-range predicates (M1 old-term lookup, shard re-encode, orphan
+#:   fencing) prune row groups.
+#: - ``documents`` / ``postings`` by doc-range shard: an upsert or compaction
+#:   rewrites one shard directory, and a site-scoped query prunes shards.
+#: - ``terms`` / ``terms_global`` by term-hash bucket: a term lookup reads
+#:   one bucket, and late data rewrites only the touched buckets.
+#: - ``ann_lists`` by IVF centroid: serving reads only the probed lists.
+#:
+#: Tables absent here (index_meta, sites, mutation_journal, build_state,
+#: metrics, ann_centroids) are written unpartitioned and unsorted.
+LAYOUT: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
+    "postings_flat": (("bucket", "sgrp"), ("bucket", "sgrp", "doc_id", "term")),
+    "documents": (("shard",), ("shard", "doc_id")),
+    "postings": (("shard",), ("shard", "term")),
+    "terms": (("bucket",), ("bucket", "term")),
+    "terms_global": (("bucket",), ("bucket", "term")),
+    "ann_lists": (("cid",), ("cid", "vec_id")),
+}
+
+
+def _laid_out(df: DataFrame, name: str) -> tuple[DataFrame, tuple[str, ...]]:
+    """(``df`` in ``name``'s write order, ``name``'s partition columns)."""
+    parts, order = LAYOUT.get(name, ((), ()))
+    return (df.sortWithinPartitions(*order) if order else df), parts
+
+
+def _write_parquet(df: DataFrame, parts: tuple[str, ...], mode: str, path: str) -> None:
+    writer = df.write.mode(mode)
+    if parts:
+        writer = writer.partitionBy(*parts)
+    writer.parquet(path)
 
 
 def tiny_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
@@ -92,25 +140,20 @@ class TableCatalog:
             return self.spark.read.table(self._ident(name))
         return self.spark.read.parquet(self.path(name))
 
-    def write(self, df: DataFrame, name: str, mode: str = "overwrite",
-              partition_by: list[str] | None = None, sort_by: list[str] | None = None) -> None:
-        """Write a table. ``sort_by`` emulates Iceberg's ``WRITE ORDERED BY``
-        (file-level min/max skipping on the sort key — SURVEY §4.1 pushdown
-        row) by sorting within partitions before writing, which gives parquet
-        row-group min/max stats the same pruning power."""
-        if sort_by:
-            df = df.sortWithinPartitions(*sort_by)
+    def write(self, df: DataFrame, name: str, mode: str = "overwrite") -> None:
+        """Overwrite or append to a table, laid out by its :data:`LAYOUT`
+        entry. Under Iceberg, an overwrite (re)creates the table with that
+        partition spec, and an append to an absent table creates it, as the
+        parquet branch does."""
+        df, parts = _laid_out(df, name)
         if self.iceberg_catalog:
             w = df.writeTo(self._ident(name))
-            if mode == "overwrite":
-                w.createOrReplace()
-            else:
+            if mode == "append" and self.exists(name):
                 w.append()
+            else:
+                (w.partitionedBy(*parts) if parts else w).createOrReplace()
             return
-        writer = df.write.mode("overwrite" if mode == "overwrite" else "append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.path(name))
+        _write_parquet(df, parts, mode, self.path(name))
 
     def _swap_dir(self, src: str, dst: str) -> None:
         """Crash-safe directory replace: move the old dir ASIDE (rename, not
@@ -177,31 +220,20 @@ class TableCatalog:
                 out.append(name)
         return out
 
-    def replace(
-        self,
-        df: DataFrame,
-        name: str,
-        sort_by: list[str] | None = None,
-        partition_by: list[str] | None = None,
-    ) -> None:
+    def replace(self, df: DataFrame, name: str) -> None:
         """Overwrite a table whose current contents feed ``df`` (read-modify-
         write) — or whose previous version must survive a crashed rebuild:
         materialize to a temp dir first, then swap crash-safely (a crash
         mid-write leaves the old table untouched; a crash mid-swap leaves a
         ``__old`` twin that :meth:`recover_swaps`/:meth:`recover_all`
-        restores). With Iceberg this is a plain ``createOrReplace``
+        restores). With Iceberg this is a plain overwrite :meth:`write`
         (snapshot isolation)."""
         if self.iceberg_catalog:
-            self.write(df, name, mode="overwrite", sort_by=sort_by,
-                       partition_by=partition_by)
+            self.write(df, name)
             return
-        if sort_by:
-            df = df.sortWithinPartitions(*sort_by)
+        df, parts = _laid_out(df, name)
         tmp = self.path(f"{name}__tmp")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
+        _write_parquet(df, parts, "overwrite", tmp)
         final = self.path(name)
         self._swap_dir(tmp, final)
         # the swap bypassed Spark's writers: drop the stale file-listing
@@ -209,45 +241,44 @@ class TableCatalog:
         self.spark.catalog.refreshByPath(final)
 
     def replace_partitions(
-        self,
-        df: DataFrame,
-        name: str,
-        partition_col: str | list[str],
-        partition_values: list,
-        sort_by: list[str] | None = None,
+        self, df: DataFrame, name: str, partition_values: list
     ) -> None:
         """Replace EXACTLY the named partitions of a partitioned table with
-        ``df``'s content (Iceberg ``overwritePartitions`` semantics — the
-        M1 incremental-upsert primitive; ``IndexingThread.java:199-224``
-        deletes+reinserts one page's rows, here one partition's files).
+        ``df``'s content — the M1 incremental-upsert primitive
+        (``IndexingThread.java:199-224`` deletes+reinserts one page's rows,
+        here one partition's files).
 
-        ``partition_col`` may be a list for multi-level layouts (e.g.
-        postings_flat's (bucket, sgrp) cells); ``partition_values`` is then a
-        list of tuples. Every named partition is removed; partitions of that
-        list present in ``df`` are rewritten; untouched partitions' files are
-        NEVER rewritten (asserted byte-identical by
-        ``test_incremental_partition_stability``). ``df`` must contain only
-        rows belonging to the named partitions. Parquet backend: write to a
-        temp dir first (the inputs may read the very files being replaced),
-        then swap per partition directory.
+        ``partition_values`` holds one value per partition, or one tuple per
+        partition of a multi-column layout (postings_flat's (bucket, sgrp)
+        cells), in :data:`LAYOUT` column order. Every named partition is
+        emptied, then refilled from ``df``: a named partition with no rows
+        in ``df`` ends up empty. Other partitions' files are NEVER rewritten
+        (asserted byte-identical by ``test_incremental_partition_stability``).
+        ``df`` must contain only rows belonging to the named partitions.
+        Parquet backend: write to a temp dir first (the inputs may read the
+        very files being replaced), then swap per partition directory.
+        Iceberg: ``overwrite`` with the OR of the partitions' equality
+        predicates (snapshot isolation makes read-your-own-overwrite safe).
         """
+        df, parts = _laid_out(df, name)
+        keys = [tuple(v) if isinstance(v, (tuple, list)) else (v,)
+                for v in partition_values]
         if self.iceberg_catalog:
-            # snapshot isolation makes read-your-own-overwrite safe
-            w = df.writeTo(self._ident(name))
-            w.overwritePartitions()
+            cond = F.lit(False)
+            for vals in keys:
+                cond = cond | reduce(
+                    and_, (F.col(c) == x for c, x in zip(parts, vals))
+                )
+            df.writeTo(self._ident(name)).overwrite(cond)
             return
         import shutil
 
-        cols = [partition_col] if isinstance(partition_col, str) else list(partition_col)
-        if sort_by:
-            df = df.sortWithinPartitions(*sort_by)
         tmp = self.path(f"{name}__ptmp")
         shutil.rmtree(tmp, ignore_errors=True)
-        df.write.mode("overwrite").partitionBy(*cols).parquet(tmp)
+        _write_parquet(df, parts, "overwrite", tmp)
         final = self.path(name)
-        for v in partition_values:
-            vals = (v,) if not isinstance(v, (tuple, list)) else tuple(v)
-            sub = os.path.join(*(f"{c}={x}" for c, x in zip(cols, vals)))
+        for vals in keys:
+            sub = os.path.join(*(f"{c}={x}" for c, x in zip(parts, vals)))
             dst = os.path.join(final, sub)
             src = os.path.join(tmp, sub)
             if os.path.isdir(src):

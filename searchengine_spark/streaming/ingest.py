@@ -81,6 +81,14 @@ from searchengine_spark.plans.latedata import apply_term_deltas, update_sites
 from searchengine_spark.sources.catalog import TableCatalog
 from searchengine_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
+#: Streaming auto-compaction cadence: after every this many committed
+#: foreachBatch epochs, the stream compacts the shards the append path may
+#: have fragmented (plans/compaction.compact_shard over appended_shards), so
+#: a long-running stream converges to fresh-build block geometry without a
+#: manual maintenance call. Each compaction is a bounded per-shard job — the
+#: stream pays it between batches, never inside one.
+COMPACT_EVERY_EPOCHS = 8
+
 
 def append_turns(
     spark: SparkSession,
@@ -159,16 +167,17 @@ def append_turns(
     docs = cat.read("documents")
     seen = docs.filter(F.col("conv_id").isin(convs)).select("conv_id", "turn_idx")
     new_keys = batch_keys.join(seen, ["conv_id", "turn_idx"], "left_anti")
-    ids = assign_doc_ids(
-        new_keys, parallelism=cfg.parallelism, expect_unique=False
-    ).withColumn("doc_id", F.col("doc_id") + F.lit(base_id))
+    ranked = assign_doc_ids(new_keys, parallelism=cfg.parallelism)
     # PIN the assignment before any write: its lineage anti-joins the
     # documents table, and appending to that table invalidates the cached
     # plan (Spark refreshes caches on insert-into-path) — a re-execution
     # would then anti-join against the already-appended rows and silently
     # drop the batch from the posting writes. localCheckpoint truncates the
-    # lineage to materialized partitions.
-    ids = ids.localCheckpoint(eager=True)
+    # lineage to materialized partitions, so the cache can go.
+    ids = ranked.withColumn(
+        "doc_id", F.col("doc_id") + F.lit(base_id)
+    ).localCheckpoint(eager=True)
+    ranked.unpersist()
     n_new = ids.count()
     if n_new == 0:
         if epoch is not None:
@@ -195,14 +204,11 @@ def append_turns(
     flat_new = flat_new.localCheckpoint(eager=True)
 
     # --- postings_flat / documents: pure file appends ------------------------
-    cat.write(flat_new, "postings_flat", mode="append",
-              partition_by=["bucket", "sgrp"],
-              sort_by=["bucket", "sgrp", "doc_id", "term"])
+    cat.write(flat_new, "postings_flat", mode="append")
     docs_new = ids.select(
         "doc_id", "conv_id", "turn_idx", "site", "doc_len"
     ).withColumn("shard", (F.col("doc_id") / F.lit(shard_size)).cast("long"))
-    cat.write(docs_new, "documents", mode="append", partition_by=["shard"],
-              sort_by=["shard", "doc_id"])
+    cat.write(docs_new, "documents", mode="append")
 
     # --- corpus counters (maintained, no documents scan) ---------------------
     agg = flat_new.filter(F.col("bucket") < 0).agg(
@@ -267,10 +273,7 @@ def append_turns(
         )
         .drop("_max_bid")
     )
-    cat.write(
-        appended, "postings", mode="append", partition_by=["shard"],
-        sort_by=["shard", "term"],
-    )
+    cat.write(appended, "postings", mode="append")
 
     # --- commit: counters last (atomic swap) ---------------------------------
     meta.update(
@@ -340,10 +343,9 @@ def stream_transcripts(
             spark, warehouse, batch_df, cfg,
             epoch=int(epoch_id), run_id=_run_id(),
         )
-        # auto-compaction: every N committed epochs, squash the block tails
-        # the append path fragments (bounded per-shard jobs between batches)
-        n = cfg.compact_every_epochs
-        if n and epoch_id > 0 and int(epoch_id) % n == 0:
+        # auto-compaction: squash the block tails the append path
+        # fragments (bounded per-shard jobs between batches)
+        if epoch_id > 0 and int(epoch_id) % COMPACT_EVERY_EPOCHS == 0:
             from searchengine_spark.plans.compaction import (
                 appended_shards,
                 compact_shard,

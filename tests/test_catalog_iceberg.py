@@ -19,6 +19,10 @@ class _WriterV2:
     def __init__(self, log, ident):
         self.log, self.ident = log, ident
 
+    def partitionedBy(self, *cols):
+        self.log.append(("partitionedBy", self.ident, cols))
+        return self
+
     def createOrReplace(self):
         self.log.append(("createOrReplace", self.ident))
 
@@ -27,6 +31,9 @@ class _WriterV2:
 
     def overwritePartitions(self):
         self.log.append(("overwritePartitions", self.ident))
+
+    def overwrite(self, condition):
+        self.log.append(("overwrite", self.ident, condition))
 
 
 class _FakeDF:
@@ -44,10 +51,11 @@ class _FakeDF:
 class _FakeCatalogAPI:
     def __init__(self, log):
         self.log = log
+        self.exists = True
 
     def tableExists(self, ident):
         self.log.append(("tableExists", ident))
-        return True
+        return self.exists
 
 
 class _FakeReader:
@@ -59,14 +67,23 @@ class _FakeReader:
         return "df"
 
 
+class _FakeSparkContext:
+    def parallelize(self, rows, n):
+        return rows
+
+
 class _FakeSpark:
     def __init__(self, log):
         self.log = log
         self.catalog = _FakeCatalogAPI(log)
         self.read = _FakeReader(log)
+        self.sparkContext = _FakeSparkContext()
 
     def sql(self, q):
         self.log.append(("sql", q))
+
+    def createDataFrame(self, rows, schema):
+        return _FakeDF(self.log)
 
 
 @pytest.fixture()
@@ -78,23 +95,60 @@ def cat_and_log():
 
 
 def test_iceberg_write_create_or_replace(cat_and_log):
+    """An overwrite creates the table with its declared partition spec and
+    writes rows in its declared order."""
     cat, log = cat_and_log
-    cat.write(_FakeDF(log), "postings", mode="overwrite", sort_by=["term"])
-    assert ("sortWithinPartitions", ("term",)) in log
+    cat.write(_FakeDF(log), "postings", mode="overwrite")
+    assert ("sortWithinPartitions", ("shard", "term")) in log
+    assert ("partitionedBy", "ice.db.postings", ("shard",)) in log
     assert ("createOrReplace", "ice.db.postings") in log
 
 
+_STATE_ROW = ("documents", -1, "RUNNING", 0, "", 0.0, 0.0, "", "r")
+
+
 def test_iceberg_write_append(cat_and_log):
+    """Build-state markers and metrics go through the catalog, so resume and
+    ``statistics`` read them back under Iceberg too."""
+    from searchengine_spark.plans.build_index import _append_metrics, _append_state
+
     cat, log = cat_and_log
-    cat.write(_FakeDF(log), "build_state", mode="append")
+    _append_state(cat, [_STATE_ROW])
+    _append_metrics(cat, [("r", "documents", "seconds", 1.0, 0.0)])
     assert ("append", "ice.db.build_state") in log
+    assert ("append", "ice.db.metrics") in log
 
 
-def test_iceberg_replace_partitions(cat_and_log):
-    """The M1 upsert path maps to DataFrameWriterV2.overwritePartitions."""
+def test_iceberg_append_creates_absent_table(cat_and_log):
+    """An append to an absent table creates it, as the parquet branch does,
+    with the table's declared partition spec."""
+    from searchengine_spark.plans.build_index import _append_state
+
     cat, log = cat_and_log
-    cat.replace_partitions(_FakeDF(log), "postings", "shard", [3])
-    assert ("overwritePartitions", "ice.db.postings") in log
+    cat.spark.catalog.exists = False
+    _append_state(cat, [_STATE_ROW])
+    cat.write(_FakeDF(log), "documents", mode="append")
+    assert ("createOrReplace", "ice.db.build_state") in log
+    assert ("partitionedBy", "ice.db.documents", ("shard",)) in log
+    assert ("createOrReplace", "ice.db.documents") in log
+    assert not any(e[0] == "append" for e in log)
+
+
+def test_iceberg_replace_partitions(spark, cat_and_log):
+    """The M1 upsert path overwrites exactly the named partitions: rows of
+    every named cell go (also when ``df`` has none for it), rows of any
+    other cell stay — not ``overwritePartitions``, which keeps a named
+    partition that ``df`` lacks and replaces an unpartitioned table."""
+    cat, log = cat_and_log
+    cat.replace_partitions(_FakeDF(log), "postings_flat", [(3, 7), (5, 7)])
+    assert ("sortWithinPartitions", ("bucket", "sgrp", "doc_id", "term")) in log
+    [cond] = [e[2] for e in log if e[:2] == ("overwrite", "ice.db.postings_flat")]
+    assert not any(e[0] == "overwritePartitions" for e in log)
+    cells = spark.createDataFrame(
+        [(3, 7), (3, 8), (5, 7), (5, 6), (4, 7)], "bucket int, sgrp int"
+    )
+    hit = sorted(tuple(r) for r in cells.filter(cond).collect())
+    assert hit == [(3, 7), (5, 7)]
 
 
 def test_iceberg_read_exists_drop(cat_and_log):
@@ -116,7 +170,7 @@ def _iceberg_on_classpath(spark) -> bool:
 
 
 def test_iceberg_real_round_trip(spark, tmp_path):
-    """Full write→read→overwritePartitions round trip through a real local
+    """Full write→read round trip through a real local
     Iceberg catalog. Skips when the runtime jars are absent (this sandbox);
     runs as-is on any cluster image that ships Iceberg."""
     if not _iceberg_on_classpath(spark):
