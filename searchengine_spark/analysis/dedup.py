@@ -20,6 +20,12 @@ byte-identical SQL.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+from contextlib import contextmanager
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 from searchengine_spark.analysis.textstats import (
@@ -36,6 +42,37 @@ LSH_BANDS = 4  # 4 bands × 4 rows
 
 
 STAR_PAIRS_CAP = 64  # buckets up to this size emit ALL pairs (exact recall)
+
+
+@contextmanager
+def persisted(df: DataFrame):
+    """``df`` cached (MEMORY_AND_DISK) for the ``with`` body, unpersisted
+    when the body exits. The cache holds a strong reference, so nothing
+    else releases it. Anything built on the cached frame must be computed
+    inside the body (:func:`checkpointed`); after the exit it would
+    recompute the cached frame's whole lineage."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def checkpointed(df: DataFrame) -> DataFrame:
+    """``df`` computed now and written to the checkpoint directory; the
+    returned frame reads those files, so the result stays distributed and
+    outlives the caches it was computed from. Uses ``spark.checkpoint.dir``
+    (shared storage on a cluster), else a temporary local directory removed
+    when the process exits; with
+    ``spark.cleaner.referenceTracking.cleanCheckpoints`` (on in
+    :func:`~searchengine_spark.session.get_spark`) the files go as soon as
+    the result is garbage collected."""
+    sc = df.sparkSession.sparkContext
+    if sc.getCheckpointDir() is None:
+        d = tempfile.mkdtemp(prefix="spark-checkpoint-")
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        sc.setCheckpointDir(d)
+    return df.checkpoint(eager=True)
 
 
 def star_pairs(
@@ -74,29 +111,26 @@ def star_pairs(
     # signature shuffle for the LSH/MinHash/SimHash callers). The frame is
     # (id, bucket-key) rows — tiny next to the corpus — so one
     # MEMORY_AND_DISK copy trades O(1) small storage for 4× the dominant
-    # cost. No unpersist handle on a lazy return: ContextCleaner reclaims
-    # the blocks when the result DataFrame is garbage collected.
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    stats = df.groupBy(*bucket_cols).agg(
-        F.count("*").alias("_cnt"), F.min(id_col).alias("_canon")
-    )
-    member = df.join(stats, bucket_cols)
-    small = member.filter(F.col("_cnt") <= all_pairs_cap)
-    small_pairs = (
-        small.select(*bucket_cols, F.col(id_col).alias("a"))
-        .join(small.select(*bucket_cols, F.col(id_col).alias("b")), bucket_cols)
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-    )
-    large_pairs = (
-        member.filter(
-            (F.col("_cnt") > all_pairs_cap) & (F.col(id_col) != F.col("_canon"))
+    # cost. The pairs are checkpointed before the copy is released.
+    with persisted(df) as df:
+        stats = df.groupBy(*bucket_cols).agg(
+            F.count("*").alias("_cnt"), F.min(id_col).alias("_canon")
         )
-        .select(F.col("_canon").alias("a"), F.col(id_col).alias("b"))
-    )
-    return small_pairs.unionByName(large_pairs).distinct()
+        member = df.join(stats, bucket_cols)
+        small = member.filter(F.col("_cnt") <= all_pairs_cap)
+        small_pairs = (
+            small.select(*bucket_cols, F.col(id_col).alias("a"))
+            .join(small.select(*bucket_cols, F.col(id_col).alias("b")), bucket_cols)
+            .filter(F.col("a") < F.col("b"))
+            .select("a", "b")
+        )
+        large_pairs = (
+            member.filter(
+                (F.col("_cnt") > all_pairs_cap) & (F.col(id_col) != F.col("_canon"))
+            )
+            .select(F.col("_canon").alias("a"), F.col(id_col).alias("b"))
+        )
+        return checkpointed(small_pairs.unionByName(large_pairs).distinct())
 
 
 def _minhash_col(h, k):
@@ -109,25 +143,24 @@ def _minhash_col(h, k):
 def exact_duplicates(documents: DataFrame) -> DataFrame:
     """(doc_id, text_hash, canonical_doc, is_dup): canonical = min doc_id of
     the identical-text group; eligible docs only."""
-    from pyspark import StorageLevel
-
     # referenced twice (canonical aggregate + join-back); persisting the
     # (doc_id, 32-char hash) projection avoids a second full-text corpus
     # scan + md5 pass
-    hashed = (
+    with persisted(
         documents.filter(F.col("text").isNotNull() & (F.length("text") > 0))
         .select("doc_id", F.md5("text").alias("text_hash"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # groupBy+join, not min().over(window): a boilerplate hash group of 10^9
-    # docs would otherwise buffer in one window task (see star_pairs)
-    canon = hashed.groupBy("text_hash").agg(F.min("doc_id").alias("canonical_doc"))
-    return hashed.join(canon, "text_hash").select(
-        "doc_id",
-        "text_hash",
-        "canonical_doc",
-        (F.col("doc_id") != F.col("canonical_doc")).cast("int").alias("is_dup"),
-    )
+    ) as hashed:
+        # groupBy+join, not min().over(window): a boilerplate hash group of
+        # 10^9 docs would otherwise buffer in one window task (see star_pairs)
+        canon = hashed.groupBy("text_hash").agg(F.min("doc_id").alias("canonical_doc"))
+        return checkpointed(
+            hashed.join(canon, "text_hash").select(
+                "doc_id",
+                "text_hash",
+                "canonical_doc",
+                (F.col("doc_id") != F.col("canonical_doc")).cast("int").alias("is_dup"),
+            )
+        )
 
 
 def keep_best_per_group(documents: DataFrame, groups: DataFrame) -> DataFrame:
@@ -302,46 +335,44 @@ def simhash_pairs(
     chunks = max_hamming + 1
     w = bits // chunks
     mask = (1 << w) - 1
-    from pyspark import StorageLevel
-
     # sigs is referenced three times (chunk banding + both sides of the
     # verify join); one persisted (doc_id, long) copy keeps the simhash
     # job — corpus scan + two shuffles — from running three times
-    sigs = simhash(documents, bits).persist(StorageLevel.MEMORY_AND_DISK)
-    # ONE pass over the signatures (see minhash_lsh_pairs): the previous
-    # per-chunk unionByName re-planned the whole simhash job (scan + two
-    # shuffles) once per chunk. Same chunk-key expressions, same values.
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("band"),
-                        (F.shiftright("simhash", c * w) % F.lit(mask + 1)).alias(
-                            "key"
-                        ),
-                    )
-                    for c in range(chunks)
-                ]
+    with persisted(simhash(documents, bits)) as sigs:
+        # ONE pass over the signatures (see minhash_lsh_pairs): the previous
+        # per-chunk unionByName re-planned the whole simhash job (scan + two
+        # shuffles) once per chunk. Same chunk-key expressions, same values.
+        bands = sigs.select(
+            "doc_id",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(c).alias("band"),
+                            (F.shiftright("simhash", c * w) % F.lit(mask + 1)).alias(
+                                "key"
+                            ),
+                        )
+                        for c in range(chunks)
+                    ]
+                )
+            ).alias("_ck"),
+        ).select("doc_id", "_ck.band", "_ck.key")
+        cand = star_pairs(bands, ["band", "key"], "doc_id")
+        sa = sigs.select(F.col("doc_id").alias("a"), F.col("simhash").alias("_sa"))
+        sb = sigs.select(F.col("doc_id").alias("b"), F.col("simhash").alias("_sb"))
+        return checkpointed(
+            cand.join(sa, "a")
+            .join(sb, "b")
+            .select(
+                "a",
+                "b",
+                F.bit_count(
+                    F.col("_sa").bitwiseXOR(F.col("_sb"))
+                ).cast("int").alias("hamming"),
             )
-        ).alias("_ck"),
-    ).select("doc_id", "_ck.band", "_ck.key")
-    cand = star_pairs(bands, ["band", "key"], "doc_id")
-    sa = sigs.select(F.col("doc_id").alias("a"), F.col("simhash").alias("_sa"))
-    sb = sigs.select(F.col("doc_id").alias("b"), F.col("simhash").alias("_sb"))
-    return (
-        cand.join(sa, "a")
-        .join(sb, "b")
-        .select(
-            "a",
-            "b",
-            F.bit_count(
-                F.col("_sa").bitwiseXOR(F.col("_sb"))
-            ).cast("int").alias("hamming"),
+            .filter(F.col("hamming") <= max_hamming)
         )
-        .filter(F.col("hamming") <= max_hamming)
-    )
 
 
 def ngram_jaccard_pairs(
@@ -356,60 +387,58 @@ def ngram_jaccard_pairs(
     pair join — the skewed-key guard; exact Jaccard is unaffected for pairs
     that share at least one surviving shingle (verification then uses the
     full shingle sets)."""
-    from pyspark import StorageLevel
-
     # distinct (doc_id, ngram) — referenced by the size aggregate, the df
     # filter, both sides of the candidate join, and both sides of the exact
     # re-verify: six re-plans of the tokenize+distinct job without a persist
-    grams = word_ngrams(documents, n).persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = grams.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    idx = grams
-    if max_shingle_df is not None:
-        rare = (
-            grams.groupBy("ngram")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_shingle_df)
-            .select("ngram")
+    with persisted(word_ngrams(documents, n)) as grams:
+        sizes = grams.groupBy("doc_id").agg(F.count("*").alias("sz"))
+        idx = grams
+        if max_shingle_df is not None:
+            rare = (
+                grams.groupBy("ngram")
+                .agg(F.count("*").alias("df"))
+                .filter(F.col("df") <= max_shingle_df)
+                .select("ngram")
+            )
+            idx = grams.join(rare, "ngram")
+        a = idx.alias("a")
+        b = idx.alias("b")
+        inter = (
+            a.join(
+                b,
+                (F.col("a.ngram") == F.col("b.ngram"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .groupBy(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
+            .agg(F.count("*").alias("inter_rare"))
         )
-        idx = grams.join(rare, "ngram")
-    a = idx.alias("a")
-    b = idx.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.ngram") == F.col("b.ngram"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        # exact intersection over the FULL shingle sets for surviving pairs
+        full = grams
+        exact = (
+            inter.join(full.alias("fa"), (F.col("a") == F.col("fa.doc_id")))
+            .join(
+                full.alias("fb"),
+                (F.col("b") == F.col("fb.doc_id"))
+                & (F.col("fa.ngram") == F.col("fb.ngram")),
+            )
+            .groupBy("a", "b")
+            .agg(F.count("*").alias("inter"))
         )
-        .groupBy(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
-        .agg(F.count("*").alias("inter_rare"))
-    )
-    # exact intersection over the FULL shingle sets for surviving pairs
-    full = grams
-    exact = (
-        inter.join(full.alias("fa"), (F.col("a") == F.col("fa.doc_id")))
-        .join(
-            full.alias("fb"),
-            (F.col("b") == F.col("fb.doc_id"))
-            & (F.col("fa.ngram") == F.col("fb.ngram")),
+        return checkpointed(
+            exact.join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("sz", "sza"), "a")
+            .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("sz", "szb"), "b")
+            .select(
+                "a",
+                "b",
+                # raw ratio of exact ints — bit-identical across engines (IEEE
+                # division), so NO rounding; rounding rationals risks half-rule
+                # mismatches between engines
+                (F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter"))).alias(
+                    "jaccard"
+                ),
+            )
+            .filter(F.col("jaccard") >= threshold)
         )
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        exact.join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("sz", "sza"), "a")
-        .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("sz", "szb"), "b")
-        .select(
-            "a",
-            "b",
-            # raw ratio of exact ints — bit-identical across engines (IEEE
-            # division), so NO rounding; rounding rationals risks half-rule
-            # mismatches between engines
-            (F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter"))).alias(
-                "jaccard"
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
 
 
 def connected_components(

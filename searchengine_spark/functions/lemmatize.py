@@ -190,6 +190,37 @@ def query_lemmas(query: str) -> set[str]:
     return set(lemmatize_text(query))
 
 
+#: distinct tokens one worker's token→lemmas memo holds. Reaching the cap
+#: clears the memo (the Zipf head refills it within a batch), so a
+#: long-tail vocabulary cannot grow a worker without bound while a hit
+#: stays one ``dict.get``; an LRU would add a Python-level call per token
+#: on the build's hottest loop. At ~250 bytes an entry, ≤ ~25 MB a worker.
+TOKEN_CACHE_CAP = 100_000
+
+
+def cached_lemma_counter():
+    """:func:`lemma_counts` for a stream of texts, memoizing each token's
+    lemmas in a dict of at most :data:`TOKEN_CACHE_CAP` entries. Tokens
+    lemmatize independently, so the memo preserves determinism."""
+    cache: dict[str, list[str]] = {}
+
+    def count_text(text):
+        if not text:
+            return {}
+        counts: dict[str, int] = {}
+        for tok in tokenize(strip_html(text)):
+            r = cache.get(tok)
+            if r is None:
+                if len(cache) >= TOKEN_CACHE_CAP:
+                    cache.clear()
+                r = cache[tok] = lemmatize_token(tok)
+            for lem in r:
+                counts[lem] = counts.get(lem, 0) + 1
+        return counts
+
+    return count_text
+
+
 # --- Spark-side vectorized wrapper ------------------------------------------
 # Iterator[pd.Series] → Iterator[pd.Series] form so any per-worker setup cost
 # is paid once per python worker, not per batch (SURVEY §2.6 / §4.1: the
@@ -207,26 +238,11 @@ def lemma_counts_udf():
 
     @F.pandas_udf("map<string,int>")
     def _counts(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        # worker-persistent token→lemmas cache: Zipf-distributed corpora hit
+        # worker-persistent token→lemmas memo: Zipf-distributed corpora hit
         # it for ~all occurrences, replacing regex+suffix work with one dict
-        # lookup. Pure function of the token, so caching preserves
-        # determinism; the Iterator form keeps the dict across batches
-        # (the per-worker-state pattern, SURVEY §2.6).
-        cache: dict[str, list[str]] = {}
-
-        def count_text(text):
-            if not text:
-                return {}
-            counts: dict[str, int] = {}
-            for tok in tokenize(strip_html(text)):
-                r = cache.get(tok)
-                if r is None:
-                    r = lemmatize_token(tok)
-                    cache[tok] = r
-                for lem in r:
-                    counts[lem] = counts.get(lem, 0) + 1
-            return counts
-
+        # lookup. The Iterator form keeps it across batches (the
+        # per-worker-state pattern, SURVEY §2.6).
+        count_text = cached_lemma_counter()
         for s in batches:
             yield s.map(count_text)
 

@@ -9,12 +9,19 @@ Tiebreak is deterministic here — (score DESC, doc_id ASC), where doc_id order
 == (conv_id, turn_idx) order — replacing the reference's unstable HashMap
 iteration order.
 
-One physical path, :class:`BlockSearcher`: scan only the query terms'
-compressed blocks (parquet min/max pruning on the term-sorted table), one
-``groupBy("shard").applyInPandas`` job running the per-shard kernel —
-block-max WAND (bm25) / early-exit intersection (reference) with a per-shard
-top-K heap — then a driver merge of ≤ shards×K rows (SURVEY §4.3.4). The
-pandas oracle (``oracle/oracle.py``) and the DuckDB oracles in
+One kernel, two executors (:class:`BlockSearcher`, SURVEY §4.3.4): scan
+only the query terms' compressed blocks (parquet min/max pruning on the
+term-sorted table) and run :func:`make_shard_kernel` — block-max WAND (bm25)
+/ early-exit intersection (reference) with a per-shard top-K heap — once per
+doc-range shard, then merge ≤ shards×K rows on the driver. A query whose
+estimated postings (Σ global df of its scanned terms) fit under
+:data:`DRIVER_KERNEL_MAX_POSTINGS` reads its blocks with one Arrow
+``toPandas()`` and runs the kernel on the driver, skipping the round trip
+through Spark's Python workers that dominates a small query's latency;
+a query too large for the driver's memory runs the same kernel in one
+``groupBy("shard").applyInPandas`` job. Every request predicate is one SQL string, so a
+filter costs one Python→JVM call however many literals it lists. The pandas
+oracle (``oracle/oracle.py``) and the DuckDB oracles in
 ``__spark_entry__.py`` are its cross-checks.
 
 Rank determinism across float addition orders: both this module and the
@@ -30,7 +37,6 @@ from collections import OrderedDict
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from searchengine_spark.config import BM25Params, EngineConfig
 from searchengine_spark.functions.codec import varint_decode
@@ -49,6 +55,18 @@ SITE_TERM = "#site"
 SCORE_DECIMALS = 9
 
 KERNEL_SCHEMA = "shard long, doc_id long, score double, cand long"
+
+#: a query whose estimated postings (Σ global df of its lemmas, plus n_docs
+#: per pseudo-term it scans) are at most this runs the shard kernel on the
+#: driver over one Arrow scan of its blocks; a larger one runs it in a
+#: ``groupBy("shard").applyInPandas`` job on the executors, the only
+#: executor for a query whose blocks would not fit on the driver (bm25 at
+#: 10^12 turns scans n_docs doc-length postings). Sized by driver memory: a
+#: scanned posting costs ~2.4 bytes of collected Arrow result (counted
+#: against ``spark.driver.maxResultSize``, 1 GiB by default), 3.4 in the
+#: pandas frame and ~5 at the kernel's peak, ~11 in all, so the gate holds
+#: one query's driver working set near 256 MiB.
+DRIVER_KERNEL_MAX_POSTINGS = 24_000_000
 
 #: page defaults — the reference's API defaults
 #: (controllers/ApiController.java:59-64)
@@ -87,9 +105,35 @@ class EmptySearchQueryError(ValueError):
     """Analog of EmptySearchQueryException → 400 (SearchServiceImpl.java:42-45)."""
 
 
+def sql_literal(v) -> str:
+    """A Spark SQL literal for a str or an int. Strings are quoted with
+    ``\\`` and ``'`` backslash-escaped, as the default string-literal
+    parser reads them."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return str(int(v))
+
+
+def sql_in(col: str, values) -> str:
+    """``col IN (v, …)`` as one SQL predicate string — one Python→JVM call
+    per ``DataFrame.filter``, where ``Column.isin`` makes several per
+    literal. No values gives ``false`` (``IN ()`` does not parse)."""
+    vals = list(values)
+    if not vals:
+        return "false"
+    return f"{col} IN ({', '.join(map(sql_literal, vals))})"
+
+
 # --------------------------------------------------------------------------
 # Block-max WAND path over compressed posting blocks
 # --------------------------------------------------------------------------
+def _empty_kernel_rows() -> pd.DataFrame:
+    """No kernel output rows, typed like :data:`KERNEL_SCHEMA`."""
+    return pd.DataFrame(columns=["shard", "doc_id", "score", "cand"]).astype(
+        {"shard": np.int64, "doc_id": np.int64, "score": np.float64, "cand": np.int64}
+    )
+
+
 def _decode_block_rows(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """Decode a set of same-term block rows (sorted by block_id/min_doc) into
     (doc_ids, tfs) numpy arrays."""
@@ -120,7 +164,8 @@ def make_shard_kernel(
     allowed_site_ids: list[int] | None,
     exact_count: bool = False,
 ):
-    """Build the per-shard applyInPandas kernel.
+    """Build the per-shard kernel, which runs on the driver or in
+    ``applyInPandas`` alike.
 
     Input group: all block rows of the query terms (+ DOCLEN_TERM for bm25,
     + SITE_TERM when site-filtered) in one doc-range shard. Output: per-shard
@@ -142,11 +187,7 @@ def make_shard_kernel(
         cand = len(ids) if cand_override is None else cand_override
         if len(ids) == 0:
             if not cand:
-                return pd.DataFrame(
-                    columns=["shard", "doc_id", "score", "cand"]
-                ).astype(
-                    {"shard": np.int64, "doc_id": np.int64, "score": np.float64, "cand": np.int64}
-                )
+                return _empty_kernel_rows()
             # every candidate pruned by θ, but the exact count survives:
             # sentinel row carries it (driver filters doc_id < 0 after
             # summing per-shard counts)
@@ -439,6 +480,11 @@ class BlockSearcher:
         # adversarial stream of distinct cold terms can't grow a serving
         # process without bound.
         self._term_stats_cache: dict[str, list] = _LRUCache()
+        # which executor served the last query and what it read: executor
+        # ("driver" / "spark", None when the plan short-circuits),
+        # est_postings, blocks and shards scanned (None on the Spark path,
+        # whose scan runs in the job), candidates (the returned count)
+        self.last_trace: dict = {}
 
     # -- query planning (driver side, analog of SearchServiceImpl.java:48-105)
     def _plan(self, query: str, site: str | None, mode: str):
@@ -452,23 +498,22 @@ class BlockSearcher:
             from searchengine_spark.operators.postings import term_bucket_py
 
             bks = sorted({term_bucket_py(t, self.term_buckets) for t in missing})
-            fetched = (
-                self.terms.filter(F.col("bucket").isin(bks))
-                .filter(F.col("term").isin(missing))
-                .select("term", "site", "df")
-                .collect()
-            )
+            fetched = self.terms.filter(
+                f"{sql_in('bucket', bks)} AND {sql_in('term', missing)}"
+            ).collect()
             for t in missing:
                 self._term_stats_cache[t] = []
             for r in fetched:
                 self._term_stats_cache[r["term"]].append(r)
         per_site: dict[str, set[str]] = {}
         idf: dict[str, float] = {}
+        postings = 0  # Σ global df: the lemmas' postings the scan reads at most
         for t in tl:
             df_global = 0
             for r in self._term_stats_cache[t]:
                 per_site.setdefault(r["site"], set()).add(r["term"])
                 df_global += int(r["df"])
+            postings += df_global
             # idf is computed at QUERY time from (Σ_site df == global df,
             # current n_docs) — never trusted from a stored column, so
             # incremental updates (which shift n_docs/df) need no idf
@@ -491,7 +536,7 @@ class BlockSearcher:
         )
         # shard-scan pruning uses the gated sites' doc ranges either way
         scan_ranges = sorted(self.site_ranges[s] for s in gated)
-        return tl, idf, gated, allowed_site_ids, scan_ranges
+        return tl, idf, gated, allowed_site_ids, scan_ranges, postings
 
     def search(
         self,
@@ -515,31 +560,48 @@ class BlockSearcher:
         cfg = self.cfg
         offset = DEFAULT_OFFSET if offset is None else offset
         limit = DEFAULT_LIMIT if limit is None else limit
-        tl, idf, gated, allowed_site_ids, scan_ranges = self._plan(query, site, mode)
+        tl, idf, gated, allowed_site_ids, scan_ranges, est = self._plan(
+            query, site, mode
+        )
         empty = pd.DataFrame(
             columns=["doc_id", "conv_id", "turn_idx", "site", "score", "relevance"]
         )
-        if not gated:
-            return empty, 0
         k = offset + limit
         scan_terms = list(tl)
         if mode == "bm25":
             scan_terms.append(DOCLEN_TERM)
         if allowed_site_ids is not None:
             scan_terms.append(SITE_TERM)
-        blocks = self.blocks.filter(F.col("term").isin(scan_terms))
+        est += self.n_docs * (len(scan_terms) - len(tl))  # a posting per doc
+        self.last_trace = trace = {
+            "executor": None, "est_postings": est, "blocks": 0, "shards": 0,
+            "candidates": 0,
+        }
+        if not gated:
+            return empty, 0
+        pred = sql_in("term", scan_terms)
         if len(gated) < len(self.site_ranges):
             lo = min(r[0] for r in scan_ranges) // self.shard_size
             hi = max(r[1] for r in scan_ranges) // self.shard_size
-            blocks = blocks.filter(F.col("shard").between(lo, hi))
+            pred += f" AND shard BETWEEN {lo} AND {hi}"
+        blocks = self.blocks.filter(pred)
         kernel = make_shard_kernel(
             tl, mode, k, idf, cfg.bm25.k1, cfg.bm25.b, self.avgdl,
             allowed_site_ids, exact_count=exact_count,
         )
-        rows = blocks.groupBy("shard").applyInPandas(kernel, KERNEL_SCHEMA).toPandas()
+        if est <= DRIVER_KERNEL_MAX_POSTINGS:
+            pdf = blocks.toPandas()
+            parts = [kernel(g.reset_index(drop=True)) for _, g in pdf.groupby("shard")]
+            parts = [p for p in parts if len(p)]
+            rows = pd.concat(parts, ignore_index=True) if parts else _empty_kernel_rows()
+            trace.update(executor="driver", blocks=len(pdf), shards=int(pdf["shard"].nunique()))
+        else:
+            rows = blocks.groupBy("shard").applyInPandas(kernel, KERNEL_SCHEMA).toPandas()
+            trace.update(executor="spark", blocks=None, shards=None)
         count = (
             int(rows.drop_duplicates("shard")["cand"].sum()) if len(rows) else 0
         )
+        trace["candidates"] = count
         rows = rows[rows["doc_id"] >= 0]  # drop count-only sentinel rows
         if rows.empty:
             return empty, count
@@ -552,14 +614,8 @@ class BlockSearcher:
             page["relevance"] = page["score"] / max_score
         else:
             page["relevance"] = page["score"]
-        meta = (
-            self.documents.filter(
-                F.col("doc_id").isin([int(d) for d in page["doc_id"]])
-            )
-            .select("doc_id", "conv_id", "turn_idx", "site")
-            .toPandas()
-        )
-        out = page.merge(meta, on="doc_id")[
+        meta = self.documents.filter(sql_in("doc_id", page["doc_id"])).toPandas()
+        out = page[["doc_id", "score", "relevance"]].merge(meta, on="doc_id")[
             ["doc_id", "conv_id", "turn_idx", "site", "score", "relevance"]
         ]
         out = out.sort_values(
@@ -580,13 +636,14 @@ class BlockSearcher:
             page["snippet"] = ""
             return page
         keys = [(c, int(t)) for c, t in zip(page["conv_id"], page["turn_idx"])]
+        pred = (
+            f"{sql_in('conv_id', sorted({c for c, _ in keys}))}"
+            f" AND {sql_in('turn_idx', sorted({t for _, t in keys}))}"
+        )
         texts = {
             (r["conv_id"], r["turn_idx"]): r["text"]
-            for r in self.transcripts.filter(
-                F.col("conv_id").isin([c for c, _ in keys])
-                & F.col("turn_idx").isin([t for _, t in keys])
-            )
-            .select("conv_id", "turn_idx", "text")
+            for r in self.transcripts.filter(pred)
+            .selectExpr("conv_id", "turn_idx", "text")
             .collect()
         }
         page["title"] = [make_title(c, t) for c, t in keys]

@@ -43,6 +43,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # delete a checkpointed result's files (analysis.dedup.checkpointed)
+        # once its frame is garbage collected; Spark's default keeps them
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -184,6 +184,8 @@ def transcripts_spark_df(spark, fixture_or_pdf="tiny", cache_dir: str | None = N
         name = fixture_or_pdf if isinstance(fixture_or_pdf, str) else "custom"
         path = os.path.join(cache_dir, f"transcripts_{name}.parquet")
         if not os.path.exists(path):
-            pdf.to_parquet(path, index=False)
+            # microsecond timestamps: Spark cannot read pandas' default
+            # nanosecond INT64 column as ``timestamp``
+            pdf.to_parquet(path, index=False, coerce_timestamps="us")
         return spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(path)
     return spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)

@@ -37,6 +37,31 @@ def test_exact_duplicates(docs):
     assert 4 not in out.index and 5 not in out.index  # ineligible dropped
 
 
+@pytest.mark.parametrize(
+    "op",
+    ["exact_duplicates", "minhash_lsh_pairs", "simhash_pairs", "ngram_jaccard_pairs",
+     "lsh_bucket_pairs"],
+)
+def test_operators_release_cache(spark, docs, op):
+    """An operator unpersists what it persisted before it returns: Spark's
+    CacheManager is empty and no new RDD stays persisted, with the result
+    still readable."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    if op == "lsh_bucket_pairs":
+        emb = spark.createDataFrame(
+            [(i, [1.0, float(i % 2), 0.5]) for i in range(8)],
+            "vec_id long, embedding array<float>",
+        )
+        out = ann.lsh_bucket_pairs(emb, threshold=0.0)
+    else:
+        out = getattr(dedup, op)(docs)
+    assert cache.isEmpty(), op
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= before, op
+    assert out.count() > 0, op
+
+
 def test_jaccard_finds_near_dup_pair(docs):
     pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.4).toPandas()
     got = {(int(a), int(b)) for a, b in zip(pairs["a"], pairs["b"])}
@@ -358,13 +383,24 @@ def test_simhash_pairs_hamming_neighbors(spark):
     assert len(bp) == 999 and set(bp["a"]) == {0}
 
 
-def test_star_pairing_plans_contain_no_window(spark):
+def test_star_pairing_plans_contain_no_window(spark, monkeypatch):
     """Round-3 hot-bucket physical fix: the candidate-pair generators must
     compile to groupBy + join (map-side partial min, hash-join fan-out) —
     NEVER min().over(Window.partitionBy(bucket)), which buffers a degenerate
-    bucket in one task. Asserted on the optimized physical plans; pair
-    results stay the identical star shape."""
+    bucket in one task. Asserted on the optimized physical plans of every
+    result the operators checkpoint (their returned frames read those
+    files) and of the returned frame; pair results stay the identical star
+    shape."""
     import pandas as pd
+
+    computed = []
+
+    def recording(df):
+        computed.append(df._jdf.queryExecution().executedPlan().toString())
+        return checkpointed(df)
+
+    checkpointed = dedup.checkpointed
+    monkeypatch.setattr(dedup, "checkpointed", recording)
 
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(200),
@@ -380,9 +416,13 @@ def test_star_pairing_plans_contain_no_window(spark):
         "simhash": dedup.simhash_pairs(docs, bits=16, max_hamming=3),
         "embed": ann.lsh_bucket_pairs(vecs, threshold=0.0, n_bits=8),
     }
+    # one result each, plus simhash's star_pairs candidates
+    assert len(computed) == 5
     for name, df in plans.items():
         physical = df._jdf.queryExecution().executedPlan().toString()
         assert "Window" not in physical, name
+    for physical in computed:
+        assert "Window" not in physical
     # 200 identical docs > STAR_PAIRS_CAP → degenerate bucket, star shape
     mh = plans["minhash"].toPandas()
     assert len(mh) == 199 and set(mh["a"]) == {0}

@@ -115,6 +115,18 @@ def test_per_turn_text_equality(spark, tiny_pdf):
     pd.testing.assert_frame_equal(back, exp)
 
 
+def test_cached_parquet_ts_reads_back(spark, tiny_pdf, tmp_path):
+    """The parquet copy written with ``cache_dir`` reads back every column,
+    ``ts`` included, as the in-memory frame gives it."""
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    cached = transcripts_spark_df(spark, tiny_pdf, cache_dir=str(tmp_path))
+    mem = transcripts_spark_df(spark, tiny_pdf)
+    key = ["conv_id", "turn_idx"]
+    got = cached.select(*cols).orderBy(*key).collect()
+    assert got == mem.select(*cols).orderBy(*key).collect()
+    assert got[0]["ts"] == tiny_pdf.sort_values(key)["ts"].iloc[0].to_pydatetime()
+
+
 def test_conservation_invariants(engine, oracle):
     """Σ per-site df == per-term distinct docs; Σ tf == total lemma count of
     eligible turns (SURVEY §5.3)."""

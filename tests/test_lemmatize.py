@@ -96,3 +96,35 @@ def test_query_lemmas_dedup_unordered():
 
 def test_order_preserved_for_positions():
     assert lemmatize_text("alpha beta alpha") == ["alpha", "beta", "alpha"]
+
+
+def test_worker_token_cache_is_bounded(monkeypatch):
+    """More distinct tokens than the cap: every text counts as the uncached
+    :func:`lemma_counts` does, and the memo, cleared when full, keeps only
+    the tokens seen since (a token from before the clear is lemmatized
+    again, a recent one is not)."""
+    from searchengine_spark.functions import lemmatize as L
+
+    letters = "abcdefghij"
+    toks = ["tok" + letters[i // 10] + letters[i % 10] for i in range(100)]
+    texts = [" ".join(toks[i : i + 5]) for i in range(0, 100, 5)]
+    texts += ["spark sparks the Spark"] * 3
+    want = [lemma_counts(t) for t in texts]
+    misses = []
+
+    def counting(tok):
+        misses.append(tok)
+        return lemmatize_token(tok)
+
+    monkeypatch.setattr(L, "TOKEN_CACHE_CAP", 50)
+    monkeypatch.setattr(L, "lemmatize_token", counting)
+    count = L.cached_lemma_counter()
+    assert [count(t) for t in texts] == want
+    # every distinct token once ("Spark" and "spark" differ); repeats hit
+    assert len(misses) == 100 + 4
+    del misses[:]
+    count("sparks")  # seen after the last clear (at 100 distinct tokens)
+    assert misses == []
+    count(toks[99])  # seen before it: cleared
+    assert misses == [toks[99]]
+    assert count("") == {} and count(None) == {}
