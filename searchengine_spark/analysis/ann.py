@@ -1,6 +1,6 @@
 """Similarity search over an embedding column (``array<float>``).
 
-Two paths, mirroring production ANN systems:
+Three paths, mirroring production ANN systems:
 
 - :func:`cosine_topk` — brute-force exact top-k for a (small) probe set:
   broadcast the probes, one pass over the corpus, PER-PARTITION partial
@@ -15,6 +15,14 @@ Two paths, mirroring production ANN systems:
   emits m−1 candidate pairs, never m²/2 — 10^6 identical boilerplate
   vectors cost O(n), and near-dup groups still connect through their
   canonical. Candidates are verified with the exact cosine.
+- :func:`build_ivf_index` / :func:`ivf_topk_indexed` — the served IVF
+  path: a k-means coarse quantizer (md5-ranked seed, Lloyd rounds) assigns
+  every vector to its nearest centroid's inverted list once; a probe scans
+  only the lists of its ``nprobe`` nearest centroids. :func:`ivf_topk` is
+  the one-shot form: it trains and assigns through the same functions,
+  then probes its fresh lists with the same :func:`_ivf_probe`, so both
+  return identical results. The three top-k operators share one
+  per-partition partial top-k + merge (:func:`_topk`).
 
 All arithmetic is JVM-side (``aggregate``/``zip_with`` over array columns,
 cast to double before multiplying — float32 inputs, float64 math, same as
@@ -27,6 +35,8 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
+
+from searchengine_spark.analysis.dedup import checkpointed, persisted, star_pairs
 
 SCORE_DECIMALS = 5
 
@@ -55,6 +65,33 @@ def _norm(a):
     )
 
 
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, vec_id, cosine): the ``k`` best rows of each
+    query_id in ``scored`` (query_id, vec_id, cosine), ties broken by vec_id
+    asc on the ROUNDED score so ranking is float-order independent.
+
+    Stage 1 takes the top-k WITHIN each partition of ``scored`` (shuffle
+    key (query_id, partition) — parallelism × |probes| groups); stage 2
+    merges ≤ partitions×k rows per probe. The merge input is tiny regardless
+    of corpus size, unlike a single Window.partitionBy(query_id), which
+    would shuffle every scored row of the corpus into one partition per
+    probe."""
+    order = [F.col("cosine").desc(), F.col("vec_id").asc()]
+    w_part = Window.partitionBy("query_id", "_pid").orderBy(*order)
+    partial = (
+        scored.withColumn("_pid", F.spark_partition_id())
+        .withColumn("_r", F.row_number().over(w_part))
+        .filter(F.col("_r") <= k)
+        .drop("_pid", "_r")
+    )
+    w_final = Window.partitionBy("query_id").orderBy(*order)
+    return (
+        partial.withColumn("rank", F.row_number().over(w_final))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "vec_id", "cosine")
+    )
+
+
 def cosine_topk(
     embeddings: DataFrame,
     probe_ids: list[int],
@@ -64,15 +101,8 @@ def cosine_topk(
     dim: int | None = None,
 ) -> DataFrame:
     """(query_id, rank, vec_id, cosine): exact top-k cosine neighbors of each
-    probe vector (self excluded). Probes are broadcast; ties broken by
-    vec_id asc on the ROUNDED score so ranking is float-order independent.
-
-    Scale shape: stage 1 takes the top-k WITHIN each scan partition
-    (shuffle key (query_id, partition) — parallelism × |probes| groups);
-    stage 2 merges ≤ partitions×k rows per probe. The merge input is tiny
-    regardless of corpus size, unlike a single Window.partitionBy(query_id)
-    which would shuffle every scored row of the corpus into one partition
-    per probe.
+    probe vector (self excluded). Probes are broadcast; one pass over the
+    corpus feeds the per-partition partial top-k and merge of :func:`_topk`.
 
     ``dim`` is accepted (and ignored) for signature stability: an unrolled
     dim-term dot expression was measured 4-7x SLOWER than the
@@ -98,22 +128,9 @@ def cosine_topk(
             F.round(
                 dot / (nrm * F.col("qnrm")), SCORE_DECIMALS
             ).alias("cosine"),
-            F.spark_partition_id().alias("_pid"),
         )
     )
-    order = [F.col("cosine").desc(), F.col("vec_id").asc()]
-    w_part = Window.partitionBy("query_id", "_pid").orderBy(*order)
-    partial = (
-        scored.withColumn("_r", F.row_number().over(w_part))
-        .filter(F.col("_r") <= k)
-        .drop("_pid", "_r")
-    )
-    w_final = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        partial.withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    return _topk(scored, k)
 
 
 def random_hyperplanes(
@@ -248,15 +265,14 @@ def _dot_d(a, b):
 def _ivf_vecs(
     embeddings: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Persisted (vec_id, _v:array<double>, vnrm) projection shared by every
-    IVF pass. The iterative Lloyd loop + final assignment + probe scoring
-    would otherwise each re-read the corpus (and re-derive the norm per
-    centroid comparison); one MEMORY_AND_DISK persist is the standard
-    iterative-algorithm move (MLlib KMeans does the same). Input with fewer
-    partitions than the session's parallelism (e.g. a single-row-group
-    parquet file) is repartitioned once so every later pass is parallel."""
-    from pyspark import StorageLevel
-
+    """(vec_id, _v:array<double>, vnrm) projection shared by every IVF
+    pass. Callers persist it for their body (:func:`dedup.persisted`): the
+    iterative Lloyd loop + final assignment would otherwise each re-read
+    the corpus (and re-derive the norm per centroid comparison); one
+    MEMORY_AND_DISK persist is the standard iterative-algorithm move (MLlib
+    KMeans does the same). Input with fewer partitions than the session's
+    parallelism (e.g. a single-row-group parquet file) is repartitioned
+    once so every later pass is parallel."""
     spark = embeddings.sparkSession
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     vecs = embeddings.select(
@@ -267,7 +283,7 @@ def _ivf_vecs(
     n_par = spark.sparkContext.defaultParallelism
     if embeddings.rdd.getNumPartitions() < max(2, n_par // 2):
         vecs = vecs.repartition(n_par)
-    return vecs.persist(StorageLevel.MEMORY_AND_DISK)
+    return vecs
 
 
 def _cents_literal(spark, rows) -> DataFrame:
@@ -286,31 +302,31 @@ def _cents_literal(spark, rows) -> DataFrame:
     )
 
 
-def _nearest_cid(
-    vecs: DataFrame, cents: DataFrame, dim: int | None = None
-) -> DataFrame:
-    """(vec_id, cid): nearest centroid by cosine against an explicit
-    centroid table. The centroid table is broadcast (k × dim doubles);
-    argmin is a min(struct(rounded -cos, cid)) aggregate — deterministic
-    under ties, shuffle key = vec_id with map-side partial min. ``dim``
-    is ignored (see :func:`cosine_topk` on why the fold beats unrolling;
-    an argmin-as-literal-expression variant was also measured and loses —
+def _nearest_cid(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """(cid, vec_id, vec, vnrm): each vector of the projection assigned to
+    its nearest centroid by cosine — a Lloyd round's assignment and the
+    final inverted lists alike. The centroid table is broadcast (k × dim
+    doubles); argmin is a min(struct(rounded -cos, cid)) aggregate —
+    deterministic under ties, shuffle key = vec_id with map-side partial
+    min. ``_v`` and ``vnrm`` ride through the aggregate (first() of a
+    per-key-constant column), so nothing joins back to the projection. The
+    fold beats unrolling (see :func:`cosine_topk`); an
+    argmin-as-literal-expression variant was also measured and loses —
     centroid literals change every Lloyd round, forcing a fresh Janino
-    compile of a k×dim tree per round)."""
-    dot = _dot_d(F.col("_v"), F.col("cvec"))
-    scored = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        F.struct(
-            F.round(
-                -dot / (F.col("vnrm") * F.col("cnrm")), SCORE_DECIMALS
-            ).alias("negcos"),
-            F.col("cid").alias("cid"),
-        ).alias("key"),
+    compile of a k×dim tree per round."""
+    negcos = F.round(
+        -_dot_d(F.col("_v"), F.col("cvec")) / (F.col("vnrm") * F.col("cnrm")),
+        SCORE_DECIMALS,
     )
     return (
-        scored.groupBy("vec_id")
-        .agg(F.min("key").alias("key"))
-        .select("vec_id", F.col("key.cid").alias("cid"))
+        vecs.crossJoin(F.broadcast(cents))
+        .groupBy("vec_id")
+        .agg(
+            F.min(F.struct(negcos.alias("negcos"), F.col("cid"))).alias("key"),
+            F.first("_v").alias("vec"),
+            F.first("vnrm").alias("vnrm"),
+        )
+        .select(F.col("key.cid").alias("cid"), "vec_id", "vec", "vnrm")
     )
 
 
@@ -318,44 +334,26 @@ def _lloyd_rounds(vecs: DataFrame, seed_rows, iters: int) -> list:
     """Run ``iters`` Lloyd rounds over the persisted projection and return
     the refined [(cid, [double,...])] centroid rows.
 
-    Each round is one broadcast-assign pass plus two aggregates: argmin
-    per vec_id (carrying ``_v`` through the aggregate — first() of a
-    per-key-constant column — so no join back to the projection is
-    needed), then ONE (cid)-keyed aggregate with ``dim``
-    partial-aggregated sum columns — map-side combine reduces that
-    shuffle to partitions × k × (dim+1) values regardless of corpus size
-    (the previous posexplode shape shuffled corpus × dim rows per round).
-    The mean + round stays a JVM expression (sum/count, HALF_UP) so both
-    engines' Lloyd arithmetic converges to identical doubles."""
+    Each round is one :func:`_nearest_cid` pass, then ONE (cid)-keyed
+    aggregate with ``dim`` partial-aggregated sum columns — map-side
+    combine reduces that shuffle to partitions × k × (dim+1) values
+    regardless of corpus size (the previous posexplode shape shuffled
+    corpus × dim rows per round). The mean + round stays a JVM expression
+    (sum/count, HALF_UP) so both engines' Lloyd arithmetic converges to
+    identical doubles."""
     spark = vecs.sparkSession
     rows = list(seed_rows)
     if not rows:
         return rows
     dim = len(rows[0][1])
     for _ in range(iters):
-        cents = _cents_literal(spark, rows)
-        dot = _dot_d(F.col("_v"), F.col("cvec"))
-        scored = vecs.crossJoin(F.broadcast(cents)).select(
-            "vec_id",
-            "_v",
-            F.struct(
-                F.round(
-                    -dot / (F.col("vnrm") * F.col("cnrm")), SCORE_DECIMALS
-                ).alias("negcos"),
-                F.col("cid").alias("cid"),
-            ).alias("key"),
-        )
-        assigned = (
-            scored.groupBy("vec_id")
-            .agg(F.min("key").alias("key"), F.first("_v").alias("_v"))
-            .select(F.col("key.cid").alias("cid"), "_v")
-        )
+        assigned = _nearest_cid(vecs, _cents_literal(spark, rows))
         sums = (
             assigned.groupBy("cid")
             .agg(
                 F.count("*").alias("_n"),
                 *[
-                    F.sum(F.element_at("_v", i + 1)).alias(f"_s{i}")
+                    F.sum(F.element_at("vec", i + 1)).alias(f"_s{i}")
                     for i in range(dim)
                 ],
             )
@@ -389,6 +387,77 @@ def _seed_rows(
     ]
 
 
+def _ivf_probe(
+    lists: DataFrame,
+    cents: DataFrame,
+    embeddings: DataFrame,
+    probe_ids: list[int],
+    k: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(query_id, rank, vec_id, cosine): each probe's top-k over the
+    inverted lists of its ``nprobe`` nearest centroids. ``lists`` is
+    (cid, vec_id, vec, vnrm) and ``cents`` (cid, cvec, cnrm) — the
+    persisted index when serving, the freshly trained quantizer in the
+    one-shot path. ``embeddings`` supplies only the probe vectors.
+
+    The probe×centroid ranking is one tiny collected job (broadcast × k
+    rows); the ranked cids filter ``lists`` with ``isin``, so a
+    cid-partitioned table reads only the probed lists' files
+    (~nprobe/n_centroids of the corpus). Candidates are scored by exact
+    cosine and merged by :func:`_topk`."""
+    spark = embeddings.sparkSession
+    probes = F.broadcast(
+        embeddings.filter(F.col(id_col).isin(probe_ids)).select(
+            F.col(id_col).alias("query_id"),
+            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
+                "qvec"
+            ),
+            _norm(F.col(vec_col)).alias("qnrm"),
+        )
+    )
+    ccos = F.round(
+        _dot_d(F.col("qvec"), F.col("cvec")) / (F.col("qnrm") * F.col("cnrm")),
+        SCORE_DECIMALS,
+    )
+    w = Window.partitionBy("query_id").orderBy(ccos.desc(), F.col("cid").asc())
+    ranked = (
+        probes.crossJoin(F.broadcast(cents))
+        .withColumn("_r", F.row_number().over(w))
+        .filter(F.col("_r") <= nprobe)
+        .select("query_id", "cid")
+        .collect()
+    )
+    if not ranked:
+        return spark.createDataFrame(
+            [], "query_id long, rank int, vec_id long, cosine double"
+        )
+    pc = F.broadcast(
+        spark.createDataFrame(
+            [(int(r["query_id"]), int(r["cid"])) for r in ranked],
+            "query_id long, cid long",
+        )
+    )
+    scored = (
+        lists.filter(F.col("cid").isin(sorted({int(r["cid"]) for r in ranked})))
+        .join(pc, "cid")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .join(probes, "query_id")
+        .select(
+            "query_id",
+            "vec_id",
+            F.round(
+                _dot_d(F.col("vec"), F.col("qvec"))
+                / (F.col("vnrm") * F.col("qnrm")),
+                SCORE_DECIMALS,
+            ).alias("cosine"),
+        )
+    )
+    return _topk(scored, k)
+
+
 def ivf_centroids(
     embeddings: DataFrame,
     n_centroids: int = 16,
@@ -403,17 +472,11 @@ def ivf_centroids(
     seed vec_ids. Returned as a literal DataFrame (k × dim doubles — O(1)
     metadata, the same move MLlib's KMeans makes) so downstream consumers
     never replay the iterative chain."""
-    spark = embeddings.sparkSession
-    vecs = _ivf_vecs(embeddings, id_col, vec_col)
-    try:
+    with persisted(_ivf_vecs(embeddings, id_col, vec_col)) as vecs:
         rows = _lloyd_rounds(
             vecs, _seed_rows(embeddings, n_centroids, id_col, vec_col), iters
         )
-    finally:
-        vecs.unpersist()
-    return spark.createDataFrame(
-        [(cid, vec) for cid, vec in rows], "cid long, cvec array<double>"
-    )
+    return _cents_literal(embeddings.sparkSession, rows).select("cid", "cvec")
 
 
 def ivf_topk(
@@ -431,92 +494,25 @@ def ivf_topk(
     (~nprobe/n_centroids of the corpus), then exact cosine + per-partition
     partial top-k + merge, same merge shape as :func:`cosine_topk`.
 
-    Scale path: the corpus-side work is one broadcast-assign pass plus a
-    hash join on cid — no corpus-wide window, no n² stage; recall is tuned
-    by (n_centroids, nprobe) and the k-means quality of the quantizer
-    (``iters`` Lloyd rounds, :func:`ivf_centroids`). The corpus projection
-    is persisted once and shared by the Lloyd rounds, the final assignment,
-    and the candidate scoring; when the result is driver-small
-    (|probes| × k ≤ 10⁵) it is materialized to a literal so the projection
-    can be unpersisted eagerly."""
-    spark = embeddings.sparkSession
-    vecs = _ivf_vecs(embeddings, id_col, vec_col)
-    rows = _lloyd_rounds(
-        vecs, _seed_rows(embeddings, n_centroids, id_col, vec_col), iters
-    )
-    cents = _cents_literal(spark, rows)
-    dim = len(rows[0][1]) if rows else None
-    assign = _nearest_cid(vecs, cents, dim)
-    probes = F.broadcast(
-        vecs.filter(F.col("vec_id").isin(probe_ids)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("_v").alias("qvec"),
-            F.col("vnrm").alias("qnrm"),
+    One-shot form of :func:`build_ivf_index` + :func:`ivf_topk_indexed`:
+    the same training (``iters`` Lloyd rounds, :func:`ivf_centroids`) and
+    assignment, then the same probe code over the lists just assigned, so
+    the two give identical results. The corpus-side work is broadcast-assign
+    passes over a projection persisted for this call — no corpus-wide
+    window, no n² stage; recall is tuned by (n_centroids, nprobe) and the
+    k-means quality of the quantizer. The result is checkpointed
+    (:func:`dedup.checkpointed`) before the projection is released."""
+    with persisted(_ivf_vecs(embeddings, id_col, vec_col)) as vecs:
+        rows = _lloyd_rounds(
+            vecs, _seed_rows(embeddings, n_centroids, id_col, vec_col), iters
         )
-    )
-    probe_cents = (
-        probes.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "cid",
-            F.round(
-                _dot_d(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnrm") * F.col("cnrm")),
-                SCORE_DECIMALS,
-            ).alias("ccos"),
+        cents = _cents_literal(embeddings.sparkSession, rows)
+        return checkpointed(
+            _ivf_probe(
+                _nearest_cid(vecs, cents), cents, embeddings, probe_ids, k,
+                nprobe, id_col, vec_col,
+            )
         )
-        .withColumn(
-            "_r",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("ccos").desc(), F.col("cid").asc()
-                )
-            ),
-        )
-        .filter(F.col("_r") <= nprobe)
-        .select("query_id", "cid")
-    )
-    cand = assign.join(F.broadcast(probe_cents), "cid").select(
-        "query_id", "vec_id"
-    )
-    scored = (
-        cand.join(vecs, "vec_id")
-        .join(probes, "query_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _dot_d(F.col("_v"), F.col("qvec"))
-                / (F.col("vnrm") * F.col("qnrm")),
-                SCORE_DECIMALS,
-            ).alias("cosine"),
-            F.spark_partition_id().alias("_pid"),
-        )
-    )
-    order = [F.col("cosine").desc(), F.col("vec_id").asc()]
-    partial = (
-        scored.withColumn(
-            "_r", F.row_number().over(Window.partitionBy("query_id", "_pid").orderBy(*order))
-        )
-        .filter(F.col("_r") <= k)
-        .drop("_pid", "_r")
-    )
-    result = (
-        partial.withColumn(
-            "rank", F.row_number().over(Window.partitionBy("query_id").orderBy(*order))
-        )
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
-    if len(probe_ids) * k <= 100_000:
-        out = result.collect()
-        vecs.unpersist()
-        return spark.createDataFrame(
-            [(r["query_id"], r["rank"], r["vec_id"], r["cosine"]) for r in out],
-            "query_id long, rank int, vec_id long, cosine double",
-        )
-    return result
 
 
 def build_ivf_index(
@@ -545,29 +541,17 @@ def build_ivf_index(
     lists untouched, mid-swap leaves a ``__old`` twin that
     ``recover_swaps`` restores. Returns
     ``{"n_centroids": k, "n_vectors": n}``."""
-    spark = embeddings.sparkSession
-    vecs = _ivf_vecs(embeddings, id_col, vec_col)
-    try:
+    with persisted(_ivf_vecs(embeddings, id_col, vec_col)) as vecs:
         rows = _lloyd_rounds(
             vecs, _seed_rows(embeddings, n_centroids, id_col, vec_col), iters
         )
-        cents = _cents_literal(spark, rows)
-        dim = len(rows[0][1]) if rows else None
-        assign = _nearest_cid(vecs, cents, dim)
-        lists = assign.join(vecs, "vec_id").select(
-            "cid",
-            "vec_id",
-            F.col("_v").alias("vec"),
-            F.col("vnrm").alias("vnrm"),
-        )
+        cents = _cents_literal(embeddings.sparkSession, rows)
         # replace (temp-dir + atomic swap), NOT write: a plain overwrite
         # deletes the previous lists before writing, so a crash mid-rebuild
         # would leave surviving centroids pointing at partial/missing lists
-        catalog.replace(lists, "ann_lists")
+        catalog.replace(_nearest_cid(vecs, cents), "ann_lists")
         catalog.replace(cents, "ann_centroids")
-        n_vectors = int(catalog.read("ann_lists").count())
-    finally:
-        vecs.unpersist()
+    n_vectors = int(catalog.read("ann_lists").count())
     return {"n_centroids": len(rows), "n_vectors": n_vectors}
 
 
@@ -581,99 +565,22 @@ def ivf_topk_indexed(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(query_id, rank, vec_id, cosine): IVF top-k served FROM the persisted
-    index (:func:`build_ivf_index`) — bit-identical results to
-    :func:`ivf_topk` at the same (n_centroids, nprobe, iters), since the
-    stored centroids/assignment/norms are the same doubles and the scoring
-    expressions are shared.
+    index (:func:`build_ivf_index`) — identical results to :func:`ivf_topk`
+    at the same (n_centroids, nprobe, iters): the stored centroids,
+    assignment and norms are the same doubles, and both run
+    :func:`_ivf_probe`.
 
-    Per-query cost shape: one collect of the k-row centroid table, one tiny
-    probe×centroid ranking job (broadcast × literal), then ONE
-    partition-pruned scan of the ≤ |probes|·nprobe probed cids' list
-    partitions (~nprobe/n_centroids of the corpus) joined against the
+    Per-query cost shape: one tiny probe×centroid ranking job over the
+    k-row centroid table, then ONE partition-pruned scan of the
+    ≤ |probes|·nprobe probed cids' list partitions joined against the
     broadcast probe set — no Lloyd rounds, no corpus-wide assignment, no
     join back to the source table (the lists carry vec + norm).
     ``embeddings`` supplies only the PROBE vectors (vec_id-pruned read)."""
-    spark = embeddings.sparkSession
-    crows = catalog.read("ann_centroids").collect()
-    cents = spark.createDataFrame(
-        [(int(r["cid"]), [float(x) for x in r["cvec"]], float(r["cnrm"]))
-         for r in crows],
-        "cid long, cvec array<double>, cnrm double",
-    )
-    probes_df = embeddings.filter(F.col(id_col).isin(probe_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qnrm"),
-    )
-    pc_rows = (
-        probes_df.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "cid",
-            F.round(
-                _dot_d(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnrm") * F.col("cnrm")),
-                SCORE_DECIMALS,
-            ).alias("ccos"),
-        )
-        .withColumn(
-            "_r",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("ccos").desc(), F.col("cid").asc()
-                )
-            ),
-        )
-        .filter(F.col("_r") <= nprobe)
-        .select("query_id", "cid")
-        .collect()
-    )
-    if not pc_rows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, vec_id long, cosine double"
-        )
-    cids = sorted({int(r["cid"]) for r in pc_rows})
-    pc = F.broadcast(
-        spark.createDataFrame(
-            [(int(r["query_id"]), int(r["cid"])) for r in pc_rows],
-            "query_id long, cid long",
-        )
-    )
-    # cid isin → partition pruning: only the probed lists' files are read
-    lists = catalog.read("ann_lists").filter(F.col("cid").isin(cids))
-    scored = (
-        lists.join(pc, "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(probes_df), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _dot_d(F.col("vec"), F.col("qvec"))
-                / (F.col("vnrm") * F.col("qnrm")),
-                SCORE_DECIMALS,
-            ).alias("cosine"),
-            F.spark_partition_id().alias("_pid"),
-        )
-    )
-    order = [F.col("cosine").desc(), F.col("vec_id").asc()]
-    partial = (
-        scored.withColumn(
-            "_r",
-            F.row_number().over(
-                Window.partitionBy("query_id", "_pid").orderBy(*order)
-            ),
-        )
-        .filter(F.col("_r") <= k)
-        .drop("_pid", "_r")
-    )
-    return (
-        partial.withColumn(
-            "rank",
-            F.row_number().over(Window.partitionBy("query_id").orderBy(*order)),
-        )
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
+    # centroids before lists: build_ivf_index commits the centroids last
+    cents = catalog.read("ann_centroids")
+    return _ivf_probe(
+        catalog.read("ann_lists"), cents, embeddings, probe_ids, k, nprobe,
+        id_col, vec_col,
     )
 
 
@@ -697,8 +604,6 @@ def lsh_bucket_pairs(
     identical/boilerplate embeddings cannot blow up the verify join — the
     same skewed-key discipline as dedup.ngram_jaccard_pairs'
     max_shingle_df."""
-    from searchengine_spark.analysis.dedup import star_pairs
-
     buckets = lsh_sign_buckets(
         embeddings, n_bits, n_tables, seed, id_col, vec_col, dim=dim
     )

@@ -33,7 +33,6 @@ from searchengine_spark.analysis.textstats import (
     quality_score,
     tokens_col,
     word_ngrams,
-    words,
 )
 from searchengine_spark.oracle.sqlgen import MINHASH_P, _MINHASH_AB
 
@@ -205,11 +204,6 @@ def dedup_keep_best(documents: DataFrame, pairs: DataFrame | None = None) -> Dat
         "doc_id", F.col("component").alias("group_id")
     )
     return keep_best_per_group(documents, groups)
-
-
-def doc_terms(documents: DataFrame) -> DataFrame:
-    """(doc_id, word) distinct — the unigram set used by MinHash/SimHash."""
-    return words(documents).distinct()
 
 
 def minhash_signatures(documents: DataFrame, k: int = N_MINHASH) -> DataFrame:

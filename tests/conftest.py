@@ -23,7 +23,12 @@ from searchengine_spark.sources.transcripts import (
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    # the fixtures are a few thousand rows: a 2g heap runs the whole suite
+    # (get_spark's 16g default is sized for benchmark-scale data)
+    s = get_spark(
+        app_name="tests", master="local[8]", shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "2g"},
+    )
     yield s
 
 

@@ -37,15 +37,32 @@ def test_exact_duplicates(docs):
     assert 4 not in out.index and 5 not in out.index  # ineligible dropped
 
 
+def _clustered_emb(spark, seed):
+    """200 16-dim float vectors around 4 random centers (vec_id i in
+    cluster i % 4)."""
+    rng = np.random.default_rng(seed)
+    centers = rng.standard_normal((4, 16)) * 3
+    vecs = [
+        (centers[i % 4] + rng.standard_normal(16) * 0.2).astype("float32").tolist()
+        for i in range(200)
+    ]
+    return spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(200), "embedding": vecs}),
+        "vec_id long, embedding array<float>",
+    )
+
+
 @pytest.mark.parametrize(
     "op",
     ["exact_duplicates", "minhash_lsh_pairs", "simhash_pairs", "ngram_jaccard_pairs",
-     "lsh_bucket_pairs"],
+     "lsh_bucket_pairs", "ivf_topk_small", "ivf_topk_large", "build_ivf_index"],
 )
-def test_operators_release_cache(spark, docs, op):
+def test_operators_release_cache(spark, docs, tmp_path, op):
     """An operator unpersists what it persisted before it returns: Spark's
     CacheManager is empty and no new RDD stays persisted, with the result
     still readable."""
+    from searchengine_spark.sources.catalog import TableCatalog
+
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
@@ -55,6 +72,18 @@ def test_operators_release_cache(spark, docs, op):
             "vec_id long, embedding array<float>",
         )
         out = ann.lsh_bucket_pairs(emb, threshold=0.0)
+    elif op == "ivf_topk_small":
+        out = ann.ivf_topk(_clustered_emb(spark, 3), [0, 1], k=5, n_centroids=8)
+    elif op == "ivf_topk_large":
+        # |probes| × k = 100,200 > 10^5: a result too large to collect to
+        # the driver must stay distributed and still release the projection
+        out = ann.ivf_topk(
+            _clustered_emb(spark, 3), list(range(200)), k=501, n_centroids=8
+        )
+    elif op == "build_ivf_index":
+        cat = TableCatalog(spark, str(tmp_path / "annwh"))
+        ann.build_ivf_index(_clustered_emb(spark, 3), cat, n_centroids=8)
+        out = cat.read("ann_lists")
     else:
         out = getattr(dedup, op)(docs)
     assert cache.isEmpty(), op
@@ -193,19 +222,7 @@ def test_lsh_buckets_seeded_and_multitable(spark):
 def test_ivf_topk_recall_and_shape(spark):
     """IVF top-k: deterministic centroids, candidates only from probed
     inverted lists, high recall vs exact top-k on a clustered fixture."""
-    import numpy as np
-    import pandas as pd
-
-    rng = np.random.default_rng(3)
-    centers = rng.standard_normal((4, 16)) * 3
-    vecs = [
-        (centers[i % 4] + rng.standard_normal(16) * 0.2).astype("float32").tolist()
-        for i in range(200)
-    ]
-    emb = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(200), "embedding": vecs}),
-        "vec_id long, embedding array<float>",
-    )
+    emb = _clustered_emb(spark, 3)
     exact = ann.cosine_topk(emb, [0, 1], k=5).toPandas()
     approx = ann.ivf_topk(emb, [0, 1], k=5, n_centroids=8, nprobe=4).toPandas()
     assert len(approx) == 10
@@ -239,21 +256,9 @@ def test_ivf_index_serves_without_rebuild(spark, monkeypatch, tmp_path):
     (a) returns results identical to the one-shot ivf_topk, (b) runs ZERO
     quantizer work per query (seed/Lloyd/assignment monkeypatched to
     explode), and (c) scans only the probed cids' list partitions."""
-    import numpy as np
-    import pandas as pd
-
     from searchengine_spark.sources.catalog import TableCatalog
 
-    rng = np.random.default_rng(7)
-    centers = rng.standard_normal((4, 16)) * 3
-    vecs = [
-        (centers[i % 4] + rng.standard_normal(16) * 0.2).astype("float32").tolist()
-        for i in range(200)
-    ]
-    emb = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(200), "embedding": vecs}),
-        "vec_id long, embedding array<float>",
-    )
+    emb = _clustered_emb(spark, 7)
     cat = TableCatalog(spark, str(tmp_path / "annwh"))
     info = ann.build_ivf_index(emb, cat, n_centroids=8)
     assert info == {"n_centroids": 8, "n_vectors": 200}
@@ -261,8 +266,8 @@ def test_ivf_index_serves_without_rebuild(spark, monkeypatch, tmp_path):
     oneshot = ann.ivf_topk(emb, [0, 1], k=5, n_centroids=8, nprobe=4).toPandas()
 
     # serving must never train or assign: make every build-path entry explode
-    for fn in ("ivf_seed_centroids", "_seed_rows", "_lloyd_rounds",
-               "_nearest_cid", "_ivf_vecs"):
+    for fn in ("ivf_centroids", "ivf_seed_centroids", "_seed_rows",
+               "_lloyd_rounds", "_nearest_cid", "_ivf_vecs", "_cents_literal"):
         monkeypatch.setattr(
             ann, fn,
             lambda *a, _fn=fn, **k: (_ for _ in ()).throw(
