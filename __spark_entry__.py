@@ -182,13 +182,16 @@ def q_term_stats(spark, sf_dir):
 
 
 def q_site_stats(spark, sf_dir):
-    """The statistics endpoint (M5): per-site page + lemma counts."""
+    """The statistics endpoint (M5): per-site page + lemma counts, as
+    ``SearchEngine.statistics`` serves them."""
     eng = _engine(spark, sf_dir)
-    from searchengine_spark.plans.stats import statistics_df
-
-    return statistics_df(
-        eng.catalog.read("documents"), eng.catalog.read("terms")
-    ).select("site", F.col("pages").cast("long"), F.col("lemmas").cast("long"))
+    return spark.createDataFrame(
+        [
+            (d["site"], d["pages"], d["lemmas"])
+            for d in eng.statistics()["statistics"]["detailed"]
+        ],
+        "site string, pages long, lemmas long",
+    )
 
 
 def q_search_ref(spark, sf_dir):

@@ -10,11 +10,12 @@ Three paths, mirroring production ANN systems:
   right answer when |probes| is small.
 - :func:`lsh_sign_buckets` / :func:`lsh_bucket_pairs` — the scale path:
   SEEDED random-hyperplane LSH (n_bits × n_tables, Charikar SimHash for
-  cosine) with star-pairing inside each bucket: every member pairs with the
-  bucket's canonical (min vec_id) member only, so a bucket of m vectors
-  emits m−1 candidate pairs, never m²/2 — 10^6 identical boilerplate
-  vectors cost O(n), and near-dup groups still connect through their
-  canonical. Candidates are verified with the exact cosine.
+  cosine). Candidates come from ``dedup.star_pairs``: a bucket of up to
+  ``dedup.STAR_PAIRS_CAP`` (64) members emits all m·(m−1)/2 pairs; a larger
+  one is star-paired — every member pairs with the bucket's canonical (min
+  vec_id) member only, m−1 pairs — so 10^6 identical boilerplate vectors
+  cost O(n), and their group still connects through the canonical.
+  Candidates are verified with the exact cosine.
 - :func:`build_ivf_index` / :func:`ivf_topk_indexed` — the served IVF
   path: a k-means coarse quantizer (md5-ranked seed, Lloyd rounds) assigns
   every vector to its nearest centroid's inverted list once; a probe scans

@@ -19,6 +19,8 @@ Response shapes mirror the reference DTOs (``dto/SearchResponse.java:13-20``,
 
 from __future__ import annotations
 
+import copy
+
 from pyspark.sql import DataFrame, SparkSession
 
 from searchengine_spark.config import EngineConfig
@@ -46,14 +48,21 @@ class SearchEngine:
         # operator knowing the recovery API exists.
         self.catalog.recover_all()
         self._searcher: BlockSearcher | None = None
+        # statistics() memo: (the searcher it was computed under, response).
+        # It holds only while that searcher is current, so it is dropped
+        # wherever _searcher is
+        self._stats: tuple[BlockSearcher | None, dict] | None = None
         self._transcripts: DataFrame | None = None
 
     # ---- /api/startIndexing -------------------------------------------------
     def build(self, transcripts: DataFrame, resume: bool = True) -> BuildResult:
         self._transcripts = transcripts
-        res = build_index(self.spark, transcripts, self.warehouse, self.cfg, resume=resume)
-        self._searcher = None  # tables changed; reload lazily
-        return res
+        try:
+            return build_index(self.spark, transcripts, self.warehouse, self.cfg, resume=resume)
+        finally:
+            # tables changed, and a failed build's status must show: reload
+            # lazily
+            self._searcher = None
 
     # ---- searcher lifecycle --------------------------------------------------
     @property
@@ -134,9 +143,16 @@ class SearchEngine:
 
     # ---- /api/statistics -------------------------------------------------------
     def statistics(self) -> dict:
-        cat = self.catalog
-        state = cat.read("build_state") if cat.exists("build_state") else None
-        return _statistics(cat.read("documents"), cat.read("terms"), state)
+        """StatisticsResponse-shaped dict (dto/StatisticsResponse.java:11-16).
+        Aggregated once per loaded searcher; each call returns a copy."""
+        snap = self._searcher
+        if snap is None or self._stats is None or self._stats[0] is not snap:
+            cat = self.catalog
+            state = cat.read("build_state") if cat.exists("build_state") else None
+            self._stats = (
+                snap, _statistics(cat.read("documents"), cat.read("terms"), state)
+            )
+        return copy.deepcopy(self._stats[1])
 
     # ---- POST /api/indexPage ----------------------------------------------------
     def reindex_turn(self, conv_id: str, turn_idx: int, text: str) -> int:

@@ -13,6 +13,11 @@ millis, ``StatisticsServiceImpl.java:42-51``) and ``error`` — derived from
 the ``build_state`` checkpoint table (the engine builds the whole corpus in
 one pipeline, so every site shares the build's status, the Spark analog of
 per-site ``Site.status`` flips in ``indexing/IndexingThread.java:57,75-76``).
+
+Only an index change can alter the answer, so ``SearchEngine.statistics``
+keeps it per snapshot: it runs these aggregates and the status read once
+under a loaded searcher and hands out copies until the searcher is dropped,
+so it goes stale exactly when search does.
 """
 
 from __future__ import annotations
@@ -95,7 +100,7 @@ def statistics(
 
 
 def statistics_df(documents: DataFrame, terms: DataFrame) -> DataFrame:
-    """Same aggregates as a DataFrame (per-site rows), for SQL-oracle checks."""
+    """Per-site ``(site, pages, lemmas)`` rows as a DataFrame."""
     pages = documents.groupBy("site").agg(F.count("*").alias("pages"))
     lemmas = terms.groupBy("site").agg(F.countDistinct("term").alias("lemmas"))
     return pages.join(lemmas, "site", "left").fillna(0, subset=["lemmas"])

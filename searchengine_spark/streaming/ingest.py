@@ -62,6 +62,7 @@ from __future__ import annotations
 
 import dataclasses
 import os
+from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -133,11 +134,6 @@ def append_turns(
         )
         if same_run and int(meta.get("stream_epoch", -1)) >= epoch:
             return 0  # fully committed epoch replayed by the checkpoint
-    shard_size = int(meta["shard_size"])
-    nb = int(meta["term_buckets"])
-    fgd = int(meta["flat_group_docs"])
-    base_id = int(meta["max_doc_id"]) + 1
-    mut_seq = int(meta["mut_seq"]) + 1
 
     # deterministic winner for intra-batch duplicate keys: latest ts, then
     # lexically greatest text (a replayed epoch re-picks the same row);
@@ -150,147 +146,165 @@ def append_turns(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
+    n_new = _index_new_turns(cat, meta, lemmatize_transcripts(batch), cfg)
+    if epoch is not None:
+        meta["stream_epoch"] = epoch
+        if run_id is not None:
+            meta["stream_run"] = run_id
+    if n_new or epoch is not None:
+        # --- commit: counters last (atomic swap) -----------------------------
+        cat.write_meta(meta)
+    return n_new
 
-    lemmed = lemmatize_transcripts(batch)
+
+@contextmanager
+def _pinned(df: DataFrame):
+    """``df`` materialized by ``localCheckpoint`` for the ``with`` body. On
+    exit the checkpointed RDD is unpersisted: ``DataFrame.unpersist`` drops
+    only CacheManager entries and would leave it persisted."""
+    df = df.localCheckpoint(eager=True)
+    try:
+        yield df
+    finally:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _index_new_turns(
+    cat: TableCatalog, meta: dict, lemmed: DataFrame, cfg: EngineConfig
+) -> int:
+    """Write every index table but ``index_meta`` for the lemmatized batch's
+    turns that are not indexed yet; returns their number. ``meta`` takes
+    the new corpus counters and ``mut_seq`` for the caller to commit."""
+    shard_size = int(meta["shard_size"])
+    nb = int(meta["term_buckets"])
+    fgd = int(meta["flat_group_docs"])
+    base_id = int(meta["max_doc_id"]) + 1
+    mut_seq = int(meta["mut_seq"]) + 1
+
     # already-indexed keys: prune the documents scan to the batch's convs
     # (driver list, micro-batch-bounded) → row-group conv_id stats skip
     # nearly every file; the anti-join's right side is then tiny
     batch_keys = lemmed.select("conv_id", "turn_idx", "site", "doc_len")
     convs = [r["conv_id"] for r in lemmed.select("conv_id").distinct().collect()]
     if not convs:
-        if epoch is not None:
-            meta["stream_epoch"] = epoch
-            if run_id is not None:
-                meta["stream_run"] = run_id
-            cat.write_meta(meta)
         return 0
     docs = cat.read("documents")
     seen = docs.filter(F.col("conv_id").isin(convs)).select("conv_id", "turn_idx")
     new_keys = batch_keys.join(seen, ["conv_id", "turn_idx"], "left_anti")
     ranked = assign_doc_ids(new_keys, parallelism=cfg.parallelism)
-    # PIN the assignment before any write: its lineage anti-joins the
-    # documents table, and appending to that table invalidates the cached
-    # plan (Spark refreshes caches on insert-into-path) — a re-execution
-    # would then anti-join against the already-appended rows and silently
-    # drop the batch from the posting writes. localCheckpoint truncates the
-    # lineage to materialized partitions, so the cache can go.
-    ids = ranked.withColumn(
-        "doc_id", F.col("doc_id") + F.lit(base_id)
-    ).localCheckpoint(eager=True)
-    ranked.unpersist()
-    n_new = ids.count()
-    if n_new == 0:
-        if epoch is not None:
-            meta["stream_epoch"] = epoch
-            if run_id is not None:
-                meta["stream_run"] = run_id
-            cat.write_meta(meta)
-        return 0
-
-    # --- batch posting rows (incl. #doc_len markers), O(batch) --------------
-    rows = lemmed.select(
-        "conv_id", "turn_idx", "site", "doc_len",
-        F.explode(counts_with_marker()).alias("term", "tf"),
-    ).join(F.broadcast(ids.select("conv_id", "turn_idx", "doc_id")),
-           ["conv_id", "turn_idx"])
-    flat_new = (
-        flat_postings(rows)
-        .withColumn("bucket", flat_bucket_col(F.col("term"), nb))
-        .withColumn("sgrp", sgrp_col(F.col("doc_id"), fgd))
-    )
-    # one materialization of the batch's postings: feeds the flat append,
-    # the term deltas, and the block encode without re-running the
-    # lemmatizer (plans are not shared across actions)
-    flat_new = flat_new.localCheckpoint(eager=True)
-
-    # --- postings_flat / documents: pure file appends ------------------------
-    cat.write(flat_new, "postings_flat", mode="append")
-    docs_new = ids.select(
-        "doc_id", "conv_id", "turn_idx", "site", "doc_len"
-    ).withColumn("shard", (F.col("doc_id") / F.lit(shard_size)).cast("long"))
-    cat.write(docs_new, "documents", mode="append")
-
-    # --- corpus counters (maintained, no documents scan) ---------------------
-    agg = flat_new.filter(F.col("bucket") < 0).agg(
-        F.sum("tf").alias("s")
-    ).collect()[0]
-    batch_sum_dl = int(agg["s"] or 0)
-    n_docs = int(meta["n_docs"]) + n_new
-    sum_doc_len = int(meta["sum_doc_len"]) + batch_sum_dl
-
-    # --- sites: merge ranges / append new sids (tiny table) ------------------
-    site_ranges = {
-        r["site"]: (int(r["lo"]), int(r["hi"]))
-        for r in docs_new.groupBy("site").agg(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).collect()
-    }
-    sids = update_sites(cat, site_ranges)
-
-    # --- terms / terms_global: increment from the batch itself ---------------
-    # (append-only ⇒ df' = df + batch_df; reads NOTHING posting-sized)
-    real = flat_new.filter(F.col("bucket") >= 0)
-    delta_site = real.groupBy("term", "site").agg(
-        F.count("*").alias("d_df"), F.sum("tf").alias("d_cf")
-    )
-    delta_glob = real.groupBy("term").agg(
-        F.count("*").alias("d_df"), F.sum("tf").alias("d_cf")
-    )
-    n_vocab = apply_term_deltas(
-        cat, delta_site, delta_glob, nb, mut_seq, n_docs,
-        int(meta["max_term_id"]), cfg.parallelism,
-    )
-
-    # --- posting blocks: encode the BATCH's postings, APPEND after the ------
-    # existing blocks. Every new doc_id is ABOVE every already-encoded
-    # doc_id, so the new blocks' doc ranges are disjoint from and after all
-    # existing (term, shard) blocks — the query kernel concatenates blocks
-    # in min_doc order, which stays a sorted posting list. Existing block
-    # FILES are never read or rewritten; the only corpus-sized state touched
-    # is a partition-PRUNED metadata read of the touched shards'
-    # (term, block_id) pairs for id continuation.
-    new_shards = sorted(
-        r["shard"]
-        for r in docs_new.select("shard").distinct().collect()
-    )
-    cfg_frozen = dataclasses.replace(cfg, docs_per_shard=shard_size)
-    new_blocks = encode_posting_blocks(
-        real, n_docs, None, cat.read("terms_global"), cfg_frozen,
-        documents=docs_new.select("doc_id", "conv_id", "turn_idx", "site", "doc_len"),
-        site_ids=sids,
-    )
-    existing_ids = (
-        cat.read("postings")
-        .filter(F.col("shard").isin(new_shards))  # partition-pruned
-        .groupBy("term", F.col("shard").cast("long").alias("shard"))
-        .agg(F.max("block_id").alias("_max_bid"))
-    )
-    appended = (
-        new_blocks.join(existing_ids, ["term", "shard"], "left")
-        .withColumn(
-            "block_id",
-            F.col("block_id") + F.coalesce(F.col("_max_bid") + 1, F.lit(0)),
+    with ExitStack() as pins:
+        # PIN the assignment before any write: its lineage anti-joins the
+        # documents table, and appending to that table invalidates the
+        # cached plan (Spark refreshes caches on insert-into-path) — a
+        # re-execution would then anti-join against the already-appended
+        # rows and silently drop the batch from the posting writes.
+        # localCheckpoint truncates the lineage to materialized partitions,
+        # so the cache can go.
+        ids = pins.enter_context(
+            _pinned(ranked.withColumn("doc_id", F.col("doc_id") + F.lit(base_id)))
         )
-        .drop("_max_bid")
-    )
-    cat.write(appended, "postings", mode="append")
+        ranked.unpersist()
+        n_new = ids.count()
+        if n_new == 0:
+            return 0
 
-    # --- commit: counters last (atomic swap) ---------------------------------
+        # --- batch posting rows (incl. #doc_len markers), O(batch) ----------
+        rows = lemmed.select(
+            "conv_id", "turn_idx", "site", "doc_len",
+            F.explode(counts_with_marker()).alias("term", "tf"),
+        ).join(F.broadcast(ids.select("conv_id", "turn_idx", "doc_id")),
+               ["conv_id", "turn_idx"])
+        # one materialization of the batch's postings: feeds the flat
+        # append, the term deltas, and the block encode without re-running
+        # the lemmatizer (plans are not shared across actions)
+        flat_new = pins.enter_context(
+            _pinned(
+                flat_postings(rows)
+                .withColumn("bucket", flat_bucket_col(F.col("term"), nb))
+                .withColumn("sgrp", sgrp_col(F.col("doc_id"), fgd))
+            )
+        )
+
+        # --- postings_flat / documents: pure file appends --------------------
+        cat.write(flat_new, "postings_flat", mode="append")
+        docs_new = ids.select(
+            "doc_id", "conv_id", "turn_idx", "site", "doc_len"
+        ).withColumn("shard", (F.col("doc_id") / F.lit(shard_size)).cast("long"))
+        cat.write(docs_new, "documents", mode="append")
+
+        # --- corpus counters (maintained, no documents scan) -----------------
+        agg = flat_new.filter(F.col("bucket") < 0).agg(
+            F.sum("tf").alias("s")
+        ).collect()[0]
+        batch_sum_dl = int(agg["s"] or 0)
+        n_docs = int(meta["n_docs"]) + n_new
+
+        # --- sites: merge ranges / append new sids (tiny table) --------------
+        site_ranges = {
+            r["site"]: (int(r["lo"]), int(r["hi"]))
+            for r in docs_new.groupBy("site").agg(
+                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+            ).collect()
+        }
+        sids = update_sites(cat, site_ranges)
+
+        # --- terms / terms_global: increment from the batch itself -----------
+        # (append-only ⇒ df' = df + batch_df; reads NOTHING posting-sized)
+        real = flat_new.filter(F.col("bucket") >= 0)
+        delta_site = real.groupBy("term", "site").agg(
+            F.count("*").alias("d_df"), F.sum("tf").alias("d_cf")
+        )
+        delta_glob = real.groupBy("term").agg(
+            F.count("*").alias("d_df"), F.sum("tf").alias("d_cf")
+        )
+        n_vocab = apply_term_deltas(
+            cat, delta_site, delta_glob, nb, mut_seq, n_docs,
+            int(meta["max_term_id"]), cfg.parallelism,
+        )
+
+        # --- posting blocks: encode the BATCH's postings, APPEND after the --
+        # existing blocks. Every new doc_id is ABOVE every already-encoded
+        # doc_id, so the new blocks' doc ranges are disjoint from and after
+        # all existing (term, shard) blocks — the query kernel concatenates
+        # blocks in min_doc order, which stays a sorted posting list.
+        # Existing block FILES are never read or rewritten; the only
+        # corpus-sized state touched is a partition-PRUNED metadata read of
+        # the touched shards' (term, block_id) pairs for id continuation.
+        new_shards = sorted(
+            r["shard"]
+            for r in docs_new.select("shard").distinct().collect()
+        )
+        cfg_frozen = dataclasses.replace(cfg, docs_per_shard=shard_size)
+        new_blocks = encode_posting_blocks(
+            real, n_docs, None, cat.read("terms_global"), cfg_frozen,
+            documents=docs_new.select("doc_id", "conv_id", "turn_idx", "site", "doc_len"),
+            site_ids=sids,
+        )
+        existing_ids = (
+            cat.read("postings")
+            .filter(F.col("shard").isin(new_shards))  # partition-pruned
+            .groupBy("term", F.col("shard").cast("long").alias("shard"))
+            .agg(F.max("block_id").alias("_max_bid"))
+        )
+        appended = (
+            new_blocks.join(existing_ids, ["term", "shard"], "left")
+            .withColumn(
+                "block_id",
+                F.col("block_id") + F.coalesce(F.col("_max_bid") + 1, F.lit(0)),
+            )
+            .drop("_max_bid")
+        )
+        cat.write(appended, "postings", mode="append")
+
     meta.update(
         {
             "n_docs": n_docs,
-            "sum_doc_len": sum_doc_len,
+            "sum_doc_len": int(meta["sum_doc_len"]) + batch_sum_dl,
             "max_doc_id": base_id + n_new - 1,
             "max_term_id": int(meta["max_term_id"]) + n_vocab,
             "mut_seq": mut_seq,
         }
     )
-    if epoch is not None:
-        meta["stream_epoch"] = epoch
-        if run_id is not None:
-            meta["stream_run"] = run_id
-    cat.write_meta(meta)
-
     return int(n_new)
 
 

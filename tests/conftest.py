@@ -59,3 +59,13 @@ def engine(spark, tiny_pdf):
 
 
 from searchengine_spark.queryset import REFERENCE_QUERIES  # noqa: E402,F401 — re-exported for tests
+
+
+def statistics_counts(eng) -> dict:
+    """``eng.statistics()["statistics"]`` without the build-status fields,
+    which the oracle lacks and which differ between two builds."""
+    st = eng.statistics()["statistics"]
+    for d in st["detailed"]:
+        for k in ("status", "statusTime", "error"):
+            d.pop(k)
+    return st

@@ -33,6 +33,7 @@ from searchengine_spark.sources.transcripts import (
     transcripts_spark_df,
 )
 from searchengine_spark.streaming.ingest import append_turns
+from tests.conftest import statistics_counts
 
 
 @pytest.fixture(scope="module")
@@ -147,6 +148,9 @@ def test_upsert_crash_then_retry_lands_exactly_once(spark, corpus, monkeypatch):
     )
     meta = cat.read_meta()
     assert int(meta["n_docs"]) == cat.read("documents").count()
+    # statistics too: the convzz-950001 insert crashed after writing
+    # sites, and its retry must count its page and lemmas once
+    assert statistics_counts(eng) == statistics_counts(eng2)
     for q in ("journalalpha", "journalbeta hotalpha", "hotalpha"):
         page, count = eng.search(q, mode="bm25", exact_count=True)
         page2, count2 = eng2.search(q, mode="bm25", exact_count=True)

@@ -32,6 +32,7 @@ from searchengine_spark.sources.transcripts import (
     transcripts_spark_df,
 )
 from searchengine_spark.streaming.ingest import append_turns
+from tests.conftest import statistics_counts
 
 
 @pytest.fixture(scope="module")
@@ -54,23 +55,28 @@ def _late_batch(spark, rows):
     )
 
 
-def _check_matches_rebuilt_oracle(eng, corpus, extra_rows, queries):
+def _with_rows(corpus, rows):
     extra = pd.DataFrame(
         {
-            "conv_id": [c for c, _, _ in extra_rows],
-            "turn_idx": [t for _, t, _ in extra_rows],
+            "conv_id": [c for c, _, _ in rows],
+            "turn_idx": [t for _, t, _ in rows],
             "role": "user",
-            "text": [x for _, _, x in extra_rows],
+            "text": [x for _, _, x in rows],
             "tool": None,
             "ts": pd.Timestamp("2026-02-01"),
         }
     )
-    oracle = OracleEngine().build(pd.concat([corpus, extra], ignore_index=True))
+    return pd.concat([corpus, extra], ignore_index=True)
+
+
+def _check_matches_rebuilt_oracle(eng, corpus, extra_rows, queries):
+    oracle = OracleEngine().build(_with_rows(corpus, extra_rows))
     for q, mode in queries:
         page, count = eng.search(q, mode=mode, exact_count=True)
         opage, ocount = oracle.search(q, mode=mode)
         assert count == ocount, (q, mode)
         assert list(page["conv_id"]) == list(opage["conv_id"]), (q, mode)
+    assert statistics_counts(eng) == oracle.statistics()["statistics"]
 
 
 CRASH_QUERIES = [
@@ -135,6 +141,41 @@ def test_append_crash_then_retry_lands_exactly_once(
     meta = eng.catalog.read_meta()
     assert int(meta["n_docs"]) == eng.catalog.read("documents").count()
     shutil.rmtree(wh, ignore_errors=True)
+
+
+def test_statistics_match_fresh_build_after_mutations(spark, corpus):
+    """statistics() after an append that adds a site, an upsert that
+    removes lemmas from a site, an upsert of a new key and a compaction
+    equals a fresh build's: on the mutating engine, whose memo every
+    mutation drops with the searcher, and on an engine reopened on the
+    warehouse."""
+    eng, wh = _build(spark, corpus)
+    eng.search("hotalpha")
+    eng.statistics()  # a memo under the loaded searcher: mutations drop it
+    appended = [
+        ("convzz-960001", 0, "zzsiteword hotalpha spark"),
+        ("convzz-960002", 0, "zzotherword data window"),
+    ]
+    assert eng.append_turns(_late_batch(spark, appended)) == 2
+    # zzsiteword leaves the index; hotalpha and spark leave site convzz only
+    replaced = ("convzz-960001", 0, "zzotherword поиск")
+    eng.reindex_turn(*replaced)
+    inserted = ("convzz-960003", 0, "zznewkeyword hotalpha")
+    eng.reindex_turn(*inserted)
+    assert eng.compact_appended()
+
+    final = _with_rows(corpus, [replaced, appended[1], inserted])
+    fresh = SearchEngine(spark, tempfile.mkdtemp(prefix="se_fresh_"))
+    fresh.build(transcripts_spark_df(spark, final))
+    want = statistics_counts(fresh)
+    assert want == OracleEngine().build(final).statistics()["statistics"]
+    # twice under one searcher: statistics_counts edits the returned dicts,
+    # which must not be the memo's
+    eng.search("hotalpha")
+    assert statistics_counts(eng) == statistics_counts(eng) == want
+    assert statistics_counts(SearchEngine(spark, wh)) == want
+    shutil.rmtree(wh, ignore_errors=True)
+    shutil.rmtree(fresh.warehouse, ignore_errors=True)
 
 
 def test_intra_batch_duplicates_pick_deterministic_winner(spark, corpus):

@@ -165,13 +165,20 @@ def test_statistics_status_lifecycle(built):
     assert {"documents", "terms", "postings"} <= set(running["stage"])
 
 
-def test_failed_build_status_and_metrics(spark, small_corpus):
-    """A failing stage records FAILED (surfaced in statistics) and flushes
-    metrics for stages that completed before the failure."""
+def test_failed_build_status_and_metrics(spark, small_corpus, monkeypatch):
+    """A failing stage records FAILED and flushes metrics for stages that
+    completed before the failure. statistics() reports a first build that
+    failed once its documents and terms exist, and a failed rebuild over a
+    served index at once: the failure drops the engine's snapshot."""
+    import importlib
+
     import pandas as pd
 
     from searchengine_spark.operators.doc_ids import DuplicateKeysError
     from searchengine_spark.plans.stats import build_status
+
+    # the module, not the function the plans package re-exports under its name
+    build_index = importlib.import_module("searchengine_spark.plans.build_index")
 
     pdf = small_corpus.copy()
     dup = pdf[pdf["text"].notna() & (pdf["text"] != "")].iloc[[0]]
@@ -183,6 +190,26 @@ def test_failed_build_status_and_metrics(spark, small_corpus):
     status, ts, err = build_status(eng.catalog.read("build_state"))
     assert status == "FAILED"
     assert "repeat" in err
+
+    def boom(*a, **k):
+        raise RuntimeError("postings encode failed")
+
+    monkeypatch.setattr(build_index, "encode_posting_blocks", boom)
+    with pytest.raises(RuntimeError, match="postings encode failed"):
+        eng.build(transcripts_spark_df(spark, small_corpus))
+    detailed = eng.statistics()["statistics"]["detailed"]
+    assert sum(d["pages"] for d in detailed) > 0
+    for d in detailed:
+        assert d["status"] == "FAILED" and "postings encode" in d["error"]
+    monkeypatch.undo()
+
+    eng.build(transcripts_spark_df(spark, small_corpus))
+    eng.search("hotalpha")  # a loaded searcher: statistics() memoizes under it
+    assert {d["status"] for d in eng.statistics()["statistics"]["detailed"]} == {"INDEXED"}
+    with pytest.raises(DuplicateKeysError):
+        eng.build(transcripts_spark_df(spark, pdf), resume=False)
+    for d in eng.statistics()["statistics"]["detailed"]:
+        assert d["status"] == "FAILED" and "repeat" in d["error"]
     shutil.rmtree(wh, ignore_errors=True)
 
 
