@@ -74,6 +74,12 @@ def checkpointed(df: DataFrame) -> DataFrame:
     return df.checkpoint(eager=True)
 
 
+def _unpin(df: DataFrame) -> None:
+    """Unpersist the RDD a ``localCheckpoint`` frame reads:
+    ``DataFrame.unpersist`` drops only CacheManager entries."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def star_pairs(
     df: DataFrame,
     bucket_cols: list[str],
@@ -452,19 +458,11 @@ def connected_components(
     the edge multiset never grows beyond O(E). Per round the plan lineage
     is truncated with localCheckpoint so the driver loop stays O(1) per
     round in planning cost (a cluster deployment with preemption would use
-    reliable checkpointing instead). Convergence = the edge set is stable
-    across one large+small round; afterwards every surviving edge points
-    node → its component root."""
-    edges = (
-        pairs.select(F.col("a").cast("long"), F.col("b").cast("long"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    if edges.rdd.isEmpty():
-        return pairs.sparkSession.createDataFrame(
-            [], "doc_id long, component long"
-        )
+    reliable checkpointing instead); each round releases the checkpoint it
+    supersedes, and the result is a reliable checkpoint, so no RDD stays
+    persisted. Convergence = the edge set is stable across one large+small
+    round; afterwards every surviving edge points node → its component
+    root."""
 
     def large_star(e: DataFrame) -> DataFrame:
         # both directions; for each u: m = min(Γ(u) ∪ {u}); link every
@@ -517,35 +515,51 @@ def connected_components(
         ).collect()[0]
         return int(r["n"]), int(r["h"] or 0)
 
-    sig = _signature(edges)
-    converged = False
-    for _ in range(max_iter):
-        prev = edges
-        edges = small_star(large_star(edges)).localCheckpoint()
-        nxt_sig = _signature(edges)
-        if nxt_sig == sig:
-            # exact confirmation, paid ONCE on the round the signature
-            # first matches: both sides are distinct sets with equal
-            # counts, so one-direction exceptAll emptiness ⟺ set equality
-            # — closes the (astronomically small) cross-round Σhash
-            # collision window that would falsely certify convergence
-            if edges.exceptAll(prev).isEmpty():
-                converged = True
+    edges = (
+        pairs.select(F.col("a").cast("long"), F.col("b").cast("long"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+        .localCheckpoint()
+    )
+    try:
+        if edges.rdd.isEmpty():
+            return pairs.sparkSession.createDataFrame(
+                [], "doc_id long, component long"
+            )
+        sig = _signature(edges)
+        converged = False
+        for _ in range(max_iter):
+            prev = edges
+            try:
+                edges = small_star(large_star(prev)).localCheckpoint()
+                nxt_sig = _signature(edges)
+                # exact confirmation, paid ONCE on the round the signature
+                # first matches: both sides are distinct sets with equal
+                # counts, so one-direction exceptAll emptiness ⟺ set
+                # equality — closes the (astronomically small) cross-round
+                # Σhash collision window that would falsely certify
+                # convergence
+                converged = nxt_sig == sig and edges.exceptAll(prev).isEmpty()
+            finally:
+                _unpin(prev)
+            if converged:
                 break
-        sig = nxt_sig
-    if not converged:
-        # an unconverged edge multiset is not star-shaped; the (member, root)
-        # labeling below would be silently wrong — fail loudly instead
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(pathological graph?); raise max_iter"
-        )
+            sig = nxt_sig
+        if not converged:
+            # an unconverged edge multiset is not star-shaped; the (member,
+            # root) labeling below would be silently wrong — fail loudly
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds "
+                "(pathological graph?); raise max_iter"
+            )
 
-    # fixpoint: every edge is (member, root). Roots label themselves.
-    members = edges.select(
-        F.col("a").alias("doc_id"), F.col("b").alias("component")
-    )
-    roots = edges.select(F.col("b").alias("doc_id")).distinct().select(
-        "doc_id", F.col("doc_id").alias("component")
-    )
-    return members.unionByName(roots).distinct()
+        # fixpoint: every edge is (member, root). Roots label themselves.
+        members = edges.select(
+            F.col("a").alias("doc_id"), F.col("b").alias("component")
+        )
+        roots = edges.select(F.col("b").alias("doc_id")).distinct().select(
+            "doc_id", F.col("doc_id").alias("component")
+        )
+        return checkpointed(members.unionByName(roots).distinct())
+    finally:
+        _unpin(edges)

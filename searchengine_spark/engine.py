@@ -73,9 +73,8 @@ class SearchEngine:
             # are maintained counters, site ranges live in the sites table —
             # NO corpus-sized job runs before the first query
             meta = cat.read_meta()
-            sites_df = cat.read("sites")
-            check_index_format(meta, sites_df)
-            site_rows = sites_df.collect()
+            site_rows = cat.read("sites").collect()
+            check_index_format(meta, site_rows)
             n_docs = int(meta["n_docs"])
             self._searcher = BlockSearcher(
                 blocks=cat.read("postings"),

@@ -4,5 +4,4 @@ from searchengine_spark.operators.postings import (  # noqa: F401
     flat_postings,
     term_stats,
     encode_posting_blocks,
-    BLOCKS_SCHEMA,
 )

@@ -44,11 +44,6 @@ from searchengine_spark.operators.doc_ids import assign_doc_ids
 #: into index_meta at build time.
 BLOCK_SIZE = 128
 
-BLOCKS_SCHEMA = (
-    "term string, shard long, block_id int, min_doc long, max_doc long, "
-    "count int, block_max_tf int, doc_gaps binary, tfs binary"
-)
-
 #: mapInArrow output before the term_id → term string join (1/BLOCK_SIZE the
 #: row count of the postings themselves, so the join input is small)
 _ENC_SCHEMA = (
@@ -329,7 +324,8 @@ def encode_posting_blocks(
     documents: DataFrame,
     site_ids: dict[str, int],
 ) -> DataFrame:
-    """flat postings → compressed block table (BLOCKS_SCHEMA).
+    """flat postings → compressed block rows of the ``postings`` table
+    (its ``catalog.TABLES`` schema, ``shard`` still a long).
 
     Each output row is one block of ≤``BLOCK_SIZE`` postings of one
     ``(term, shard)``: doc-id gaps delta+varint encoded, tfs varint encoded,

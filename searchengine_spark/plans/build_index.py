@@ -37,13 +37,7 @@ from searchengine_spark.operators.postings import (
     lemmatize_transcripts,
     term_stats,
 )
-from searchengine_spark.sources.catalog import TableCatalog, tiny_df
-
-BUILD_STATE_SCHEMA = (
-    "stage string, partition_id long, status string, rows long, checksum string, "
-    "started_ts double, finished_ts double, error string, run_id string"
-)
-METRICS_SCHEMA = "run_id string, stage string, key string, value double, ts double"
+from searchengine_spark.sources.catalog import TABLES, TableCatalog, tiny_df
 
 
 @dataclass
@@ -58,11 +52,17 @@ class BuildResult:
 
 
 def _append_state(cat: TableCatalog, rows: list[tuple]) -> None:
-    cat.write(tiny_df(cat.spark, rows, BUILD_STATE_SCHEMA), "build_state", mode="append")
+    cat.write(
+        tiny_df(cat.spark, rows, TABLES["build_state"].schema),
+        "build_state", mode="append",
+    )
 
 
 def _append_metrics(cat: TableCatalog, rows: list[tuple]) -> None:
-    cat.write(tiny_df(cat.spark, rows, METRICS_SCHEMA), "metrics", mode="append")
+    cat.write(
+        tiny_df(cat.spark, rows, TABLES["metrics"].schema),
+        "metrics", mode="append",
+    )
 
 
 def _done_stages(cat: TableCatalog) -> set[str]:
@@ -341,7 +341,7 @@ def build_index(
                     (s, i, site_stats[s][0], site_stats[s][1])
                     for s, i in sids.items()
                 ),
-                "site string, sid long, lo long, hi long",
+                TABLES["sites"].schema,
             ),
             "sites",
         )

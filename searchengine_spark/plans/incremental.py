@@ -78,6 +78,7 @@ from searchengine_spark.plans.latedata import (
     update_sites,
 )
 from searchengine_spark.sources.catalog import (
+    TABLES,
     TableCatalog,
     check_index_format,
     tiny_df,
@@ -85,10 +86,6 @@ from searchengine_spark.sources.catalog import (
 from searchengine_spark.sources.transcripts import site_of_conv
 
 JOURNAL_TABLE = "mutation_journal"
-JOURNAL_SCHEMA = (
-    "mut_seq long, conv_id string, turn_idx int, text string, doc_id long, "
-    "old_doc_len int, is_insert int, old_terms array<string>, old_tfs array<long>"
-)
 
 
 def _read_journal(cat: TableCatalog) -> dict | None:
@@ -122,7 +119,7 @@ def _write_journal(cat: TableCatalog, st: dict) -> None:
                 st["doc_id"], st["old_doc_len"], int(st["is_insert"]),
                 old_terms, [st["old_rows"][t] for t in old_terms],
             )],
-            JOURNAL_SCHEMA,
+            TABLES[JOURNAL_TABLE].schema,
         ),
         JOURNAL_TABLE,
     )
@@ -142,7 +139,7 @@ def complete_pending_mutation(
     or None)."""
     cat.recover_all()
     meta = cat.read_meta()
-    check_index_format(meta, cat.read("sites"))
+    check_index_format(meta, cat.read("sites").collect())
     fence_orphans(
         cat,
         int(meta["max_doc_id"]) + 1,
@@ -293,8 +290,7 @@ def _apply_upsert(
     new_doc = tiny_df(
         spark,
         [(doc_id, conv_id, turn_idx, site, doc_len, dshard)],
-        "doc_id long, conv_id string, turn_idx int, site string, "
-        "doc_len int, shard long",
+        TABLES["documents"].schema,
     )
     keep_docs = docs.filter(
         (F.col("shard") == dshard) & (F.col("doc_id") != doc_id)

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from searchengine_spark.operators.doc_ids import assign_doc_ids
 from searchengine_spark.operators.postings import idf_col, term_bucket_col
-from searchengine_spark.sources.catalog import TableCatalog, tiny_df
+from searchengine_spark.sources.catalog import TABLES, TableCatalog, tiny_df
 
 TERMS_GLOBAL_COLS = ["term", "df_global", "cf_global", "idf", "term_id", "bucket", "mut_epoch"]
 TERMS_COLS = ["term", "site", "df", "cf", "bucket", "mut_epoch"]
@@ -267,7 +267,7 @@ def update_sites(
             tiny_df(
                 cat.spark,
                 sorted((s, v[0], v[1], v[2]) for s, v in rows.items()),
-                "site string, sid long, lo long, hi long",
+                TABLES["sites"].schema,
             ),
             "sites",
         )

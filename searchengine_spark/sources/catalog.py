@@ -13,10 +13,10 @@ against a minimal interface with two backends:
   ``df.writeTo(f"{cat}.{db}.{name}")`` — enabled automatically when
   ``spark.sql.catalog.*`` for an Iceberg catalog is configured.
 
-Each table's physical layout (partition columns and write order) is
-declared once, with the table, in :data:`LAYOUT` — as an Iceberg table's
-partition spec and sort order are table properties — and every write of
-that table applies it. Writers pass only the rows.
+Each table's schema, partition columns and write order are declared once,
+in :data:`TABLES` — as an Iceberg table's schema, partition spec and sort
+order are table metadata. Every write of a table applies its layout, and
+every parquet read passes its schema. Writers pass only the rows.
 
 Everything above this module (build pipeline, checkpoints, query path) is
 backend-agnostic, so pointing the engine at a real Iceberg catalog on a
@@ -28,14 +28,31 @@ from __future__ import annotations
 import os
 from functools import reduce
 from operator import and_
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: table name → (partition columns, write order). The write order emulates
-#: Iceberg's ``WRITE ORDERED BY``: files sorted within their partition give
-#: parquet row-group min/max stats file-level skipping power (SURVEY §4.1
-#: pushdown row).
+
+class Table(NamedTuple):
+    """One engine table, declared once: its Spark schema (a DDL string),
+    its partition columns and its write order."""
+
+    schema: str
+    parts: tuple[str, ...] = ()
+    order: tuple[str, ...] = ()
+
+
+#: Every engine table, by name. A table's schema is what a parquet read of
+#: it infers: data columns in write order, then the partition columns, which
+#: partition discovery reads back as ``int``. Parquet reads pass it
+#: (``spark.read.schema``), so no read runs a schema-inference job — as an
+#: Iceberg table keeps its schema in metadata. Writes do not check frames
+#: against it; writers that build rows from Python use it as their schema.
+#:
+#: The write order emulates Iceberg's ``WRITE ORDERED BY``: files sorted
+#: within their partition give parquet row-group min/max stats file-level
+#: skipping power (SURVEY §4.1 pushdown row).
 #:
 #: - ``postings_flat`` by (term-hash bucket, doc-range group): an upsert
 #:   rewrites only the touched CELLS (corpus/(nb·n_groups) rows each) and the
@@ -48,22 +65,58 @@ from pyspark.sql import functions as F
 #:   one bucket, and late data rewrites only the touched buckets.
 #: - ``ann_lists`` by IVF centroid: serving reads only the probed lists.
 #:
-#: Tables absent here (index_meta, sites, mutation_journal, build_state,
-#: metrics, ann_centroids) are written unpartitioned and unsorted.
-LAYOUT: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
-    "postings_flat": (("bucket", "sgrp"), ("bucket", "sgrp", "doc_id", "term")),
-    "documents": (("shard",), ("shard", "doc_id")),
-    "postings": (("shard",), ("shard", "term")),
-    "terms": (("bucket",), ("bucket", "term")),
-    "terms_global": (("bucket",), ("bucket", "term")),
-    "ann_lists": (("cid",), ("cid", "vec_id")),
+#: The other tables are written unpartitioned and unsorted.
+TABLES: dict[str, Table] = {
+    "build_state": Table(
+        "stage string, partition_id long, status string, rows long, "
+        "checksum string, started_ts double, finished_ts double, "
+        "error string, run_id string"
+    ),
+    "metrics": Table(
+        "run_id string, stage string, key string, value double, ts double"
+    ),
+    "index_meta": Table("key string, value double"),
+    "sites": Table("site string, sid long, lo long, hi long"),
+    "documents": Table(
+        "doc_id long, conv_id string, turn_idx int, site string, "
+        "doc_len int, shard int",
+        ("shard",), ("shard", "doc_id"),
+    ),
+    "postings_flat": Table(
+        "doc_id long, site string, term string, tf long, bucket int, sgrp int",
+        ("bucket", "sgrp"), ("bucket", "sgrp", "doc_id", "term"),
+    ),
+    "postings": Table(
+        "term string, block_id int, min_doc long, max_doc long, count int, "
+        "block_max_tf int, doc_gaps binary, tfs binary, shard int",
+        ("shard",), ("shard", "term"),
+    ),
+    "terms": Table(
+        "term string, site string, df long, cf long, mut_epoch long, bucket int",
+        ("bucket",), ("bucket", "term"),
+    ),
+    "terms_global": Table(
+        "term string, df_global long, cf_global long, idf double, "
+        "term_id long, mut_epoch long, bucket int",
+        ("bucket",), ("bucket", "term"),
+    ),
+    "mutation_journal": Table(
+        "mut_seq long, conv_id string, turn_idx int, text string, "
+        "doc_id long, old_doc_len int, is_insert int, "
+        "old_terms array<string>, old_tfs array<long>"
+    ),
+    "ann_centroids": Table("cid long, cvec array<double>, cnrm double"),
+    "ann_lists": Table(
+        "vec_id long, vec array<double>, vnrm double, cid int",
+        ("cid",), ("cid", "vec_id"),
+    ),
 }
 
 
 def _laid_out(df: DataFrame, name: str) -> tuple[DataFrame, tuple[str, ...]]:
     """(``df`` in ``name``'s write order, ``name``'s partition columns)."""
-    parts, order = LAYOUT.get(name, ((), ()))
-    return (df.sortWithinPartitions(*order) if order else df), parts
+    t = TABLES.get(name, Table(""))
+    return (df.sortWithinPartitions(*t.order) if t.order else df), t.parts
 
 
 def _write_parquet(df: DataFrame, parts: tuple[str, ...], mode: str, path: str) -> None:
@@ -74,25 +127,28 @@ def _write_parquet(df: DataFrame, parts: tuple[str, ...], mode: str, path: str) 
 
 
 def tiny_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """Single-partition DataFrame for metadata-sized writes. Measured on
-    this Spark build: writing a driver-local ``createDataFrame(list)``
-    (LocalRelation) costs 5-8 s per tiny append, while the same rows via
-    ``parallelize(rows, 1)`` cost ~0.4 s — and a build does ~7 such writes
-    (state markers, metrics, meta tables)."""
+    """Single-partition DataFrame for metadata-sized writes. Measured on 4
+    cores in a fresh ``local[4]`` session after one ``count()``: the
+    session's first parquet write costs 2.4-3.8 s by either route; later
+    writes of a driver-local ``createDataFrame(list)`` cost 0.47-0.70 s,
+    and of the same rows via ``parallelize(rows, 1)`` 0.34-0.47 s — and a
+    build does ~7 such writes (state markers, metrics, meta tables)."""
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 
-def check_index_format(meta: dict, sites: DataFrame) -> None:
+def check_index_format(meta: dict, sites: list) -> None:
     """The searcher and every mutation read these index_meta keys (every
     build writes them, plans/build_index.py) and the ``sites`` table's
     ``lo``/``hi`` range directly. A warehouse from before that format raises
-    an explicit 'index format too old' error naming what is missing."""
+    an explicit 'index format too old' error naming what is missing.
+    ``sites`` is the collected site rows: read with the declared schema, a
+    ``sites`` file without ``lo``/``hi`` has them null."""
     keys = (
         "shard_size", "n_docs", "sum_doc_len", "term_buckets",
         "flat_group_docs", "mut_seq",
     )
     missing = [k for k in keys if k not in meta] + [
-        f"sites.{c}" for c in ("lo", "hi") if c not in sites.columns
+        f"sites.{c}" for c in ("lo", "hi") if any(r[c] is None for r in sites)
     ]
     if missing:
         raise RuntimeError(
@@ -138,10 +194,10 @@ class TableCatalog:
     def read(self, name: str) -> DataFrame:
         if self.iceberg_catalog:
             return self.spark.read.table(self._ident(name))
-        return self.spark.read.parquet(self.path(name))
+        return self.spark.read.schema(TABLES[name].schema).parquet(self.path(name))
 
     def write(self, df: DataFrame, name: str, mode: str = "overwrite") -> None:
-        """Overwrite or append to a table, laid out by its :data:`LAYOUT`
+        """Overwrite or append to a table, laid out by its :data:`TABLES`
         entry. Under Iceberg, an overwrite (re)creates the table with that
         partition spec, and an append to an absent table creates it, as the
         parquet branch does."""
@@ -250,9 +306,9 @@ class TableCatalog:
 
         ``partition_values`` holds one value per partition, or one tuple per
         partition of a multi-column layout (postings_flat's (bucket, sgrp)
-        cells), in :data:`LAYOUT` column order. Every named partition is
-        emptied, then refilled from ``df``: a named partition with no rows
-        in ``df`` ends up empty. Other partitions' files are NEVER rewritten
+        cells), in the order of the table's :data:`TABLES` partition
+        columns. Every named partition is emptied, then refilled from
+        ``df``: a named partition with no rows in ``df`` ends up empty. Other partitions' files are NEVER rewritten
         (asserted byte-identical by ``test_incremental_partition_stability``).
         ``df`` must contain only rows belonging to the named partitions.
         Parquet backend: write to a temp dir first (the inputs may read the
@@ -293,7 +349,7 @@ class TableCatalog:
     def read_partitions(self, name: str, subdirs: list[str]) -> DataFrame | None:
         """Read ONLY the named partition subdirectories (e.g.
         ``["bucket=3/sgrp=7"]``) of a partitioned table — unlike a filtered
-        ``read()``, not even schema inference touches any other file. Used by
+        ``read()``, not even the file listing touches any other file. Used by
         the streaming recovery fence so an append provably reads zero
         non-tail postings_flat files. Returns None when none of the
         directories exist (→ nothing to read). Iceberg backend: snapshot
@@ -306,7 +362,11 @@ class TableCatalog:
         paths = [p for p in paths if os.path.isdir(p)]
         if not paths:
             return None
-        return self.spark.read.option("basePath", base).parquet(*paths)
+        return (
+            self.spark.read.schema(TABLES[name].schema)
+            .option("basePath", base)
+            .parquet(*paths)
+        )
 
     def partition_dirs(self, name: str) -> list[str]:
         """Top-level ``col=value`` partition directory names of a parquet
@@ -331,7 +391,7 @@ class TableCatalog:
         df = tiny_df(
             self.spark,
             sorted((k, float(v)) for k, v in meta.items()),
-            "key string, value double",
+            TABLES["index_meta"].schema,
         )
         self.replace(df, "index_meta")
 

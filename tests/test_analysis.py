@@ -55,7 +55,8 @@ def _clustered_emb(spark, seed):
 @pytest.mark.parametrize(
     "op",
     ["exact_duplicates", "minhash_lsh_pairs", "simhash_pairs", "ngram_jaccard_pairs",
-     "lsh_bucket_pairs", "ivf_topk_small", "ivf_topk_large", "build_ivf_index"],
+     "lsh_bucket_pairs", "ivf_topk_small", "ivf_topk_large", "build_ivf_index",
+     "connected_components"],
 )
 def test_operators_release_cache(spark, docs, tmp_path, op):
     """An operator unpersists what it persisted before it returns: Spark's
@@ -84,6 +85,11 @@ def test_operators_release_cache(spark, docs, tmp_path, op):
         cat = TableCatalog(spark, str(tmp_path / "annwh"))
         ann.build_ivf_index(_clustered_emb(spark, 3), cat, n_centroids=8)
         out = cat.read("ann_lists")
+    elif op == "connected_components":
+        # a chain plus an island: several rounds, each checkpointed
+        out = dedup.connected_components(spark.createDataFrame(
+            [(0, 1), (1, 2), (2, 3), (3, 4), (7, 8)], "a long, b long"
+        ))
     else:
         out = getattr(dedup, op)(docs)
     assert cache.isEmpty(), op

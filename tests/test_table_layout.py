@@ -1,11 +1,13 @@
-"""On-disk layout of the index tables, and cache release by the writers.
+"""On-disk layout and declared schemas of the index tables, and cache
+release by the writers.
 
-Every table in ``catalog.LAYOUT`` keeps its declared partition nesting and
-write order through a build and each late-data path. The upsert's cell
-reads, the append fence's tail-only probes and the query kernel's block
-scans prune on that order through parquet row-group min/max stats. No
-build or mutation may leave a DataFrame in Spark's cache or an RDD
-persisted.
+Every partitioned table in ``catalog.TABLES`` keeps its declared partition
+nesting and write order through a build and each late-data path. The
+upsert's cell reads, the append fence's tail-only probes and the query
+kernel's block scans prune on that order through parquet row-group min/max
+stats. No build or mutation may leave a DataFrame in Spark's cache or an
+RDD persisted. Every table's declared schema is what its files infer, so
+reads and the searcher load launch no schema-inference job.
 """
 
 from __future__ import annotations
@@ -13,21 +15,23 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import uuid
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.types import StructType
 
 from searchengine_spark.config import EngineConfig
 from searchengine_spark.engine import SearchEngine
-from searchengine_spark.sources.catalog import LAYOUT
+from searchengine_spark.sources.catalog import TABLES, TableCatalog
 from searchengine_spark.sources.transcripts import transcripts_spark_df
 
 
 @pytest.fixture(scope="module")
 def mutated(spark, tiny_pdf):
     """(warehouse, {step: (Spark's cache was empty after it, the RDDs it
-    left persisted)}) after a build, an append, an upsert, a compaction and
-    an ANN index build."""
+    left persisted)}) after a build, an append that adds a site, an upsert,
+    a compaction and an ANN index build."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     persistent = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
@@ -44,11 +48,12 @@ def mutated(spark, tiny_pdf):
     step("build", lambda: eng.build(transcripts_spark_df(spark, tiny_pdf)))
     batch = spark.createDataFrame(
         [("conv00-700001", t, "user", f"layoutword append turn {t}", None, None)
-         for t in range(3)],
+         for t in range(3)]
+        + [("convzz-700001", 0, "user", "layoutword new site", None, None)],
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp",
     )
-    assert step("append_turns", lambda: eng.append_turns(batch)) == 3
+    assert step("append_turns", lambda: eng.append_turns(batch)) == 4
     row = tiny_pdf[tiny_pdf["text"].fillna("") != ""].iloc[5]
     step("reindex_turn", lambda: eng.reindex_turn(
         row["conv_id"], int(row["turn_idx"]), "layoutword " + row["text"]
@@ -63,12 +68,12 @@ def mutated(spark, tiny_pdf):
     shutil.rmtree(wh, ignore_errors=True)
 
 
-@pytest.mark.parametrize("table", sorted(LAYOUT))
+@pytest.mark.parametrize("table", sorted(n for n, t in TABLES.items() if t.parts))
 def test_layout_on_disk(mutated, table):
     """Partition directories nest in the declared order, and every data
     file is non-decreasing in the write order's in-file columns."""
     wh, _ = mutated
-    parts, order = LAYOUT[table]
+    _, parts, order = TABLES[table]
     root = os.path.join(wh, table)
     files = [
         os.path.join(d, f)
@@ -96,3 +101,46 @@ def test_writers_release_cache(mutated, step):
     empty, rdds = left[step]
     assert empty, f"{step} left DataFrames in Spark's cache"
     assert not rdds, f"{step} left RDDs {sorted(rdds)} persisted"
+
+
+def test_declared_schemas_match_files(spark, mutated):
+    """Every table the build and the mutations wrote is declared, and its
+    declared schema is what a parquet read infers from all of its files
+    (``mergeSchema`` reads every footer): same column names, types and
+    order. A catalog read returns that schema."""
+    wh, _ = mutated
+    cat = TableCatalog(spark, wh)
+    written = sorted(
+        d for d in os.listdir(wh) if os.path.isdir(os.path.join(wh, d))
+    )
+    assert written == sorted(TABLES)
+    for name in written:
+        inferred = (
+            spark.read.option("mergeSchema", "true").parquet(cat.path(name)).schema
+        )
+        assert StructType.fromDDL(TABLES[name].schema) == inferred, name
+        assert cat.read(name).schema == inferred, name
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reads_and_searcher_load_run_no_inference_jobs(spark, mutated):
+    """A catalog read runs no Spark job, and loading the searcher runs only
+    its two collects (index_meta and sites)."""
+    wh, _ = mutated
+    cat = TableCatalog(spark, wh)
+    for name in sorted(TABLES):
+        assert _jobs_run(spark, lambda: cat.read(name)) == 0, name
+    assert _jobs_run(spark, lambda: SearchEngine(spark, wh).searcher) <= 2
