@@ -10,7 +10,8 @@ Maps the reference API surface (SURVEY §3) onto the Spark engine:
 - ``GET /api/statistics``     → :meth:`SearchEngine.statistics`
   (``controllers/ApiController.java:25-29``)
 - ``POST /api/indexPage``     → :meth:`SearchEngine.reindex_turn`
-  (``controllers/ApiController.java:45-52``)
+  (``controllers/ApiController.java:45-52``); :meth:`SearchEngine.upsert_turns`
+  re-indexes a batch of turns in one mutation
 
 Response shapes mirror the reference DTOs (``dto/SearchResponse.java:13-20``,
 ``dto/search/DetailedSearchItem.java:10-24``): search returns
@@ -27,6 +28,7 @@ from searchengine_spark.config import EngineConfig
 from searchengine_spark.operators.search import BlockSearcher, EmptySearchQueryError
 from searchengine_spark.plans.build_index import BuildResult, build_index
 from searchengine_spark.plans.incremental import reindex_turn as _reindex
+from searchengine_spark.plans.incremental import upsert_turns as _upsert
 from searchengine_spark.plans.stats import statistics as _statistics
 from searchengine_spark.sources.catalog import TableCatalog, check_index_format
 
@@ -57,11 +59,18 @@ class SearchEngine:
     # ---- /api/startIndexing -------------------------------------------------
     def build(self, transcripts: DataFrame, resume: bool = True) -> BuildResult:
         self._transcripts = transcripts
+        return self._mutate(
+            build_index, self.spark, transcripts, self.warehouse, self.cfg, resume=resume
+        )
+
+    def _mutate(self, write, *args, **kw):
+        """``write(*args, **kw)``, then drop the searcher (and with it the
+        statistics memo) to reload lazily — also when the write raised or
+        wrote nothing: a failed build's status must show, and a write that
+        failed, or completed a crashed mutation, may have changed tables."""
         try:
-            return build_index(self.spark, transcripts, self.warehouse, self.cfg, resume=resume)
+            return write(*args, **kw)
         finally:
-            # tables changed, and a failed build's status must show: reload
-            # lazily
             self._searcher = None
 
     # ---- searcher lifecycle --------------------------------------------------
@@ -155,21 +164,29 @@ class SearchEngine:
 
     # ---- POST /api/indexPage ----------------------------------------------------
     def reindex_turn(self, conv_id: str, turn_idx: int, text: str) -> int:
-        doc_id = _reindex(self.spark, self.warehouse, conv_id, turn_idx, text, self.cfg)
-        self._searcher = None
-        return doc_id
+        return self._mutate(
+            _reindex, self.spark, self.warehouse, conv_id, turn_idx, text, self.cfg
+        )
 
-    # ---- streaming / bulk late-data append --------------------------------------
+    # ---- late data: batched upsert and append -----------------------------------
+    def upsert_turns(self, transcripts: DataFrame) -> int:
+        """Insert or replace a batch of turns in one mutation; a turn
+        without text removes its key. Returns the number of turns written
+        (plans/incremental.py)."""
+        return self._mutate(
+            _upsert, self.spark, self.warehouse, transcripts, self.cfg,
+            replace_existing=True,
+        )
+
     def append_turns(self, transcripts: DataFrame, epoch: int | None = None) -> int:
         """Append a batch of NEW turns (late data; already-indexed keys are
         dropped). O(batch) reads+writes, crash-safe under retry — see
-        streaming/ingest.py's commit protocol."""
+        plans/incremental.py's commit protocol."""
         from searchengine_spark.streaming.ingest import append_turns as _append
 
-        n = _append(self.spark, self.warehouse, transcripts, self.cfg, epoch=epoch)
-        if n:
-            self._searcher = None
-        return n
+        return self._mutate(
+            _append, self.spark, self.warehouse, transcripts, self.cfg, epoch=epoch
+        )
 
     # ---- ANN: persisted IVF index over an embedding table -----------------------
     def build_ann_index(self, embeddings: DataFrame, n_centroids: int = 16,
@@ -200,9 +217,7 @@ class SearchEngine:
         small appends. Returns the shard's block count after compaction."""
         from searchengine_spark.plans.compaction import compact_shard as _compact
 
-        n = _compact(self.spark, self.warehouse, shard, self.cfg)
-        self._searcher = None
-        return n
+        return self._mutate(_compact, self.spark, self.warehouse, shard, self.cfg)
 
     def compact_appended(self) -> dict[int, int]:
         """Compact every shard the append path may have fragmented (all
@@ -212,9 +227,7 @@ class SearchEngine:
             compact_shard as _compact,
         )
 
-        out = {
+        return self._mutate(lambda: {
             s: _compact(self.spark, self.warehouse, s, self.cfg)
             for s in appended_shards(self.catalog)
-        }
-        self._searcher = None
-        return out
+        })

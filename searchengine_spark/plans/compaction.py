@@ -1,12 +1,12 @@
 """Shard compaction: squash streaming-append block tails without touching text.
 
 Repeated small appends leave ≤1 under-filled posting block per (term, shard)
-per micro-batch (streaming/ingest.py appends blocks AFTER the existing runs —
-correct but fragmenting). ``compact_shard`` re-encodes ONE doc-range shard's
-blocks from its postings_flat cells — the same re-encode the M1 upsert uses,
-minus any text change — restoring fresh-build block geometry. Reference
-analog: the bulk-save consolidation that folds per-page maps into one write
-(``indexing/IndexingThread.java:127-149``).
+per micro-batch (the append shape of plans/incremental.py puts blocks AFTER
+the existing runs — correct but fragmenting). ``compact_shard`` re-encodes
+ONE doc-range shard's blocks from its postings_flat cells — the re-encode a
+replaced key's shard gets, minus any text change — restoring fresh-build
+block geometry. Reference analog: the bulk-save consolidation that folds
+per-page maps into one write (``indexing/IndexingThread.java:127-149``).
 
 Scale shape: a shard is ≤ MAX_DOCS_PER_SHARD docs; its flat rows live in ONE
 doc-range group's cells (flat_group_docs is a multiple of shard_size), read
@@ -43,7 +43,7 @@ def compact_shard(
     cat = TableCatalog(spark, warehouse)
     # a crashed append/upsert must be repaired/completed before re-encoding
     # from postings_flat, or orphan rows / missing term_ids leak into blocks
-    meta, _ = complete_pending_mutation(spark, cat, cfg)
+    meta, sites, _ = complete_pending_mutation(cat, cfg)
     shard_size = int(meta["shard_size"])
     fgd = int(meta["flat_group_docs"])
     n_docs = int(meta["n_docs"])
@@ -57,7 +57,7 @@ def compact_shard(
         & (F.col("doc_id") < hi)
     )
     shard_docs = cat.read("documents").filter(F.col("shard") == shard)
-    sids = {r["site"]: int(r["sid"]) for r in cat.read("sites").collect()}
+    sids = {s: v[0] for s, v in sites.items()}
     cfg_frozen = dataclasses.replace(cfg, docs_per_shard=shard_size)
     blocks = encode_posting_blocks(
         flat, n_docs, None, cat.read("terms_global"), cfg_frozen,

@@ -103,7 +103,7 @@ TABLES: dict[str, Table] = {
     "mutation_journal": Table(
         "mut_seq long, conv_id string, turn_idx int, text string, "
         "doc_id long, old_doc_len int, is_insert int, "
-        "old_terms array<string>, old_tfs array<long>"
+        "old_terms array<string>, old_tfs array<long>, epoch long, run_id long"
     ),
     "ann_centroids": Table("cid long, cvec array<double>, cnrm double"),
     "ann_lists": Table(

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+import uuid
 
 import pytest
 
@@ -69,3 +70,18 @@ def statistics_counts(eng) -> dict:
         for k in ("status", "statusTime", "error"):
             d.pop(k)
     return st
+
+
+def jobs_run(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted through a job group after the
+    listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -1,9 +1,10 @@
-"""Late-data crash-safety + scale-honesty tests (plans/latedata.py,
+"""Late-data crash-safety + scale-honesty tests (plans/incremental.py,
 streaming/ingest.py, plans/compaction.py).
 
-What round 3's commit protocol must guarantee:
-- a micro-batch replayed after a crash at ANY point lands exactly once
-  (fence + per-bucket mut_seq stamps + meta-last commit);
+What the commit protocol must guarantee:
+- a batch replayed after a crash at ANY point lands exactly once (fence +
+  journal replay + per-bucket mut_seq stamps + meta-last commit), and so
+  does a crashed batch that the next mutation completes;
 - an append reads ZERO postings_flat data files outside the recovery
   fence's tail cells (proved by corrupting every non-tail file);
 - intra-batch duplicate keys collapse to a deterministic winner instead of
@@ -17,12 +18,13 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from datetime import datetime
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-import searchengine_spark.streaming.ingest as ingest_mod
+import searchengine_spark.plans.incremental as inc_mod
 from searchengine_spark.config import EngineConfig
 from searchengine_spark.engine import SearchEngine
 from searchengine_spark.oracle.oracle import OracleEngine
@@ -31,8 +33,9 @@ from searchengine_spark.sources.transcripts import (
     generate_transcripts,
     transcripts_spark_df,
 )
+from searchengine_spark.plans.incremental import upsert_turns
 from searchengine_spark.streaming.ingest import append_turns
-from tests.conftest import statistics_counts
+from tests.conftest import jobs_run, statistics_counts
 
 
 @pytest.fixture(scope="module")
@@ -56,17 +59,27 @@ def _late_batch(spark, rows):
 
 
 def _with_rows(corpus, rows):
+    """``corpus`` with each (conv_id, turn_idx, text) row's text: replaced
+    where the key exists, appended as a new turn where it does not."""
+    out = corpus.copy()
+    new = []
+    for c, t, x in rows:
+        at = (out["conv_id"] == c) & (out["turn_idx"] == t)
+        if at.any():
+            out.loc[at, "text"] = x
+        else:
+            new.append((c, t, x))
     extra = pd.DataFrame(
         {
-            "conv_id": [c for c, _, _ in rows],
-            "turn_idx": [t for _, t, _ in rows],
+            "conv_id": [c for c, _, _ in new],
+            "turn_idx": [t for _, t, _ in new],
             "role": "user",
-            "text": [x for _, _, x in rows],
+            "text": [x for _, _, x in new],
             "tool": None,
             "ts": pd.Timestamp("2026-02-01"),
         }
     )
-    return pd.concat([corpus, extra], ignore_index=True)
+    return pd.concat([out, extra], ignore_index=True)
 
 
 def _check_matches_rebuilt_oracle(eng, corpus, extra_rows, queries):
@@ -88,8 +101,52 @@ CRASH_ROWS = [
     ("conv00-910001", 0, "crashmarker hotalpha spark data"),
     ("conv00-910002", 0, "crashmarker поиск запрос"),
 ]
+#: One upsert batch of every kind of key: it replaces two existing turns
+#: (conv00-000000/1 holds the only uses of "nofuqapa" on its site), inserts
+#: a turn into their shard (the fixture index has one) and a turn on a new
+#: site, and repeats a key, whose latest row wins.
+MIXED_ROWS = [
+    ("conv00-000000", 1, "crashmarker replacedword hotalpha", "2026-02-01"),
+    ("conv00-000050", 0, "crashmarker поиск запрос", "2026-02-01"),
+    ("conv00-910001", 0, "loserword crashmarker", "2026-02-01"),
+    ("conv00-910001", 0, "crashmarker hotalpha spark data", "2026-02-02"),
+    ("convzz-910001", 0, "crashmarker newsiteword", "2026-02-01"),
+]
+MIXED_WINNERS = [(c, t, x) for c, t, x, _ in MIXED_ROWS if x != "loserword crashmarker"]
+MIXED_QUERIES = CRASH_QUERIES + [
+    ("nofuqapa", "reference"),
+    ("replacedword", "bm25"),
+    ("loserword", "reference"),
+    ("newsiteword crashmarker", "bm25"),
+]
 
 
+def _mixed_batch(spark):
+    return spark.createDataFrame(
+        [(c, t, "user", x, None, datetime.fromisoformat(ts)) for c, t, x, ts in MIXED_ROWS],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+
+
+def _term_stats(eng):
+    return {
+        r["term"]: (int(r["df_global"]), int(r["cf_global"]))
+        for r in eng.catalog.read("terms_global").collect()
+    }
+
+
+@pytest.fixture(scope="module")
+def mixed_fresh(spark, corpus):
+    """A fresh build of the corpus after MIXED_ROWS."""
+    wh = tempfile.mkdtemp(prefix="se_mixed_fresh_")
+    eng = SearchEngine(spark, wh)
+    eng.build(transcripts_spark_df(spark, _with_rows(corpus, MIXED_WINNERS)))
+    yield eng
+    shutil.rmtree(wh, ignore_errors=True)
+
+
+@pytest.mark.parametrize("batch_kind", ["append", "mixed"])
 @pytest.mark.parametrize(
     "crash_attr",
     [
@@ -104,10 +161,18 @@ CRASH_ROWS = [
     ],
 )
 def test_append_crash_then_retry_lands_exactly_once(
-    spark, corpus, monkeypatch, crash_attr
+    spark, corpus, monkeypatch, crash_attr, batch_kind, request
 ):
+    """A crashed batch retried at the same epoch lands exactly once: an
+    append of new turns, and an upsert batch of every kind of key
+    (MIXED_ROWS), which must then equal the oracle and a fresh build."""
     eng, wh = _build(spark, corpus)
-    batch = _late_batch(spark, CRASH_ROWS)
+    if batch_kind == "append":
+        batch, rows, queries, n = _late_batch(spark, CRASH_ROWS), CRASH_ROWS, CRASH_QUERIES, 2
+        write = lambda: append_turns(spark, wh, batch, epoch=0)
+    else:
+        batch, rows, queries, n = _mixed_batch(spark), MIXED_WINNERS, MIXED_QUERIES, 4
+        write = lambda: upsert_turns(spark, wh, batch, replace_existing=True, epoch=0)
 
     class Boom(RuntimeError):
         pass
@@ -118,28 +183,37 @@ def test_append_crash_then_retry_lands_exactly_once(
             lambda self, meta: (_ for _ in ()).throw(Boom("crash")),
         )
     else:
-        orig = getattr(ingest_mod, crash_attr)
         monkeypatch.setattr(
-            ingest_mod, crash_attr,
+            inc_mod, crash_attr,
             lambda *a, **k: (_ for _ in ()).throw(Boom("crash")),
         )
     with pytest.raises(Boom):
-        append_turns(spark, wh, batch, epoch=0)
+        write()
     monkeypatch.undo()
 
     # retry of the SAME epoch (foreachBatch replay semantics)
-    assert append_turns(spark, wh, batch, epoch=0) == 2
+    assert write() == n
     # a second replay of the committed epoch is a no-op
-    assert append_turns(spark, wh, batch, epoch=0) == 0
+    assert write() == 0
 
     eng._searcher = None
-    _check_matches_rebuilt_oracle(eng, corpus, CRASH_ROWS, CRASH_QUERIES)
+    _check_matches_rebuilt_oracle(eng, corpus, rows, queries)
     # term stats incremented exactly once (the double-increment trap)
     tg = eng.catalog.read("terms_global").filter(F.col("term") == "crashmarker")
-    assert [int(r["df_global"]) for r in tg.collect()] == [2]
+    assert [int(r["df_global"]) for r in tg.collect()] == [len(rows)]
     # counters committed exactly once
     meta = eng.catalog.read_meta()
     assert int(meta["n_docs"]) == eng.catalog.read("documents").count()
+    if batch_kind == "mixed":
+        fresh = request.getfixturevalue("mixed_fresh")
+        assert _term_stats(eng) == _term_stats(fresh)
+        assert "nofuqapa" not in _term_stats(eng)
+        assert statistics_counts(eng) == statistics_counts(fresh)
+        for q, mode in queries:
+            page, count = eng.search(q, mode=mode, exact_count=True)
+            fpage, fcount = fresh.search(q, mode=mode, exact_count=True)
+            assert count == fcount, (q, mode)
+            assert list(page["conv_id"]) == list(fpage["conv_id"]), (q, mode)
     shutil.rmtree(wh, ignore_errors=True)
 
 
@@ -183,8 +257,6 @@ def test_intra_batch_duplicates_pick_deterministic_winner(spark, corpus):
     (e.g. overlapping files in one trigger) must not wedge the stream —
     the latest-ts row wins, deterministically across replays."""
     eng, wh = _build(spark, corpus)
-    from datetime import datetime
-
     rows = [
         ("conv00-920001", 0, "user", "dupword loserword", None,
          datetime(2026, 1, 1)),
@@ -298,3 +370,178 @@ def test_compact_shard_restores_fresh_build_geometry(spark, corpus):
     assert counts(eng) == counts(eng2)
     shutil.rmtree(wh, ignore_errors=True)
     shutil.rmtree(eng2.warehouse, ignore_errors=True)
+
+
+def test_crashed_append_then_upsert_lands_both(spark, corpus, monkeypatch):
+    """A crashed append followed by an upsert, not by the append's retry:
+    the upsert completes the journaled append before it claims the next
+    mut_seq. Before one journal covered appends, the fence dropped the
+    append's rows but its stamped term increments stayed, and the upsert,
+    claiming the same mut_seq, skipped its own increments in those buckets:
+    ``hazardword`` kept df 1 and ``upsertword`` had no terms row."""
+    eng, wh = _build(spark, corpus)
+    appended = ("conv00-990001", 0, "hazardword hotalpha")
+    monkeypatch.setattr(
+        inc_mod, "encode_posting_blocks",
+        lambda *a, **k: (_ for _ in ()).throw(RuntimeError("crash")),
+    )
+    with pytest.raises(RuntimeError, match="crash"):
+        append_turns(spark, wh, _late_batch(spark, [appended]), epoch=0)
+    monkeypatch.undo()
+    replaced = ("conv00-000000", 0, "hazardword upsertword")
+    eng.reindex_turn(*replaced)
+
+    fresh = SearchEngine(spark, tempfile.mkdtemp(prefix="se_fresh_"))
+    fresh.build(transcripts_spark_df(spark, _with_rows(corpus, [appended, replaced])))
+    words = ("hazardword", "upsertword")
+    assert {t: v for t, v in _term_stats(eng).items() if t in words} == {
+        t: v for t, v in _term_stats(fresh).items() if t in words
+    } != {}
+    for q in words:
+        assert eng.search(q)[1] == fresh.search(q)[1] > 0, q
+    shutil.rmtree(wh, ignore_errors=True)
+    shutil.rmtree(fresh.warehouse, ignore_errors=True)
+
+
+def test_engine_drops_searcher_after_every_mutation_call(spark, corpus, monkeypatch):
+    """A mutation call that raised, or that wrote nothing itself, still
+    drops the engine's searcher and statistics memo: the crashed upsert
+    below replaced table files, and the append completed it."""
+    eng, _ = _build(spark, corpus)
+    eng.search("hotalpha")
+    pages = lambda: sum(d["pages"] for d in eng.statistics()["statistics"]["detailed"])
+    before = pages()
+    monkeypatch.setattr(
+        TableCatalog, "write_meta",
+        lambda self, meta: (_ for _ in ()).throw(RuntimeError("crash")),
+    )
+    with pytest.raises(RuntimeError, match="crash"):
+        eng.reindex_turn("convzz-980001", 0, "stalezword hotalpha")
+    monkeypatch.undo()
+    # an already-indexed key: the append completes the crashed upsert only
+    assert eng.append_turns(_late_batch(spark, [("conv00-000000", 0, "hotalpha")])) == 0
+    assert pages() == before + 1
+    assert eng.search("stalezword")[1] == 1
+    shutil.rmtree(eng.warehouse, ignore_errors=True)
+
+
+def test_mutation_job_counts(spark, corpus):
+    """Spark jobs per mutation: an append of two turns (one on a new site)
+    at most 70, a one-turn upsert at most 39, and an upsert of 100 turns at
+    most twice the one-turn count: one batched mutation, not 100."""
+    eng, wh = _build(spark, corpus)
+    batch = _late_batch(spark, [
+        ("conv00-960001", 0, "jobword hotalpha"),
+        ("convzz-960001", 0, "jobword newsite"),
+    ])
+    assert jobs_run(spark, lambda: eng.append_turns(batch)) <= 70
+    one = jobs_run(spark, lambda: eng.reindex_turn("conv00-000007", 0, "jobword one"))
+    assert one <= 39
+    rows = corpus[corpus["text"].fillna("") != ""].iloc[100:200]
+    hundred = _late_batch(spark, [
+        (c, int(t), "jobword " + x)
+        for c, t, x in zip(rows["conv_id"], rows["turn_idx"], rows["text"])
+    ])
+    n = []
+    assert jobs_run(spark, lambda: n.append(eng.upsert_turns(hundred))) <= 2 * one
+    assert n == [100]
+    assert eng.search("jobword")[1] == 103
+    shutil.rmtree(wh, ignore_errors=True)
+
+
+def test_appended_doc_ids_are_dense_when_range_sampled(spark, corpus):
+    """New keys get exactly max_doc_id+1 .. max_doc_id+n in key order, also
+    for a batch large enough that the range partitioner samples it (with
+    parallelism 2 it keeps ≤ 120 sampled keys) and would cut different
+    boundaries if the range shuffle ran again for the numbering."""
+    eng, wh = _build(spark, corpus, parallelism=2)
+    base = int(eng.catalog.read_meta()["max_doc_id"])
+    rows = [(f"conv00-97{i:04d}", 0, f"denseword w{i % 37}") for i in range(600)]
+    assert eng.append_turns(_late_batch(spark, rows)) == 600
+    got = (
+        eng.catalog.read("documents").filter(F.col("doc_id") > base)
+        .select("conv_id", "doc_id").toPandas().sort_values("conv_id")
+    )
+    assert list(got["conv_id"]) == [c for c, _, _ in rows]
+    assert list(got["doc_id"]) == list(range(base + 1, base + 601))
+    meta = eng.catalog.read_meta()
+    assert int(meta["max_doc_id"]) == base + 600
+    assert int(meta["n_docs"]) == eng.catalog.read("documents").count()
+    assert eng.search("denseword")[1] == 600
+    shutil.rmtree(wh, ignore_errors=True)
+
+
+def test_turn_without_text_removes_it(spark, corpus):
+    """An upsert whose winner has no text removes the key, as a fresh build
+    of the corpus with that turn blank drops it: documents, term stats,
+    search results and statistics match. A new key without text is not
+    indexed."""
+    eng, wh = _build(spark, corpus)
+    # conv00-000000/1 holds its site's only uses of "nofuqapa"
+    old = corpus[(corpus["conv_id"] == "conv00-000000") & (corpus["turn_idx"] == 1)]
+    words = old["text"].iloc[0].split()[:3] + ["nofuqapa"]
+    blanked = [("conv00-000000", 1, ""), ("conv00-000050", 0, "")]
+    assert eng.reindex_turn(*blanked[0]) >= 0
+    assert eng.upsert_turns(_late_batch(spark, blanked[1:])) == 1
+    assert eng.reindex_turn("conv00-990009", 0, "") == -1
+
+    fresh = SearchEngine(spark, tempfile.mkdtemp(prefix="se_fresh_"))
+    fresh.build(transcripts_spark_df(spark, _with_rows(corpus, blanked)))
+    assert _term_stats(eng) == _term_stats(fresh)
+    assert "nofuqapa" not in _term_stats(eng)
+    assert statistics_counts(eng) == statistics_counts(fresh)
+    keys = lambda e: sorted(
+        (r["conv_id"], int(r["turn_idx"])) for r in e.catalog.read("documents").collect()
+    )
+    assert keys(eng) == keys(fresh)
+    for k in ("n_docs", "sum_doc_len"):
+        assert int(eng.catalog.read_meta()[k]) == int(fresh.catalog.read_meta()[k]), k
+    for q in words:
+        for mode in ("reference", "bm25"):
+            page, count = eng.search(q, mode=mode, exact_count=True)
+            fpage, fcount = fresh.search(q, mode=mode, exact_count=True)
+            assert count == fcount, (q, mode)
+            assert list(page["conv_id"]) == list(fpage["conv_id"]), (q, mode)
+    shutil.rmtree(wh, ignore_errors=True)
+    shutil.rmtree(fresh.warehouse, ignore_errors=True)
+
+
+def test_retry_without_epoch_returns_the_crashed_writes(spark, corpus, monkeypatch):
+    """A crashed call retried without an epoch returns what the crashed
+    attempt wrote (the doc id of a reindex_turn, the count of an append)
+    once the recovery step has completed it, and commits no second
+    mutation."""
+    eng, wh = _build(spark, corpus)
+    mut_seq = lambda: int(eng.catalog.read_meta()["mut_seq"])
+
+    def crashing(target, attr):
+        monkeypatch.setattr(
+            target, attr, lambda *a, **k: (_ for _ in ()).throw(RuntimeError("crash"))
+        )
+
+    doc_id = int(
+        eng.catalog.read("documents")
+        .filter((F.col("conv_id") == "conv00-000003") & (F.col("turn_idx") == 0))
+        .first()["doc_id"]
+    )
+    seq = mut_seq()
+    crashing(TableCatalog, "write_meta")
+    with pytest.raises(RuntimeError, match="crash"):
+        eng.reindex_turn("conv00-000003", 0, "retryword hotalpha")
+    monkeypatch.undo()
+    assert eng.reindex_turn("conv00-000003", 0, "retryword hotalpha") == doc_id
+    assert mut_seq() == seq + 1
+
+    batch = _late_batch(spark, [
+        ("conv00-980001", 0, "retryword spark"),
+        ("conv00-980002", 0, "retryword data"),
+        ("conv00-000003", 0, "already indexed: dropped"),
+    ])
+    crashing(inc_mod, "encode_posting_blocks")
+    with pytest.raises(RuntimeError, match="crash"):
+        eng.append_turns(batch)
+    monkeypatch.undo()
+    assert eng.append_turns(batch) == 2
+    assert mut_seq() == seq + 2
+    assert eng.search("retryword")[1] == 3
+    shutil.rmtree(wh, ignore_errors=True)

@@ -15,7 +15,6 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import uuid
 
 import pyarrow.parquet as pq
 import pytest
@@ -25,6 +24,7 @@ from searchengine_spark.config import EngineConfig
 from searchengine_spark.engine import SearchEngine
 from searchengine_spark.sources.catalog import TABLES, TableCatalog
 from searchengine_spark.sources.transcripts import transcripts_spark_df
+from tests.conftest import jobs_run
 
 
 @pytest.fixture(scope="module")
@@ -122,25 +122,11 @@ def test_declared_schemas_match_files(spark, mutated):
         assert cat.read(name).schema == inferred, name
 
 
-def _jobs_run(spark, fn) -> int:
-    """Spark jobs that ``fn()`` runs, counted through a job group."""
-    sc = spark.sparkContext
-    group = f"jobcount-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_reads_and_searcher_load_run_no_inference_jobs(spark, mutated):
     """A catalog read runs no Spark job, and loading the searcher runs only
     its two collects (index_meta and sites)."""
     wh, _ = mutated
     cat = TableCatalog(spark, wh)
     for name in sorted(TABLES):
-        assert _jobs_run(spark, lambda: cat.read(name)) == 0, name
-    assert _jobs_run(spark, lambda: SearchEngine(spark, wh).searcher) <= 2
+        assert jobs_run(spark, lambda: cat.read(name)) == 0, name
+    assert jobs_run(spark, lambda: SearchEngine(spark, wh).searcher) <= 2
