@@ -249,12 +249,13 @@ def minhash_lsh_pairs(
     documents: DataFrame, k: int = N_MINHASH, bands: int = LSH_BANDS
 ) -> DataFrame:
     """Candidate near-dup pairs (a, b), a < b: docs agreeing on ALL rows of
-    at least one band, STAR-PAIRED within each band bucket — every member
-    pairs with the bucket's canonical (min doc_id) only, so a bucket of m
-    docs emits m−1 pairs, never m²/2. This is the hot-bucket guard (same
-    skewed-key discipline as ngram_jaccard_pairs' max_shingle_df): 10^6
-    identical boilerplate docs cost O(n) pairs, and duplicate groups stay
-    connected through their canonical. Cross-band dedup is one distinct()."""
+    at least one band, paired within each band bucket by :func:`star_pairs`
+    — every pair of a bucket of up to ``STAR_PAIRS_CAP`` members; in a
+    larger one every member pairs with the bucket's canonical (min doc_id)
+    only, m−1 pairs. This is the hot-bucket guard (same skewed-key
+    discipline as ngram_jaccard_pairs' max_shingle_df): 10^6 identical
+    boilerplate docs cost O(n) pairs, and duplicate groups stay connected
+    through their canonical. Cross-band dedup is one distinct()."""
     rows = k // bands
     sigs = minhash_signatures(documents, k)
     # ONE pass over the signatures: every band's key is built in the same
@@ -322,13 +323,15 @@ def simhash_pairs(
     documents: DataFrame, bits: int = 16, max_hamming: int = 3
 ) -> DataFrame:
     """(a, b, hamming): near-dup pairs whose SimHash signatures differ in at
-    most ``max_hamming`` bits, a = the bucket-canonical (min doc_id) < b.
+    most ``max_hamming`` bits, a < b.
 
     Scale shape (the Hamming-neighbor search SimHash alone lacks): split
     the signature into ``max_hamming+1`` chunks — by pigeonhole, any pair
     within the Hamming budget agrees EXACTLY on ≥1 chunk — join on
-    (chunk index, chunk value), star-pair within each bucket (the same
-    hot-bucket guard as :func:`minhash_lsh_pairs`), then verify with
+    (chunk index, chunk value), pair within each bucket by
+    :func:`star_pairs` (every pair up to ``STAR_PAIRS_CAP`` members, else
+    each member with the canonical: the same hot-bucket guard as
+    :func:`minhash_lsh_pairs`), then verify with
     ``bit_count(xor)``. Chunk width = bits/(max_hamming+1) controls bucket
     count: 64-bit signatures with d=3 give 16-bit chunks = 65k buckets per
     band; the 16-bit default is demo-width for the sf fixtures."""

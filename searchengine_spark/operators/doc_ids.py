@@ -37,7 +37,6 @@ def assign_doc_ids(
     key_cols: tuple[str, str] = ("conv_id", "turn_idx"),
     parallelism: int = 32,
     id_col: str = "doc_id",
-    persist: bool = True,
     expect_unique: bool = True,
 ) -> DataFrame:
     """Add a dense 0-based ``id_col`` ordered by ``key_cols``.
@@ -48,19 +47,16 @@ def assign_doc_ids(
     always runs; the parameter stays only for ``perfbench/layers.py``'s
     keyword call.
 
-    With ``persist`` the range shuffle runs once: its output is cached for
-    the offsets job, the returned frame is cached and materialized from it,
-    and the shuffle's cache is released before returning. The caller owns
-    the returned frame's cache and ``unpersist()``s it when done. Without
-    ``persist`` nothing is cached and every action re-runs the shuffle
-    (for inputs small enough that this is cheaper than a cache).
+    The range shuffle runs once: its output is cached for the offsets job,
+    the returned frame is cached and materialized from it, and the
+    shuffle's cache is released before returning. The caller owns the
+    returned frame's cache and ``unpersist()``s it when done.
     """
-    parts = df.repartitionByRange(
-        parallelism, *[F.col(c) for c in key_cols]
-    ).withColumn("_pid", F.spark_partition_id())
-    if not persist:
-        return _ranked(parts, key_cols, id_col)
-    parts = parts.persist(StorageLevel.MEMORY_AND_DISK)
+    parts = (
+        df.repartitionByRange(parallelism, *[F.col(c) for c in key_cols])
+        .withColumn("_pid", F.spark_partition_id())
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     ids = None
     try:
         ids = _ranked(parts, key_cols, id_col).persist(StorageLevel.MEMORY_AND_DISK)

@@ -11,17 +11,20 @@ iteration order.
 
 One kernel, two executors (:class:`BlockSearcher`, SURVEY §4.3.4): scan
 only the query terms' compressed blocks (parquet min/max pruning on the
-term-sorted table) and run :func:`make_shard_kernel` — block-max WAND (bm25)
-/ early-exit intersection (reference) with a per-shard top-K heap — once per
-doc-range shard, then merge ≤ shards×K rows on the driver. A query whose
-estimated postings (Σ global df of its scanned terms) fit under
-:data:`DRIVER_KERNEL_MAX_POSTINGS` reads its blocks with one Arrow
-``toPandas()`` and runs the kernel on the driver, skipping the round trip
-through Spark's Python workers that dominates a small query's latency;
-a query too large for the driver's memory runs the same kernel in one
-``groupBy("shard").applyInPandas`` job. Every request predicate is one SQL string, so a
-filter costs one Python→JVM call however many literals it lists. The pandas
-oracle (``oracle/oracle.py``) and the DuckDB oracles in
+term-sorted table) and run :func:`make_shard_kernel` once per doc-range
+shard, then merge ≤ shards×K rows on the driver. For bm25 the kernel is one
+block-max loop, term at a time, whatever the query's shape: a block admits
+new docs only while its BM25 bound plus the later terms' bounds reaches the
+shard's running k-th score θ, and exact and pruned counts differ only in
+how the count is taken. Reference mode is an early-exit rarest-first
+intersection. A query whose estimated postings (Σ global df of its scanned
+terms) fit under :data:`DRIVER_KERNEL_MAX_POSTINGS` reads its blocks with
+one Arrow ``toPandas()`` and runs the kernel on the driver, skipping the
+round trip through Spark's Python workers that dominates a small query's
+latency; a query too large for the driver's memory runs the same kernel in
+one ``groupBy("shard").applyInPandas`` job. Every request predicate is one
+SQL string, so a filter costs one Python→JVM call however many literals it
+lists. The pandas oracle (``oracle/oracle.py``) and the DuckDB oracles in
 ``__spark_entry__.py`` are its cross-checks.
 
 Rank determinism across float addition orders: both this module and the
@@ -170,12 +173,27 @@ def make_shard_kernel(
     Input group: all block rows of the query terms (+ DOCLEN_TERM for bm25,
     + SITE_TERM when site-filtered) in one doc-range shard. Output: per-shard
     top-k (doc_id, exact score) plus the shard's candidate count (same value
-    on every emitted row; a count-only shard emits one doc_id=-1 sentinel
-    row the driver drops after summing counts).
+    on every emitted row; a shard that emits no top-k row but has
+    candidates emits one doc_id=-1 sentinel row the driver drops after
+    summing counts).
 
-    Pruning is per shard: θ is the shard's own running k-th score, so a
-    doc is skipped only when it provably cannot reach this shard's top-k,
-    and hence not the global top-k either — the merged ranking is exact.
+    bm25 is one block-max loop, term at a time, for every query shape. Terms
+    go in descending order of their largest block bound; ``rest`` is the sum
+    of the later terms' largest bounds. A term's blocks are visited in
+    descending bound, 256 at a time, and a block admits new docs (decoded,
+    scored) while ``bound + rest ≥ θ − THETA_GUARD``. After the first block
+    that fails, the term only completes the docs earlier terms admitted.
+    θ is the k-th best partial score on a bounded buffer that keeps each
+    doc once, at its largest partial score; it never exceeds this shard's
+    final k-th score. A doc not admitted at its first term therefore cannot
+    reach the top-k (nor the global one), and every admitted doc is
+    completed at every later term, so the top-k is exact.
+
+    The count rule is the only difference between exact and pruned: one
+    term without a site filter counts its metadata ``count``; other exact
+    queries decode every term first (the loop reuses those postings) and
+    count the union of their doc ids; a pruned count is the number of
+    admitted docs, at least the page length.
     """
 
     def topk_rows(
@@ -185,12 +203,13 @@ def make_shard_kernel(
         cand_override: int | None = None,
     ) -> pd.DataFrame:
         cand = len(ids) if cand_override is None else cand_override
-        if len(ids) == 0:
+        # rank by rounded score desc, then doc_id asc (== conv/turn order)
+        order = np.lexsort((ids, -np.round(scores, SCORE_DECIMALS)))[:k]
+        if order.size == 0:
             if not cand:
                 return _empty_kernel_rows()
-            # every candidate pruned by θ, but the exact count survives:
-            # sentinel row carries it (driver filters doc_id < 0 after
-            # summing per-shard counts)
+            # no row to emit (k = 0), but the count survives: the
+            # sentinel row carries it
             return pd.DataFrame(
                 {
                     "shard": [np.int64(shard)],
@@ -199,9 +218,6 @@ def make_shard_kernel(
                     "cand": [np.int64(cand)],
                 }
             )
-        # rank by rounded score desc, then doc_id asc (== conv/turn order)
-        key = np.round(scores, SCORE_DECIMALS)
-        order = np.lexsort((ids, -key))[:k]
         return pd.DataFrame(
             {
                 "shard": np.int64(shard),
@@ -215,7 +231,9 @@ def make_shard_kernel(
         shard = int(pdf["shard"].iloc[0])
         by_term = {t: g.sort_values("min_doc") for t, g in pdf.groupby("term")}
 
-        site_filter = None
+        def site_filter(ids: np.ndarray, vals: np.ndarray):
+            return ids, vals
+
         if allowed_site_ids is not None:
             site_rows = by_term.pop(SITE_TERM, None)
             if site_rows is None:
@@ -262,8 +280,7 @@ def make_shard_kernel(
                 if not mask.all():
                     first = first[mask]
             ids, tfs = _decode_block_rows(first)
-            if site_filter is not None:  # mask the seed; intersections stay ⊆
-                ids, tfs = site_filter(ids, tfs)
+            ids, tfs = site_filter(ids, tfs)  # mask the seed; intersections stay ⊆
             scores = tfs.astype(np.float64)
             for t in order[1:]:
                 if ids.size == 0:  # early exit (SearchServiceImpl.java:117-119)
@@ -281,7 +298,7 @@ def make_shard_kernel(
                 ids = common
             return topk_rows(shard, ids, scores)
 
-        # ---- bm25: disjunctive with block-max WAND-style pruning ----
+        # ---- bm25: one block-max loop ----
         dl_rows = by_term.pop(DOCLEN_TERM, None)
         present = [t for t in terms if t in by_term]
         if not present:
@@ -289,140 +306,105 @@ def make_shard_kernel(
         if dl_rows is None:
             raise RuntimeError("doc_len blocks missing from shard %d" % shard)
         dl_ids, dl_lens = _decode_block_rows(dl_rows)
+        # partial scores and admitted docs, dense by a doc's position in the
+        # shard's doc-length postings: merging a chunk costs O(chunk)
+        acc = np.zeros(len(dl_ids))
+        admitted = np.zeros(len(dl_ids), dtype=bool)
 
-        def bm25_scores(t: str, ids: np.ndarray, tfs: np.ndarray) -> np.ndarray:
-            pos = np.searchsorted(dl_ids, ids)
-            dl = dl_lens[pos]
-            tf = tfs.astype(np.float64)
-            return idf[t] * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+        # Per-block upper bound from immutable block_max_tf and the *current*
+        # idf: score ≤ idf·tf·(k1+1)/(tf + k1·(1−b)) (the dl→0 limit). Unlike
+        # a score stored at encode time, this stays a sound bound after
+        # incremental updates shift avgdl/idf (plans/incremental.py).
+        bound = {}
+        for t in present:
+            mtf = by_term[t]["block_max_tf"].to_numpy(np.float64)
+            bound[t] = idf[t] * mtf * (k1 + 1.0) / (mtf + k1 * (1.0 - b))
+        order = sorted(present, key=lambda t: (-bound[t].max(), t))
 
-        # Per-term upper bound in this shard, from immutable block_max_tf and
-        # the *current* idf: score ≤ idf·tf·(k1+1)/(tf + k1·(1−b)) (the dl→0
-        # limit). Unlike a score stored at encode time, this stays a sound
-        # bound after incremental updates shift avgdl/idf (M1,
-        # plans/incremental.py).
-        def term_ub(t: str) -> float:
-            mtf = float(by_term[t]["block_max_tf"].max())
-            return idf[t] * mtf * (k1 + 1.0) / (mtf + k1 * (1.0 - b))
+        decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+        if not exact_count:
+            n_cand = None  # the admitted docs, counted at the end
+        elif len(present) == 1 and allowed_site_ids is None:
+            # a doc lies in exactly one block per (term, shard): the count
+            # costs no decode (metadata counts are not site-filtered)
+            n_cand = int(by_term[present[0]]["count"].sum())
+        else:
+            for t in present:
+                decoded[t] = site_filter(*_decode_block_rows(by_term[t]))
+            n_cand = len(np.unique(np.concatenate([v[0] for v in decoded.values()])))
 
-        if len(present) == 1 and not (exact_count and site_filter is not None):
-            # ---- single-term fast path: block-max early stop ----
-            # One term ⇒ a doc's total score is exactly its contribution
-            # here, so per-BLOCK upper bounds prune soundly: decode blocks
-            # in descending block-UB order and stop as soon as the next
-            # block's UB falls below θ (the local k-th score).
-            # The exact candidate count is the metadata `count` sum — a doc
-            # appears in exactly one block per (term, shard) — so a hot
-            # term's count costs ZERO decodes (site-scoped exact counts
-            # still take the generic path: metadata counts aren't
-            # site-filtered).
-            t = present[0]
+        def fetch(t: str, sel: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+            """The site-filtered postings of term ``t``'s blocks ``sel``."""
             g = by_term[t]
-            n_cand = int(g["count"].sum()) if exact_count else None
-            bmt = g["block_max_tf"].to_numpy(np.float64)
-            bub = idf[t] * bmt * (k1 + 1.0) / (bmt + k1 * (1.0 - b))
-            border = np.argsort(-bub, kind="stable")
-            theta = -np.inf
-            ids_l: list[np.ndarray] = []
-            sc_l: list[np.ndarray] = []
-            # θ lives on a BOUNDED top-k score buffer, and blocks decode in
-            # UB-ordered CHUNKS: per-chunk vectorized decode + one bounded
-            # partition keeps a no-early-stop worst case (hot term, uniform
-            # block UBs) at full-decode cost — the r4 per-block loop was
-            # O(blocks² · blocksize) from re-partitioning an ever-growing
-            # score array and measured 16 s on a df≈3.5M term (RUN_1v4)
-            topk_sc = np.empty(0, np.float64)
-            CHUNK = 256  # blocks (~32k postings): decode amortized, stop
-            # granularity stays fine (hot shards hold thousands of blocks)
+            if t not in decoded:
+                return site_filter(*_decode_block_rows(g.iloc[sel]))
+            ids, tfs = decoded[t]
+            lo = np.searchsorted(ids, g["min_doc"].to_numpy(np.int64)[sel])
+            n = np.searchsorted(ids, g["max_doc"].to_numpy(np.int64)[sel], side="right") - lo
+            idx = np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())
+            return ids[idx], tfs[idx]
+
+        top_pos, top_sc = np.empty(0, np.int64), np.empty(0)
+        theta = -np.inf
+
+        def accumulate(t: str, pos: np.ndarray, tfs: np.ndarray) -> None:
+            """Add term ``t``'s scores of the docs at ``pos`` and raise θ:
+            the k best of their partial scores join a buffer that keeps
+            each doc once, at its largest partial score; θ is its k-th
+            score once it holds k docs (a doc past the k best of a batch
+            cannot change that k-th score)."""
+            nonlocal top_pos, top_sc, theta
+            tf = tfs.astype(np.float64)
+            acc[pos] += idf[t] * tf * (k1 + 1.0) / (
+                tf + k1 * (1.0 - b + b * dl_lens[pos] / avgdl)
+            )
+            admitted[pos] = True
+            if not k:
+                return
+            sc = acc[pos]
+            if len(sc) > k:
+                best = np.argpartition(sc, len(sc) - k)[len(sc) - k :]
+                pos, sc = pos[best], sc[best]
+            pos, sc = np.concatenate([top_pos, pos]), np.concatenate([top_sc, sc])
+            by_score = np.argsort(-sc, kind="stable")
+            _, first = np.unique(pos[by_score], return_index=True)
+            keep = by_score[np.sort(first)][:k]
+            top_pos, top_sc = pos[keep], sc[keep]
+            if len(keep) == k:
+                theta = float(top_sc[-1])
+
+        # blocks per chunk (~32k postings): decode is amortized, and the stop
+        # stays fine-grained (hot shards hold thousands of blocks)
+        CHUNK = 256
+        for i, t in enumerate(order):
+            rest = sum(bound[o].max() for o in order[i + 1 :])
+            g, bt = by_term[t], bound[t]
+            border = np.argsort(-bt, kind="stable")
+            stop = len(border)
             for c0 in range(0, len(border), CHUNK):
                 chunk = border[c0 : c0 + CHUNK]
-                # bub is descending along border: drop the chunk tail below
-                # θ; if nothing survives, no later chunk can reach θ either
-                chunk = chunk[bub[chunk] >= theta - THETA_GUARD]
-                if chunk.size == 0:
+                # bounds descend along border: the admitted blocks are a prefix
+                n_ok = int(np.count_nonzero(bt[chunk] + rest >= theta - THETA_GUARD))
+                ids, tfs = fetch(t, chunk[:n_ok])
+                accumulate(t, np.searchsorted(dl_ids, ids), tfs)
+                if n_ok < len(chunk):
+                    stop = c0 + n_ok
                     break
-                b_ids, b_tfs = _decode_block_rows(g.iloc[chunk])
-                if site_filter is not None:
-                    b_ids, b_tfs = site_filter(b_ids, b_tfs)
-                    if b_ids.size == 0:
-                        continue
-                b_sc = bm25_scores(t, b_ids, b_tfs)
-                ids_l.append(b_ids)
-                sc_l.append(b_sc)
-                cand_sc = np.concatenate([topk_sc, b_sc])
-                if cand_sc.size >= k:
-                    cut = np.partition(cand_sc, cand_sc.size - k)[
-                        cand_sc.size - k :
-                    ]
-                    topk_sc = cut
-                    theta = max(theta, float(cut[0] if k else -np.inf))
-                else:
-                    topk_sc = cand_sc
-            ids = np.concatenate(ids_l) if ids_l else np.empty(0, np.int64)
-            scores = np.concatenate(sc_l) if sc_l else np.empty(0)
-            return topk_rows(shard, ids, scores, cand_override=n_cand)
-
-        if exact_count:
-            # decode doc-id lists once upfront: gives the exact disjunctive
-            # candidate count (SearchResponse.count analog); WAND pruning
-            # below then skips *scoring* (dl gather + arithmetic) for docs
-            # that provably can't reach the top-k
-            decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-            for t in present:
-                t_ids, t_tfs = _decode_block_rows(by_term[t])
-                if site_filter is not None:
-                    t_ids, t_tfs = site_filter(t_ids, t_tfs)
-                decoded[t] = (t_ids, t_tfs)
-            n_cand = len(np.unique(np.concatenate([decoded[t][0] for t in present])))
-        else:
-            decoded = None
-            n_cand = None  # lower-bounded by len(acc) at the end
-
-        ubs = {t: term_ub(t) for t in present}
-        order = sorted(present, key=lambda t: (-ubs[t], t))
-        acc = pd.Series(dtype=np.float64)  # doc_id → partial score
-        for i, t in enumerate(order):
-            remaining_ub = sum(ubs[o] for o in order[i:])
-            theta = (
-                float(np.partition(acc.to_numpy(), len(acc) - k)[len(acc) - k])
-                if len(acc) >= k
-                else -np.inf
-            )
-            prune = len(acc) > 0 and remaining_ub < theta - THETA_GUARD
-            if decoded is not None:
-                t_ids, t_tfs = decoded[t]
-                if prune:
-                    c_ids = acc.index.to_numpy(np.int64)  # sorted (pd index)
-                    keep = np.isin(t_ids, c_ids, assume_unique=True)
-                    t_ids, t_tfs = t_ids[keep], t_tfs[keep]
-            elif prune:
-                # WAND prune: no unseen doc can reach top-k; only complete the
-                # scores of existing candidates → decode only blocks
-                # overlapping them
-                g = by_term[t]
-                c_ids = acc.index.to_numpy(np.int64)
-                starts = np.searchsorted(c_ids, g["min_doc"].to_numpy(np.int64))
-                ends = np.searchsorted(
-                    c_ids, g["max_doc"].to_numpy(np.int64), side="right"
-                )
-                g = g[ends > starts]
-                t_ids, t_tfs = _decode_block_rows(g)
-                keep = np.isin(t_ids, c_ids, assume_unique=True)
-                t_ids, t_tfs = t_ids[keep], t_tfs[keep]
-            else:
-                t_ids, t_tfs = _decode_block_rows(by_term[t])
-                if site_filter is not None:
-                    t_ids, t_tfs = site_filter(t_ids, t_tfs)
-            if t_ids.size == 0:
-                continue
-            part = pd.Series(bm25_scores(t, t_ids, t_tfs), index=t_ids)
-            acc = part.add(acc, fill_value=0.0) if len(acc) else part
-            acc = acc.sort_index()
-        ids = acc.index.to_numpy(np.int64)
-        return topk_rows(
-            shard, ids, acc.to_numpy(np.float64),
-            cand_override=n_cand,
-        )
+            tail = border[stop:]
+            if tail.size:
+                # complete the earlier terms' candidates: decode only the
+                # remaining blocks that overlap them. Blocks of one term
+                # hold disjoint doc ranges, so this term's own admitted docs
+                # overlap no remaining block.
+                cand = dl_ids[admitted]
+                lo = np.searchsorted(cand, g["min_doc"].to_numpy(np.int64)[tail])
+                hi = np.searchsorted(cand, g["max_doc"].to_numpy(np.int64)[tail], side="right")
+                ids, tfs = fetch(t, tail[hi > lo])
+                pos = np.searchsorted(dl_ids, ids)
+                keep = admitted[pos]
+                accumulate(t, pos[keep], tfs[keep])
+        pos = np.flatnonzero(admitted)
+        return topk_rows(shard, dl_ids[pos], acc[pos], cand_override=n_cand)
 
     return kernel
 
@@ -553,9 +535,10 @@ class BlockSearcher:
         latency stays sub-linear in df (the ranking is still EXACT — WAND
         pruning only skips docs that cannot reach the top-k). The returned
         count is then a lower bound — the Elasticsearch
-        ``track_total_hits=false`` trade-off; pass ``exact_count=True`` to
-        decode every term's doc-id lists upfront and get the exact
-        disjunctive candidate count (SearchResponse.count parity). Reference
+        ``track_total_hits=false`` trade-off; pass ``exact_count=True`` for
+        the exact disjunctive candidate count (SearchResponse.count parity),
+        taken from block metadata for one term without a site filter and
+        from every term's decoded doc ids otherwise. Reference
         mode counts are always exact (conjunctive intersection)."""
         cfg = self.cfg
         offset = DEFAULT_OFFSET if offset is None else offset

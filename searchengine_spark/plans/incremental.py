@@ -64,6 +64,7 @@ from __future__ import annotations
 
 import dataclasses
 import os
+from collections import Counter
 from functools import reduce
 from operator import or_
 
@@ -73,7 +74,6 @@ from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 from searchengine_spark.config import EngineConfig
-from searchengine_spark.operators.doc_ids import assign_doc_ids
 from searchengine_spark.operators.postings import (
     MARKER_BUCKET,
     counts_with_marker,
@@ -196,7 +196,7 @@ def _upsert(
                 done = replayed["written"]  # this batch's crashed attempt
                 turns = turns.join(journaled.select(*_KEY), _KEY, "left_anti")
         # write-ahead: the journal is complete before the first table write
-        if not _write_journal(cat, meta, turns, cfg, replace_existing, epoch, run_id):
+        if not _write_journal(cat, meta, turns, replace_existing, epoch, run_id):
             if epoch is not None:
                 cat.write_meta(meta)  # an epoch with nothing to write still commits
             return done
@@ -247,7 +247,6 @@ def _write_journal(
     cat: TableCatalog,
     meta: dict,
     turns: DataFrame,
-    cfg: EngineConfig,
     replace_existing: bool,
     epoch: int | None,
     run_id: int | None,
@@ -271,7 +270,14 @@ def _write_journal(
         .collect()
         if per_conv else []
     )
-    n_new = sum(r["n"] for r in per_conv) - sum(1 for r in existing if r["has_text"])
+    # new keys with text get max_doc_id+1.. in key order: a conv's first
+    # new id follows every earlier conv's new keys
+    n_old = Counter(r["conv_id"] for r in existing if r["has_text"])
+    base = next_id = int(meta["max_doc_id"]) + 1
+    first_ids = []
+    for r in sorted(per_conv, key=lambda r: r["conv_id"]):
+        first_ids.append((r["conv_id"], next_id))
+        next_id += r["n"] - n_old[r["conv_id"]]
     old_rows: dict[int, list] = {int(r["doc_id"]): [] for r in existing}
     if replace_existing and existing:
         fgd = int(meta["flat_group_docs"])
@@ -298,43 +304,37 @@ def _write_journal(
         "conv_id string, turn_idx int, doc_id long, old_doc_len int, "
         "old_terms array<string>, old_tfs array<long>",
     ))
-    parts, ranked = [], None
-    try:
-        if n_new:
-            # cached: the ids must be numbered over the range partitions
-            # their offsets were counted on, and a re-run of the range
-            # shuffle samples new boundaries
-            ranked = assign_doc_ids(
-                turns.filter(has_text).join(known, _KEY, "left_anti"),
-                parallelism=cfg.parallelism,
-            )
-            parts.append(ranked.select(
+    parts = []
+    if next_id > base:
+        firsts = F.broadcast(tiny_df(cat.spark, first_ids, "conv_id string, first_id long"))
+        in_conv = Window.partitionBy("conv_id").orderBy("turn_idx")
+        parts.append(
+            turns.filter(has_text).join(known, _KEY, "left_anti").join(firsts, "conv_id")
+            .select(
                 *_KEY, "text",
-                (F.col("doc_id") + F.lit(int(meta["max_doc_id"]) + 1)).alias("doc_id"),
+                (F.col("first_id") + F.row_number().over(in_conv) - 1).alias("doc_id"),
                 F.lit(0).alias("old_doc_len"), F.lit(1).alias("is_insert"),
                 F.lit(None).alias("old_terms"), F.lit(None).alias("old_tfs"),
-            ))
-        if replace_existing and existing:
-            parts.append(turns.join(known, _KEY).withColumn("is_insert", F.lit(0)))
-        if not parts:
-            return False
-        stamp = {
-            "mut_seq": F.lit(int(meta["mut_seq"]) + 1),
-            "epoch": F.lit(epoch),
-            "run_id": F.lit(run_id),
-        }
-        schema = StructType.fromDDL(TABLES[JOURNAL_TABLE].schema)
-        cat.replace(reduce(DataFrame.unionByName, (
-            p.select(*[
-                stamp.get(f.name, F.col(f.name)).cast(f.dataType).alias(f.name)
-                for f in schema
-            ])
-            for p in parts
-        )), JOURNAL_TABLE)
-        return True
-    finally:
-        if ranked is not None:
-            ranked.unpersist()
+            )
+        )
+    if replace_existing and existing:
+        parts.append(turns.join(known, _KEY).withColumn("is_insert", F.lit(0)))
+    if not parts:
+        return False
+    stamp = {
+        "mut_seq": F.lit(int(meta["mut_seq"]) + 1),
+        "epoch": F.lit(epoch),
+        "run_id": F.lit(run_id),
+    }
+    schema = StructType.fromDDL(TABLES[JOURNAL_TABLE].schema)
+    cat.replace(reduce(DataFrame.unionByName, (
+        p.select(*[
+            stamp.get(f.name, F.col(f.name)).cast(f.dataType).alias(f.name)
+            for f in schema
+        ])
+        for p in parts
+    )), JOURNAL_TABLE)
+    return True
 
 
 def _apply(

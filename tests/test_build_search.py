@@ -38,10 +38,11 @@ def test_reference_query_set_rank_identity(engine, oracle, mode):
     # exact_count=True (also the public-API default — reference
     # SearchResponse.count parity): COUNT parity with the oracle's full
     # disjunctive candidate count (the pruned opt-in path's count is a
-    # documented lower bound — covered by test_pruned_optin below)
-    for q in REFERENCE_QUERIES:
-        page, count = engine.search(q, mode=mode)
-        opage, ocount = oracle.search(q, mode=mode)
+    # documented lower bound — covered by test_pruned_optin below). A
+    # limit of 0 returns no page but still the count.
+    for q, limit in [(q, 20) for q in REFERENCE_QUERIES] + [("hotalpha", 0)]:
+        page, count = engine.search(q, mode=mode, limit=limit)
+        opage, ocount = oracle.search(q, mode=mode, limit=limit)
         assert_page_matches(page, opage, count, ocount, q, mode)
 
 

@@ -36,6 +36,8 @@ CASES = (
         ("hotalpha walking", {"site": "conv00", "mode": "bm25", "exact_count": True}),
         ("hotalpha", {"offset": 10**6}),  # a page past the last hit
         ("hotalpha", {"mode": "bm25", "offset": 10**6}),
+        ("hotalpha", {"limit": 0}),  # no page, only the count
+        ("hotalpha", {"mode": "bm25", "limit": 0}),
         ("hotalpha", {"site": "nope"}),  # short-circuits: no gated site
     ]
 )

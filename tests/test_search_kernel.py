@@ -2,10 +2,12 @@
 metadata-only seed-block pruning in reference mode must skip seed blocks
 whose doc range overlaps no block of some other query term, without
 changing the conjunctive result (Q2/Q3 analogs,
-SearchServiceImpl.java:100-119)."""
+SearchServiceImpl.java:100-119); the bm25 block-max loop must return
+brute-force BM25's top-k and counts on random shards."""
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from searchengine_spark.functions.codec import delta_encode, varint_encode
 from searchengine_spark.operators import search as S
@@ -118,6 +120,80 @@ def test_seed_block_pruning_keeps_full_overlap_result():
     out = kernel(pdf)
     assert list(out["doc_id"]) == [3, 5]
     assert list(out["score"]) == [3.0, 3.0]
+
+
+def _random_case(rng: np.random.Generator):
+    """A random shard (posting blocks of 1–4 terms, doc lengths, site ids)
+    and its fully decoded postings."""
+    n_docs = int(rng.integers(50, 2000))
+    bs = int(rng.choice([4, 8, 16, 32, 64, 128]))
+    dl = rng.integers(1, 60, n_docs)
+    sites = np.repeat(np.arange(3), n_docs // 3 + 1)[:n_docs]
+    postings, rows = {}, []
+    for t in [f"t{j}" for j in range(int(rng.integers(1, 5)))]:
+        lo = int(rng.integers(0, n_docs))
+        hi = int(rng.integers(lo + 1, n_docs + 1))  # confined to [lo, hi)
+        span = np.arange(lo, hi)
+        n = max(1, int(len(span) * rng.uniform(0.01, 1)))
+        ids = np.sort(rng.choice(span, n, replace=False))
+        tfs = np.minimum(rng.zipf(rng.uniform(1.5, 3.0), len(ids)), 50)  # skewed
+        postings[t] = (ids, tfs)
+    every_doc = np.arange(n_docs)
+    columns = {**postings, S.DOCLEN_TERM: (every_doc, dl), S.SITE_TERM: (every_doc, sites)}
+    for t, (ids, vals) in columns.items():
+        rows += [
+            _block_row(t, ids[i : i + bs], vals[i : i + bs])
+            for i in range(0, len(ids), bs)
+        ]
+    return _shard_pdf(rows), postings, dl, sites
+
+
+def _brute_bm25(postings, dl, sites, idf, allowed, k1, b, avgdl):
+    """Every doc's BM25 score over the decoded postings: (ids, scores)."""
+    total: dict[int, float] = {}
+    for t, (ids, tfs) in postings.items():
+        for d, tf in zip(ids.tolist(), tfs.tolist()):
+            if allowed is None or sites[d] in allowed:
+                norm = k1 * (1.0 - b + b * dl[d] / avgdl)
+                total[d] = total.get(d, 0.0) + idf[t] * tf * (k1 + 1.0) / (tf + norm)
+    return np.array(list(total), np.int64), np.array(list(total.values()))
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_bm25_block_max_loop_matches_brute_force(seed):
+    """On random shards (block sizes 4–128, skewed tfs, terms confined to
+    part of the doc range, 1–4 terms, k ∈ {0, 1, 20, 60}, site filter on
+    or off) the bm25 kernel's rows are brute-force BM25's top-k, ranked by
+    (round(score, 9) desc, doc_id); the exact count is the candidate count,
+    and a pruned count lies between the page length and it."""
+    rng = np.random.default_rng(seed)
+    k1, b = 1.2, 0.75
+    for _ in range(100):
+        pdf, postings, dl, sites = _random_case(rng)
+        terms = sorted(postings)
+        idf = {t: float(rng.uniform(0.1, 8.0)) for t in terms}
+        allowed = None
+        if rng.random() < 0.4:
+            allowed = sorted(rng.choice(3, int(rng.integers(1, 3)), replace=False).tolist())
+        k = int(rng.choice([0, 1, 20, 60]))
+        avgdl = float(dl.mean())
+        ids, sc = _brute_bm25(postings, dl, sites, idf, allowed, k1, b, avgdl)
+        order = np.lexsort((ids, -np.round(sc, S.SCORE_DECIMALS)))[:k]
+        for exact in (True, False):
+            kernel = S.make_shard_kernel(
+                terms, "bm25", k, idf, k1, b, avgdl, allowed, exact_count=exact
+            )
+            out = kernel(pdf)
+            count = int(out["cand"].iloc[0]) if len(out) else 0
+            page = out[out["doc_id"] >= 0]
+            assert list(page["doc_id"]) == ids[order].tolist()
+            np.testing.assert_allclose(
+                page["score"].to_numpy(float), sc[order], rtol=1e-12
+            )
+            if exact:
+                assert count == len(ids)
+            else:
+                assert len(page) <= count <= len(ids)
 
 
 def test_memo_lru_cap_bounds_adversarial_term_stream():
