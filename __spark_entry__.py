@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from searchengine_spark.analysis import ann, dedup, events, multimodal, textstats
 from searchengine_spark.analysis.textstats import WORD_SPLIT
 from searchengine_spark.config import EngineConfig
+from searchengine_spark.operators.postings import idf_col
 from searchengine_spark.oracle.sqlgen import (
     h32_sql,
     minhash_sql,
@@ -171,13 +172,15 @@ def q_doc_len(spark, sf_dir):
 
 
 def q_term_stats(spark, sf_dir):
-    """Global term dictionary: df, cf, idf (the lemma-table analog)."""
+    """Global term stats: df, cf, idf (the lemma-table analog), rolled up
+    from the per-site ``terms`` table, with idf at the index's n_docs."""
     eng = _engine(spark, sf_dir)
-    return eng.catalog.read("terms_global").select(
-        "term",
-        F.col("df_global").cast("long").alias("df"),
-        F.col("cf_global").cast("long").alias("cf"),
-        F.round("idf", 6).alias("idf"),
+    n_docs = int(eng.catalog.read_meta()["n_docs"])
+    return (
+        eng.catalog.read("terms")
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        .select("term", "df", "cf", F.round(idf_col(F.col("df"), n_docs), 6).alias("idf"))
     )
 
 

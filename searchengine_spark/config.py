@@ -38,6 +38,16 @@ class BM25Params:
 #: parallelism. 2^21 docs ≈ 50 MB of posting rows per run worst case.
 MAX_DOCS_PER_SHARD = 1 << 21
 
+#: Second-level partitioning of postings_flat: sgrp = doc_id //
+#: flat_group_docs, capped at this many groups at build time (the total
+#: cell count nb × n_groups must stay catalog-sane at 10^12 docs — a few
+#: hundred thousand cells, not nb × n_shards ≈ 10^9). An upsert rewrites
+#: (bucket, sgrp) CELLS — corpus/(nb·n_groups) rows each — instead of
+#: whole corpus/nb buckets; the streaming recovery fence reads only the
+#: tail group's cells. Groups keep growing past the build-time count as
+#: appends raise doc ids (doc-range groups are physical layout).
+MAX_FLAT_GROUPS = 64
+
 
 @dataclass(frozen=True)
 class EngineConfig:
@@ -61,16 +71,6 @@ class EngineConfig:
     # data — 4M rows ≈ 300-400 MB per executor, the sane ceiling for a
     # multi-GB-heap executor. (Was 20M: ~1.5-2 GB per executor, an OOM risk.)
     broadcast_ids_max: int = 4_000_000
-
-    # Second-level partitioning of postings_flat: sgrp = doc_id //
-    # flat_group_docs, capped at this many groups at build time (the total
-    # cell count nb × n_groups must stay catalog-sane at 10^12 docs — a few
-    # hundred thousand cells, not nb × n_shards ≈ 10^9). An upsert rewrites
-    # (bucket, sgrp) CELLS — corpus/(nb·n_groups) rows each — instead of
-    # whole corpus/nb buckets; the streaming recovery fence reads only the
-    # tail group's cells. Groups keep growing past the build-time count as
-    # appends raise doc ids (doc-range groups are physical layout).
-    max_flat_groups: int = 64
 
     bm25: BM25Params = field(default_factory=BM25Params)
 
@@ -97,7 +97,7 @@ class EngineConfig:
         one group (M1 rewrites and shard compaction touch one group). The
         resolved value is frozen into index_meta at build time."""
         n_shards = max(1, math.ceil(max(1, n_docs) / shard_size))
-        width = max(1, math.ceil(n_shards / self.max_flat_groups))
+        width = max(1, math.ceil(n_shards / MAX_FLAT_GROUPS))
         return shard_size * width
 
     def n_term_buckets(self, n_docs: int) -> int:

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from searchengine_spark.config import EngineConfig
 from searchengine_spark.functions.lemmatize import lemma_counts_udf
-from searchengine_spark.operators.doc_ids import assign_doc_ids
+from searchengine_spark.sources.catalog import tiny_df
 
 #: postings per block (SURVEY §4.3.2): one block = ≤BLOCK_SIZE postings of
 #: one (term, shard); block metadata powers block-max WAND pruning. Frozen
@@ -47,9 +47,18 @@ BLOCK_SIZE = 128
 #: mapInArrow output before the term_id → term string join (1/BLOCK_SIZE the
 #: row count of the postings themselves, so the join input is small)
 _ENC_SCHEMA = (
-    "term_id long, shard long, block_id int, min_doc long, max_doc long, "
+    "term_id long, shard long, min_doc long, max_doc long, "
     "count int, block_max_tf int, doc_gaps binary, tfs binary"
 )
+
+#: reserved pseudo-terms whose blocks carry per-doc forward data co-sharded
+#: with real postings, so the kernel never joins the corpus-wide documents
+#: table: doc lengths (BM25 norm) and dense site ids (site-scoped search).
+#: '#'-prefixed names cannot collide with real lemmas (letters only) and
+#: avoid NUL bytes, which the Arrow grouped-map path mishandles (observed:
+#: rows with \x00 in a string column are dropped by applyInPandas).
+DOCLEN_TERM = "#doc_len"
+SITE_TERM = "#site"
 
 #: reserved negative ids for the forward-structure pseudo-terms (real term
 #: ids are dense ≥ 0 ranks, so no collision is possible)
@@ -73,8 +82,6 @@ def term_bucket_col(col, n_buckets: int):
 def flat_bucket_col(term_col, n_buckets: int):
     """postings_flat bucket: real terms hash-bucket; the per-doc doc_len
     marker rows get their own MARKER_BUCKET partition."""
-    from searchengine_spark.operators.search import DOCLEN_TERM
-
     return (
         F.when(term_col == F.lit(DOCLEN_TERM), F.lit(MARKER_BUCKET))
         .otherwise(term_bucket_col(term_col, n_buckets))
@@ -93,8 +100,6 @@ def counts_with_marker():
     rows, so per-doc metadata (doc_len, and therefore the documents table)
     never needs a posting-sized aggregation or a second lemmatizer pass.
     Every eligible doc emits ≥1 row (the marker), zero-lemma docs included."""
-    from searchengine_spark.operators.search import DOCLEN_TERM
-
     return F.map_concat(
         F.create_map(F.lit(DOCLEN_TERM), F.col("doc_len")), F.col("counts")
     )
@@ -156,42 +161,14 @@ def term_stats(flat: DataFrame) -> DataFrame:
     table — df = pages-on-site containing the lemma (``model/Lemma.java:
     14-37``, increment logic ``PageIndexer.java:92-98``). ``flat`` is unique
     on (doc_id, term), so df is a plain count, no countDistinct shuffle.
-    ONE aggregation pass over the postings; the corpus-global stats derive
-    from this table's rollup (:func:`global_term_stats`) — a doc belongs to
-    exactly one site, so Σ_site df == global df. Marker rows are excluded
+    ONE aggregation pass over the postings, and the only stored copy of
+    df and cf: corpus-global stats are this table's rollup — a doc belongs
+    to exactly one site, so Σ_site df == global df. Marker rows are excluded
     defensively (callers already prune the MARKER_BUCKET partition)."""
-    from searchengine_spark.operators.search import DOCLEN_TERM
-
     return (
         flat.filter(F.col("term") != DOCLEN_TERM)
         .groupBy("term", "site")
         .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-    )
-
-
-def global_term_stats(
-    per_site: DataFrame, n_docs: int, parallelism: int = 32
-) -> DataFrame:
-    """terms(per-site) rollup → (term, df_global, cf_global, idf, term_id).
-    Input is vocabulary-sized (× sites), not posting-sized — call it on the
-    WRITTEN terms table so the rollup never recomputes the posting
-    aggregation. idf is corpus-global (Lucene-style, see ``BM25Params.idf``);
-    it is a build-time snapshot — the searcher recomputes idf at query time
-    from (df_global, current n_docs) so incremental updates never need to
-    rewrite this column (plans/incremental.py).
-
-    ``term_id`` is the PERSISTENT dense dictionary id (two-pass range
-    assign, SURVEY §4.3.1 shape): the block encoder shuffles int ids instead
-    of term strings. It lives in the table — never re-derived on the fly —
-    so every later consumer (incremental re-encodes included) sees one
-    stable dictionary; new terms get max_id+1… appends
-    (plans/incremental.py). The result comes back cached (see
-    ``assign_doc_ids``): the caller ``unpersist()``s it once written."""
-    g = per_site.groupBy("term").agg(
-        F.sum("df").alias("df_global"), F.sum("cf").alias("cf_global")
-    ).withColumn("idf", idf_col(F.col("df_global"), n_docs))
-    return assign_doc_ids(
-        g, key_cols=("term",), parallelism=parallelism, id_col="term_id"
     )
 
 
@@ -239,7 +216,6 @@ def make_group_encoder(block_size: int):
         [
             ("term_id", pa.int64()),
             ("shard", pa.int64()),
-            ("block_id", pa.int32()),
             ("min_doc", pa.int64()),
             ("max_doc", pa.int64()),
             ("count", pa.int32()),
@@ -276,7 +252,6 @@ def make_group_encoder(block_size: int):
             [
                 pa.array(tid_rows[run_of_block], pa.int64()),
                 pa.array(shard_rows[run_of_block], pa.int64()),
-                pa.array(block_idx.astype(np.int32), pa.int32()),
                 pa.array(doc[bstart], pa.int64()),
                 pa.array(doc[bend - 1], pa.int64()),
                 pa.array((bend - bstart).astype(np.int32), pa.int32()),
@@ -318,7 +293,7 @@ def encode_posting_blocks(
     flat: DataFrame,
     n_docs: int,
     avgdl: float | None,
-    global_stats: DataFrame,
+    dictionary: DataFrame,
     cfg: EngineConfig,
     *,
     documents: DataFrame,
@@ -331,13 +306,15 @@ def encode_posting_blocks(
     ``(term, shard)``: doc-id gaps delta+varint encoded, tfs varint encoded,
     with (min_doc, max_doc, block_max_tf) metadata for block-max WAND
     pruning (SURVEY §4.3.2/§4.3.4). The query kernel bounds a block by
-    block_max_tf and the query-time idf, so no score is stored. ``n_docs``
-    fixes the shard size; ``avgdl`` is unused and stays in the signature
-    only for ``perfbench/layers.py``'s positional call.
+    block_max_tf and the query-time idf, so no score is stored. A term's
+    blocks are ordered by ``min_doc``. ``dictionary`` is the
+    ``terms_global`` table (term → term_id). ``n_docs`` fixes the shard
+    size; ``avgdl`` is unused and stays in the signature only for
+    ``perfbench/layers.py``'s positional call.
 
     Physical plan (the stage the 2-vs-8-core efficiency hinges on):
-    1. dense int ``term_id`` per term (two-pass range assign over the
-       vocabulary-sized terms table — NOT the postings);
+    1. dense int ``term_id`` per term from ``dictionary`` (assigned once,
+       over the vocabulary — NOT the postings);
     2. join ids onto flat postings — the shuffle then carries
        (term_id, doc_id, tf) instead of the term string;
     3. ``groupBy(shard, term_id).agg(sort_array(collect_list(struct(...))))``
@@ -360,17 +337,14 @@ def encode_posting_blocks(
       assumption). ``site_ids`` must be the CORPUS-WIDE mapping, also when
       re-encoding a shard subset (plans/incremental.py).
     """
-    from searchengine_spark.operators.search import DOCLEN_TERM, SITE_TERM
-    from searchengine_spark.sources.catalog import tiny_df
-
     spark = flat.sparkSession
     shard_size = cfg.shard_size(n_docs)
 
     # term_id comes FROM the terms_global table (persistent dictionary —
-    # assigned once at build by global_term_stats, appended-to by
-    # incremental updates); deriving ids here would silently disagree with
-    # a cached/stale plan across incremental runs.
-    postings = flat.join(global_stats.select("term", "term_id"), "term").select(
+    # assigned once at build, appended-to by incremental updates); deriving
+    # ids here would silently disagree with a cached/stale plan across
+    # incremental runs.
+    postings = flat.join(dictionary.select("term", "term_id"), "term").select(
         "term_id", "doc_id", F.col("tf").cast("int").alias("tf")
     )
     doclen_rows = documents.select(
@@ -398,7 +372,7 @@ def encode_posting_blocks(
         make_group_encoder(BLOCK_SIZE), _ENC_SCHEMA
     )
 
-    dict_df = global_stats.select("term_id", "term").unionByName(
+    dict_df = dictionary.select("term_id", "term").unionByName(
         tiny_df(
             spark,
             [(_TERM_ID_DOCLEN, DOCLEN_TERM), (_TERM_ID_SITE, SITE_TERM)],
@@ -406,6 +380,6 @@ def encode_posting_blocks(
         )
     )
     return encoded.join(dict_df, "term_id").select(
-        "term", "shard", "block_id", "min_doc", "max_doc", "count",
+        "term", "shard", "min_doc", "max_doc", "count",
         "block_max_tf", "doc_gaps", "tfs",
     )

@@ -45,15 +45,7 @@ from searchengine_spark.config import BM25Params, EngineConfig
 from searchengine_spark.functions.codec import varint_decode
 from searchengine_spark.functions.lemmatize import query_lemmas
 from searchengine_spark.functions.snippets import make_snippet, make_title
-
-#: reserved pseudo-terms whose blocks carry per-doc forward data co-sharded
-#: with real postings, so the kernel never joins the corpus-wide documents
-#: table: doc lengths (BM25 norm) and dense site ids (site-scoped search).
-#: '#'-prefixed names cannot collide with real lemmas (letters only) and
-#: avoid NUL bytes, which the Arrow grouped-map path mishandles (observed:
-#: rows with \x00 in a string column are dropped by applyInPandas).
-DOCLEN_TERM = "#doc_len"
-SITE_TERM = "#site"
+from searchengine_spark.operators.postings import DOCLEN_TERM, SITE_TERM, term_bucket_py
 
 SCORE_DECIMALS = 9
 
@@ -138,7 +130,7 @@ def _empty_kernel_rows() -> pd.DataFrame:
 
 
 def _decode_block_rows(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """Decode a set of same-term block rows (sorted by block_id/min_doc) into
+    """Decode a set of same-term block rows (sorted by min_doc) into
     (doc_ids, tfs) numpy arrays."""
     ids, tfs = [], []
     for gaps, tf_bytes in zip(pdf["doc_gaps"], pdf["tfs"]):
@@ -477,8 +469,6 @@ class BlockSearcher:
         missing = [t for t in tl if t not in self._term_stats_cache]
         if missing:
             # partition pruning: a term lives in exactly one bucket dir
-            from searchengine_spark.operators.postings import term_bucket_py
-
             bks = sorted({term_bucket_py(t, self.term_buckets) for t in missing})
             fetched = self.terms.filter(
                 f"{sql_in('bucket', bks)} AND {sql_in('term', missing)}"
@@ -491,17 +481,17 @@ class BlockSearcher:
         idf: dict[str, float] = {}
         postings = 0  # Σ global df: the lemmas' postings the scan reads at most
         for t in tl:
-            df_global = 0
+            term_df = 0
             for r in self._term_stats_cache[t]:
                 per_site.setdefault(r["site"], set()).add(r["term"])
-                df_global += int(r["df"])
-            postings += df_global
+                term_df += int(r["df"])
+            postings += term_df
             # idf is computed at QUERY time from (Σ_site df == global df,
-            # current n_docs) — never trusted from a stored column, so
-            # incremental updates (which shift n_docs/df) need no idf
-            # rewrite anywhere (plans/incremental.py M1 discipline)
-            if df_global:
-                idf[t] = BM25Params.idf(self.n_docs, df_global)
+            # current n_docs): the index stores no idf, so incremental
+            # updates (which shift n_docs/df) rewrite none
+            # (plans/incremental.py M1 discipline)
+            if term_df:
+                idf[t] = BM25Params.idf(self.n_docs, term_df)
         sites = [site] if site is not None else sorted(self.site_ranges)
         if mode == "reference":
             # per-site conjunctive gate (SearchServiceImpl.java:55-58):

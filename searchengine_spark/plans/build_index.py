@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from searchengine_spark.config import EngineConfig
 from searchengine_spark.operators.doc_ids import assign_doc_ids
 from searchengine_spark.operators.postings import (
-    BLOCK_SIZE,
     encode_posting_blocks,
     flat_postings,
     lemmatize_transcripts,
@@ -97,7 +96,8 @@ def build_index(
       1. ``documents`` — eligibility filter + lemmatize + dense doc-ids;
          also writes ``postings_flat`` (the uncompressed posting rows, the
          direct ``search_index`` analog and the block encoder's input).
-      2. ``terms`` (per-site df/cf/idf) + ``terms_global``.
+      2. ``terms`` (per-site df/cf, the only stored term statistics) +
+         ``terms_global`` (the term-id dictionary).
       3. ``postings`` — delta+varint blocks incl. co-sharded doc_len blocks.
     """
     cfg = cfg or EngineConfig()
@@ -290,16 +290,12 @@ def build_index(
     site_stats = {r["site"]: (int(r["lo"]), int(r["hi"])) for r in site_rows}
     site_ids = {s: i for i, s in enumerate(sorted(site_stats))}
 
-    # ---- stage 2: term dictionaries ----------------------------------------
+    # ---- stage 2: term stats + term-id dictionary --------------------------
     def stage_terms():
-        # ONE aggregation pass over the postings (term, site); the global
-        # stats roll up from the WRITTEN per-site table (vocabulary-sized
-        # input — Σ_site df == global df since a doc has exactly one site),
+        # ONE aggregation pass over the postings (term, site); the dictionary
+        # is built from the WRITTEN per-site table (vocabulary-sized input),
         # so the posting-sized agg never runs twice.
-        from searchengine_spark.operators.postings import (
-            global_term_stats,
-            term_bucket_col,
-        )
+        from searchengine_spark.operators.postings import term_bucket_col
 
         nb = cfg.n_term_buckets(res.n_docs)
         # partition pruning skips the MARKER_BUCKET directory entirely
@@ -314,14 +310,21 @@ def build_index(
             .withColumn("mut_epoch", F.lit(0).cast("long"))
         )
         cat.write(per_site.repartition(cfg.parallelism, "bucket"), "terms")
-        g = global_term_stats(cat.read("terms"), res.n_docs, cfg.parallelism)
+        # term_id: the PERSISTENT dense dictionary id (two-pass range assign,
+        # SURVEY §4.3.1 shape), so the block encoder shuffles int ids instead
+        # of term strings. Every later consumer (re-encodes included) reads
+        # this one table; mutations add new terms after max_term_id
+        # (plans/incremental.py). assign_doc_ids returns it cached.
+        ids = assign_doc_ids(
+            cat.read("terms").select("term").distinct(),
+            key_cols=("term",), parallelism=cfg.parallelism, id_col="term_id",
+        )
         cat.write(
-            g.withColumn("bucket", term_bucket_col(F.col("term"), nb))
-            .withColumn("mut_epoch", F.lit(0).cast("long"))
+            ids.withColumn("bucket", term_bucket_col(F.col("term"), nb))
             .repartition(cfg.parallelism, "bucket"),
             "terms_global",
         )
-        g.unpersist()
+        ids.unpersist()
         n_terms = cat.read("terms_global").count()
         return [(0, n_terms, "")]
 
@@ -367,7 +370,6 @@ def build_index(
         cat.write_meta(
             {
                 "shard_size": shard_size,
-                "block_size": BLOCK_SIZE,
                 "built_n_docs": res.n_docs,
                 "term_buckets": cfg.n_term_buckets(res.n_docs),
                 "flat_group_docs": cfg.flat_group_docs(shard_size, res.n_docs),

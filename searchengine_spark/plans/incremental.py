@@ -28,9 +28,10 @@ are counters in ``index_meta``; no mutation re-scans ``documents`` or
   a new doc in that shard is encoded once. Blocks store no score: the query
   kernel bounds a block by block_max_tf and the query-time idf.
 
-``terms`` / ``terms_global`` take exact ±(df, cf) increments in one fold
-(:func:`apply_term_deltas`) that rewrites only the affected term buckets;
-``sites`` merges the batch's doc-id ranges (:func:`update_sites`).
+``terms`` takes exact ±(df, cf) increments, and the ``terms_global``
+dictionary the batch's new terms, in one fold (:func:`apply_term_deltas`)
+that rewrites only the affected term buckets; ``sites`` merges the batch's
+doc-id ranges (:func:`update_sites`).
 
 Commit protocol (single writer, as the reference's ``indexingRunning``
 flag, ``IndexingServiceImpl.java:32-50``):
@@ -47,8 +48,10 @@ flag, ``IndexingServiceImpl.java:32-50``):
    rows a crashed attempt appended above the committed ``max_doc_id``
    (:func:`fence_orphans`), then apply a journal whose mut_seq is the
    committed one + 1 again. Term increments are not idempotent, so each
-   updated terms row is stamped with its mutation's mut_seq and a re-apply
-   skips the buckets already stamped. New term ids are ``max_term_id + 1 +
+   updated ``terms`` row is stamped with its mutation's mut_seq and a
+   re-apply skips the buckets already stamped. Only ``terms`` rows are
+   stamped: the dictionary gains new terms by a set union, which a re-apply
+   repeats identically. New term ids are ``max_term_id + 1 +
    rank(term in the batch's delta vocabulary)``, the same on every attempt;
    ``max_term_id`` advances by the whole delta vocabulary (a pre-existing
    term burns its rank).
@@ -75,16 +78,16 @@ from pyspark.storagelevel import StorageLevel
 
 from searchengine_spark.config import EngineConfig
 from searchengine_spark.operators.postings import (
+    DOCLEN_TERM,
     MARKER_BUCKET,
+    SITE_TERM,
     counts_with_marker,
     encode_posting_blocks,
     flat_bucket_col,
-    idf_col,
     lemmatize_transcripts,
     sgrp_col,
     term_bucket_py,
 )
-from searchengine_spark.operators.search import DOCLEN_TERM, SITE_TERM
 from searchengine_spark.sources.catalog import (
     TABLES,
     TableCatalog,
@@ -93,12 +96,11 @@ from searchengine_spark.sources.catalog import (
 )
 
 JOURNAL_TABLE = "mutation_journal"
-TERMS_GLOBAL_COLS = ["term", "df_global", "cf_global", "idf", "term_id", "bucket", "mut_epoch"]
 TERMS_COLS = ["term", "site", "df", "cf", "bucket", "mut_epoch"]
 _KEY = ["conv_id", "turn_idx"]
 _FLAT = ["doc_id", "site", "term", "tf", "bucket", "sgrp"]
 _DOC = ["doc_id", "conv_id", "turn_idx", "site", "doc_len", "shard"]
-_BLOCK = ["term", "block_id", "min_doc", "max_doc", "count", "block_max_tf", "doc_gaps", "tfs"]
+_BLOCK = ["term", "min_doc", "max_doc", "count", "block_max_tf", "doc_gaps", "tfs"]
 
 
 def reindex_turn(
@@ -448,7 +450,7 @@ def _apply(
             )
             re_terms = sorted({r["term"] for r in touched} | {DOCLEN_TERM, SITE_TERM})
 
-        # --- terms / terms_global: one ±increment fold -----------------------
+        # --- terms ±increments, new terms into terms_global -----------------
         deltas = [
             (r["term"], r["site"], int(r["d_df"]), int(r["d_cf"]))
             for r in rows.filter(F.col("term") != DOCLEN_TERM)
@@ -462,9 +464,7 @@ def _apply(
             .collect()
         ]
         n_docs = int(meta["n_docs"]) + n_new - n_removed
-        n_vocab = apply_term_deltas(
-            cat, deltas, nb, mut_seq, n_docs, int(meta["max_term_id"])
-        )
+        n_vocab = apply_term_deltas(cat, deltas, nb, mut_seq, int(meta["max_term_id"]))
         sites = update_sites(cat, sites, ranges)
 
         # --- posting blocks ---------------------------------------------------
@@ -477,7 +477,6 @@ def _apply(
                 documents=documents, site_ids=sids,
             )
 
-        blocks = cat.read("postings")
         if rshards:
             # re-encode the batch's (term, shard) groups of the replaced
             # docs' shards from postings_flat, new docs there included
@@ -492,7 +491,7 @@ def _apply(
                 & F.col("term").isin(real)
                 & in_shards
             )
-            keep_blocks = blocks.filter(
+            keep_blocks = cat.read("postings").filter(
                 F.col("shard").isin(rshards) & ~F.col("term").isin(re_terms)
             ).select(*_BLOCK, F.col("shard").cast("long"))
             re_blocks = encode(
@@ -501,23 +500,10 @@ def _apply(
             cat.replace_partitions(keep_blocks.unionByName(re_blocks), "postings", rshards)
         if ashards:
             # every new doc id is above every encoded one: the new blocks
-            # follow the existing runs, with block ids continuing theirs
+            # follow the existing runs in min_doc order
             new = inserted & F.col("shard").isin(ashards)
-            new_blocks = encode(
-                flat.filter(new & (F.col("bucket") >= 0)), docs.filter(new)
-            )
-            last_ids = (
-                blocks.filter(F.col("shard").isin(ashards))
-                .groupBy("term", F.col("shard").cast("long").alias("shard"))
-                .agg(F.max("block_id").alias("_max_bid"))
-            )
             cat.write(
-                new_blocks.join(last_ids, ["term", "shard"], "left")
-                .withColumn(
-                    "block_id",
-                    F.col("block_id") + F.coalesce(F.col("_max_bid") + 1, F.lit(0)),
-                )
-                .drop("_max_bid"),
+                encode(flat.filter(new & (F.col("bucket") >= 0)), docs.filter(new)),
                 "postings", mode="append",
             )
 
@@ -557,84 +543,51 @@ def apply_term_deltas(
     deltas: list[tuple[str, str, int, int]],
     nb: int,
     mut_seq: int,
-    n_docs_after: int,
     max_term_id: int,
 ) -> int:
-    """Fold exact (df, cf) increments into terms / terms_global by rewriting
-    ONLY the affected term-hash buckets (vocabulary-sized partitions,
+    """Fold exact (df, cf) increments into ``terms`` and add the new terms
+    to the ``terms_global`` dictionary, rewriting ONLY the affected
+    term-hash buckets (vocabulary-sized partitions,
     ``TableCatalog.replace_partitions``), reading NOTHING posting-sized.
 
     ``deltas`` holds the batch's nonzero (term, site, d_df, d_cf), unique
     on (term, site): bounded by the batch's vocabulary, so they are planned
     on the driver. They name the buckets to rewrite, and each new term's id
     is its rank in the batch's delta vocabulary after ``max_term_id``
-    (module docstring, step 3). Updated rows get fresh idf (from
-    ``n_docs_after``) and mut_epoch = ``mut_seq``; untouched rows keep
-    their (stale-allowed) idf — the searcher recomputes idf at query time.
-    Rows whose df reaches 0 are dropped (a term can vanish under an
-    upsert). Returns the vocabulary's size (the term-id ranks consumed —
-    the caller advances meta.max_term_id by this).
+    (module docstring, step 3). A dictionary bucket is rewritten as its
+    rows plus the vocabulary's terms it lacks, the same on a re-apply.
+    Updated ``terms`` rows get mut_epoch = ``mut_seq``, and rows whose df
+    reaches 0 are dropped (a term can vanish under an upsert); the term
+    keeps its dictionary row, so no id is reused. Returns the vocabulary's
+    size (the term-id ranks consumed — the caller advances
+    meta.max_term_id by this).
     """
     if not deltas:
         return 0
-    vocab: dict[str, list[int]] = {}
-    for t, _, d_df, d_cf in deltas:
-        v = vocab.setdefault(t, [0, 0])
-        v[0] += d_df
-        v[1] += d_cf
     ranked = [
-        (t, d_df, d_cf, max_term_id + 1 + i, term_bucket_py(t, nb))
-        for i, (t, (d_df, d_cf)) in enumerate(sorted(vocab.items()))
+        (t, max_term_id + 1 + i, term_bucket_py(t, nb))
+        for i, t in enumerate(sorted({d[0] for d in deltas}))
     ]
-    abuckets = sorted({r[4] for r in ranked})
+    abuckets = sorted({r[2] for r in ranked})
 
-    tg = cat.read("terms_global")
-    rw = _uncommitted_buckets(tg, abuckets, mut_seq)
-    if rw:
-        dgb = tiny_df(
-            cat.spark, [r for r in ranked if r[4] in rw],
-            "term string, d_df long, d_cf long, _new_id long, _dbucket int",
-        )
-        old = tg.filter(F.col("bucket").isin(rw)).select(*TERMS_GLOBAL_COLS)
-        merged = (
-            old.join(dgb, "term", "full_outer")
-            .withColumn("_changed", F.col("d_df").isNotNull())
-            .select(
-                "term",
-                (F.coalesce("df_global", F.lit(0)) + F.coalesce("d_df", F.lit(0)))
-                .cast("long").alias("df_global"),
-                (F.coalesce("cf_global", F.lit(0)) + F.coalesce("d_cf", F.lit(0)))
-                .cast("long").alias("cf_global"),
-                F.col("idf").alias("_old_idf"),
-                F.coalesce("term_id", "_new_id").cast("long").alias("term_id"),
-                F.coalesce("bucket", "_dbucket").cast("int").alias("bucket"),
-                F.when(F.col("d_df").isNotNull(), F.lit(mut_seq))
-                .otherwise(F.col("mut_epoch")).cast("long").alias("mut_epoch"),
-                "_changed",
-            )
-            .filter(F.col("df_global") > 0)
-            .withColumn(
-                "idf",
-                F.when(
-                    F.col("_changed"), idf_col(F.col("df_global"), n_docs_after)
-                ).otherwise(F.col("_old_idf")),
-            )
-            .select(*TERMS_GLOBAL_COLS)
-        )
-        cat.replace_partitions(merged, "terms_global", rw)
+    known = cat.read("terms_global").filter(F.col("bucket").isin(abuckets))
+    added = tiny_df(cat.spark, ranked, TABLES["terms_global"].schema).join(
+        known.select("term"), "term", "left_anti"
+    )
+    cat.replace_partitions(known.unionByName(added), "terms_global", abuckets)
 
     ts = cat.read("terms")
-    rw_s = _uncommitted_buckets(ts, abuckets, mut_seq)
-    if rw_s:
+    rw = _uncommitted_buckets(ts, abuckets, mut_seq)
+    if rw:
         dsb = tiny_df(
             cat.spark,
             [(t, site, a, b, term_bucket_py(t, nb)) for t, site, a, b in deltas
-             if term_bucket_py(t, nb) in rw_s],
+             if term_bucket_py(t, nb) in rw],
             "term string, site string, d_df long, d_cf long, _dbucket int",
         )
-        old_s = ts.filter(F.col("bucket").isin(rw_s)).select(*TERMS_COLS)
-        merged_s = (
-            old_s.join(dsb, ["term", "site"], "full_outer")
+        old = ts.filter(F.col("bucket").isin(rw)).select(*TERMS_COLS)
+        merged = (
+            old.join(dsb, ["term", "site"], "full_outer")
             .select(
                 "term",
                 "site",
@@ -648,7 +601,7 @@ def apply_term_deltas(
             )
             .filter(F.col("df") > 0)
         )
-        cat.replace_partitions(merged_s, "terms", rw_s)
+        cat.replace_partitions(merged, "terms", rw)
     return len(ranked)
 
 

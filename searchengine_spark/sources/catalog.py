@@ -62,7 +62,9 @@ class Table(NamedTuple):
 #: - ``documents`` / ``postings`` by doc-range shard: an upsert or compaction
 #:   rewrites one shard directory, and a site-scoped query prunes shards.
 #: - ``terms`` / ``terms_global`` by term-hash bucket: a term lookup reads
-#:   one bucket, and late data rewrites only the touched buckets.
+#:   one bucket, and late data rewrites only the touched buckets. ``terms``
+#:   holds the per-site df and cf, the only stored term statistics;
+#:   ``terms_global`` is the term-id dictionary, which never drops a term.
 #: - ``ann_lists`` by IVF centroid: serving reads only the probed lists.
 #:
 #: The other tables are written unpartitioned and unsorted.
@@ -87,7 +89,7 @@ TABLES: dict[str, Table] = {
         ("bucket", "sgrp"), ("bucket", "sgrp", "doc_id", "term"),
     ),
     "postings": Table(
-        "term string, block_id int, min_doc long, max_doc long, count int, "
+        "term string, min_doc long, max_doc long, count int, "
         "block_max_tf int, doc_gaps binary, tfs binary, shard int",
         ("shard",), ("shard", "term"),
     ),
@@ -96,8 +98,7 @@ TABLES: dict[str, Table] = {
         ("bucket",), ("bucket", "term"),
     ),
     "terms_global": Table(
-        "term string, df_global long, cf_global long, idf double, "
-        "term_id long, mut_epoch long, bucket int",
+        "term string, term_id long, bucket int",
         ("bucket",), ("bucket", "term"),
     ),
     "mutation_journal": Table(

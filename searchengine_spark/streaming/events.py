@@ -1,13 +1,13 @@
 """Structured-Streaming event analytics: the streaming twins of
 ``analysis/events.py``'s batch operators.
 
-- :func:`stream_windowed_counts` — ``readStream`` → ``withWatermark`` →
+- :func:`windowed_counts_stream` — ``readStream`` → ``withWatermark`` →
   tumbling-window aggregation in UPDATE mode. The watermark bounds state
   (windows older than watermark are finalized and evicted) and DROPS
   late rows that arrive after it passes — the two properties that make a
   windowed aggregation runnable forever over an unbounded stream. The
-  aggregation expression is byte-for-byte the batch
-  :func:`~searchengine_spark.analysis.events.windowed_counts` plan.
+  aggregation is the batch
+  :func:`~searchengine_spark.analysis.events.windowed_counts` itself.
 - :func:`stream_sessionize` — gap-based per-user sessions as a CUSTOM
   stateful operator via ``applyInPandasWithState`` (Arrow-batched; no
   per-row Python). State per user is one open session (5 scalars), so
@@ -38,6 +38,8 @@ from typing import Any, Callable, Iterator, Tuple
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from searchengine_spark.analysis.events import windowed_counts
 
 #: the driver `events` table schema (TESTDATA.md)
 EVENTS_SCHEMA = (
@@ -74,25 +76,12 @@ def read_events_stream(
 def windowed_counts_stream(
     events: DataFrame, window: str = "1 hour", watermark: str = "1 hour"
 ) -> DataFrame:
-    """The batch ``windowed_counts`` aggregation with a watermark bolted
-    on — same groupBy/agg expressions, so batch and stream results are
+    """The batch :func:`~searchengine_spark.analysis.events.windowed_counts`
+    aggregation over a watermarked stream, so batch and stream results are
     comparable row-for-row. UPDATE output mode emits each (window, type)
     row whenever a batch changes it; rows later than the watermark are
     dropped by the state store before they reach the aggregate."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return windowed_counts(events.withWatermark("ts", watermark), window)
 
 
 _SESSION_COLS = ["user_id", "session_id", "n_events", "start_us", "end_us"]

@@ -72,6 +72,19 @@ def statistics_counts(eng) -> dict:
     return st
 
 
+def term_totals(eng) -> dict:
+    """term → (Σ df, Σ cf) over the per-site ``terms`` rows: the index's
+    global term statistics."""
+    from pyspark.sql import functions as F
+
+    return {
+        r["term"]: (int(r["df"]), int(r["cf"]))
+        for r in eng.catalog.read("terms")
+        .groupBy("term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        .collect()
+    }
+
+
 def jobs_run(spark, fn) -> int:
     """Spark jobs that ``fn()`` runs, counted through a job group after the
     listener bus has delivered every job event."""

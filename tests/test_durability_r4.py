@@ -22,7 +22,6 @@ import tempfile
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 import searchengine_spark.plans.incremental as inc_mod
 from searchengine_spark.config import EngineConfig
@@ -33,7 +32,15 @@ from searchengine_spark.sources.transcripts import (
     transcripts_spark_df,
 )
 from searchengine_spark.streaming.ingest import append_turns
-from tests.conftest import statistics_counts
+from tests.conftest import statistics_counts, term_totals
+
+
+def _term_ids(e):
+    """term → term_id from the ``terms_global`` dictionary."""
+    return {
+        r["term"]: int(r["term_id"])
+        for r in e.catalog.read("terms_global").collect()
+    }
 
 
 @pytest.fixture(scope="module")
@@ -86,7 +93,7 @@ def test_upsert_crash_then_retry_lands_exactly_once(spark, corpus, monkeypatch):
     """ADVICE medium (incremental.py:109): a retry of a crashed reindex_turn
     must apply the IDENTICAL mutation — old rows come from the journal, not
     from tables the crashed attempt already rewrote. Crash at three points
-    over three docs, retry each, then compare terms_global / documents /
+    over three docs, retry each, then compare term stats / documents /
     search results against a FRESH build of the final corpus."""
     eng, wh = _build(spark, corpus)
     cat = eng.catalog
@@ -138,11 +145,8 @@ def test_upsert_crash_then_retry_lands_exactly_once(spark, corpus, monkeypatch):
         transcripts_spark_df(spark, pd.concat([edited, extra], ignore_index=True))
     )
 
-    tg = lambda e: {
-        r["term"]: (int(r["df_global"]), int(r["cf_global"]))
-        for r in e.catalog.read("terms_global").collect()
-    }
-    assert tg(eng) == tg(eng2)  # ±increments exact, applied exactly once
+    # ±increments exact, applied exactly once
+    assert term_totals(eng) == term_totals(eng2)
     assert (
         cat.read("documents").count() == eng2.catalog.read("documents").count()
     )
@@ -164,12 +168,10 @@ def test_crash_mid_partition_swap_recovers(spark, corpus, monkeypatch):
     """ADVICE medium (catalog.py:157): a crash in the swap window (old
     partition renamed aside, replacement not yet in) must not lose the
     bucket — the retry repairs it via recover_swaps and re-applies; every
-    other term in the bucket survives."""
+    other term in the bucket survives, and keeps its dictionary id."""
     eng, wh = _build(spark, corpus)
-    before = {
-        r["term"]: int(r["df_global"])
-        for r in eng.catalog.read("terms_global").collect()
-    }
+    before = {t: df for t, (df, _) in term_totals(eng).items()}
+    ids_before = _term_ids(eng)
 
     orig_swap = TableCatalog._swap_dir
     crashed = []
@@ -200,14 +202,14 @@ def test_crash_mid_partition_swap_recovers(spark, corpus, monkeypatch):
     # retry the same epoch: recover_all restores the bucket, fence drops the
     # orphan doc rows, increments apply exactly once
     assert append_turns(spark, wh, batch, epoch=0) == 2
-    after = {
-        r["term"]: int(r["df_global"])
-        for r in eng.catalog.read("terms_global").collect()
-    }
+    after = {t: df for t, (df, _) in term_totals(eng).items()}
     # no pre-existing term lost (the empty-bucket data-loss scenario)
     for t, df in before.items():
         assert after.get(t, 0) >= df, t
     assert after["swapword"] == 2
+    ids_after = _term_ids(eng)
+    for t, tid in ids_before.items():
+        assert ids_after.get(t) == tid, t
     eng._searcher = None
     _, count = eng.search("swapword")
     assert count == 2
@@ -235,11 +237,8 @@ def test_append_completes_crashed_upsert_first(spark, corpus, monkeypatch):
     for q, n in (("pendingword", 1), ("afterword", 1)):
         _, count = eng.search(q)
         assert count == n, q
-    tg = {
-        r["term"]: int(r["df_global"])
-        for r in eng.catalog.read("terms_global")
-        .filter(F.col("term").isin(["pendingword", "afterword"]))
-        .collect()
+    words = ("pendingword", "afterword")
+    assert {t: v for t, v in term_totals(eng).items() if t in words} == {
+        "pendingword": (1, 1), "afterword": (1, 1),
     }
-    assert tg == {"pendingword": 1, "afterword": 1}
     shutil.rmtree(wh, ignore_errors=True)

@@ -35,7 +35,7 @@ from searchengine_spark.sources.transcripts import (
 )
 from searchengine_spark.plans.incremental import upsert_turns
 from searchengine_spark.streaming.ingest import append_turns
-from tests.conftest import jobs_run, statistics_counts
+from tests.conftest import jobs_run, statistics_counts, term_totals
 
 
 @pytest.fixture(scope="module")
@@ -129,11 +129,8 @@ def _mixed_batch(spark):
     )
 
 
-def _term_stats(eng):
-    return {
-        r["term"]: (int(r["df_global"]), int(r["cf_global"]))
-        for r in eng.catalog.read("terms_global").collect()
-    }
+def _dictionary_rows(eng, term):
+    return eng.catalog.read("terms_global").filter(F.col("term") == term).count()
 
 
 @pytest.fixture(scope="module")
@@ -199,15 +196,15 @@ def test_append_crash_then_retry_lands_exactly_once(
     eng._searcher = None
     _check_matches_rebuilt_oracle(eng, corpus, rows, queries)
     # term stats incremented exactly once (the double-increment trap)
-    tg = eng.catalog.read("terms_global").filter(F.col("term") == "crashmarker")
-    assert [int(r["df_global"]) for r in tg.collect()] == [len(rows)]
+    assert term_totals(eng)["crashmarker"][0] == len(rows)
+    assert _dictionary_rows(eng, "crashmarker") == 1
     # counters committed exactly once
     meta = eng.catalog.read_meta()
     assert int(meta["n_docs"]) == eng.catalog.read("documents").count()
     if batch_kind == "mixed":
         fresh = request.getfixturevalue("mixed_fresh")
-        assert _term_stats(eng) == _term_stats(fresh)
-        assert "nofuqapa" not in _term_stats(eng)
+        assert term_totals(eng) == term_totals(fresh)
+        assert "nofuqapa" not in term_totals(eng)
         assert statistics_counts(eng) == statistics_counts(fresh)
         for q, mode in queries:
             page, count = eng.search(q, mode=mode, exact_count=True)
@@ -286,7 +283,7 @@ def test_append_reads_no_flat_files(spark, corpus):
     never by re-aggregating flat), and must not rewrite any corrupted file."""
     # small shards → several doc-range groups at tiny scale, so a non-tail
     # set exists to corrupt
-    eng, wh = _build(spark, corpus, docs_per_shard=256, max_flat_groups=4)
+    eng, wh = _build(spark, corpus, docs_per_shard=256)
     meta = eng.catalog.read_meta()
     g0 = (int(meta["max_doc_id"]) + 1) // int(meta["flat_group_docs"])
     assert g0 >= 1, "fixture must span multiple doc-range groups"
@@ -312,8 +309,8 @@ def test_append_reads_no_flat_files(spark, corpus):
     eng._searcher = None
     _, count = eng.search("noflatread")
     assert count == 1
-    tg = eng.catalog.read("terms_global").filter(F.col("term") == "noflatread")
-    assert [int(r["df_global"]) for r in tg.collect()] == [1]
+    assert term_totals(eng)["noflatread"][0] == 1
+    assert _dictionary_rows(eng, "noflatread") == 1
     # corrupted files untouched (no rewrite happened either)
     for p in corrupted:
         with open(p, "rb") as fh:
@@ -394,8 +391,8 @@ def test_crashed_append_then_upsert_lands_both(spark, corpus, monkeypatch):
     fresh = SearchEngine(spark, tempfile.mkdtemp(prefix="se_fresh_"))
     fresh.build(transcripts_spark_df(spark, _with_rows(corpus, [appended, replaced])))
     words = ("hazardword", "upsertword")
-    assert {t: v for t, v in _term_stats(eng).items() if t in words} == {
-        t: v for t, v in _term_stats(fresh).items() if t in words
+    assert {t: v for t, v in term_totals(eng).items() if t in words} == {
+        t: v for t, v in term_totals(fresh).items() if t in words
     } != {}
     for q in words:
         assert eng.search(q)[1] == fresh.search(q)[1] > 0, q
@@ -487,8 +484,8 @@ def test_turn_without_text_removes_it(spark, corpus):
 
     fresh = SearchEngine(spark, tempfile.mkdtemp(prefix="se_fresh_"))
     fresh.build(transcripts_spark_df(spark, _with_rows(corpus, blanked)))
-    assert _term_stats(eng) == _term_stats(fresh)
-    assert "nofuqapa" not in _term_stats(eng)
+    assert term_totals(eng) == term_totals(fresh)
+    assert "nofuqapa" not in term_totals(eng)
     assert statistics_counts(eng) == statistics_counts(fresh)
     keys = lambda e: sorted(
         (r["conv_id"], int(r["turn_idx"])) for r in e.catalog.read("documents").collect()

@@ -37,7 +37,7 @@ def test_blocks_decode_to_flat_postings(engine):
     postings = engine.catalog.read("postings")
     flat = engine.catalog.read("postings_flat")
     assert postings.columns == [
-        "term", "block_id", "min_doc", "max_doc", "count", "block_max_tf",
+        "term", "min_doc", "max_doc", "count", "block_max_tf",
         "doc_gaps", "tfs", "shard",
     ]
     assert flat.columns == ["doc_id", "site", "term", "tf", "bucket", "sgrp"]
@@ -45,7 +45,7 @@ def test_blocks_decode_to_flat_postings(engine):
     for term in ["hotalpha", "поиск"]:
         brows = (
             blocks.filter(F.col("term") == term)
-            .orderBy("shard", "block_id")
+            .orderBy("shard", "min_doc")
             .collect()
         )
         ids, tfs = [], []

@@ -7,7 +7,8 @@ upsert's cell reads, the append fence's tail-only probes and the query
 kernel's block scans prune on that order through parquet row-group min/max
 stats. No build or mutation may leave a DataFrame in Spark's cache or an
 RDD persisted. Every table's declared schema is what its files infer, so
-reads and the searcher load launch no schema-inference job.
+reads and the searcher load launch no schema-inference job. The
+``terms_global`` dictionary gives every indexed term one id.
 """
 
 from __future__ import annotations
@@ -18,10 +19,12 @@ import tempfile
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from searchengine_spark.config import EngineConfig
 from searchengine_spark.engine import SearchEngine
+from searchengine_spark.operators.postings import term_bucket_py
 from searchengine_spark.sources.catalog import TABLES, TableCatalog
 from searchengine_spark.sources.transcripts import transcripts_spark_df
 from tests.conftest import jobs_run
@@ -120,6 +123,27 @@ def test_declared_schemas_match_files(spark, mutated):
         )
         assert StructType.fromDDL(TABLES[name].schema) == inferred, name
         assert cat.read(name).schema == inferred, name
+
+
+def test_term_dictionary_covers_index(spark, mutated):
+    """After the build, the append, the upsert and the compaction, every
+    term of ``postings_flat`` and of ``terms`` has exactly one
+    ``terms_global`` row, in its term's bucket, and no two rows share a
+    term id."""
+    wh, _ = mutated
+    cat = TableCatalog(spark, wh)
+    dictionary = cat.read("terms_global").toPandas()
+    assert not dictionary["term_id"].duplicated().any()
+    rows = dictionary.groupby("term").size()
+    nb = int(cat.read_meta()["term_buckets"])
+    assert list(dictionary["bucket"]) == [term_bucket_py(t, nb) for t in dictionary["term"]]
+    for table, indexed in (
+        ("postings_flat", cat.read("postings_flat").filter(F.col("bucket") >= 0)),
+        ("terms", cat.read("terms")),
+    ):
+        terms = {r["term"] for r in indexed.select("term").distinct().collect()}
+        assert "layoutword" in terms, table
+        assert {t: int(rows.get(t, 0)) for t in terms} == dict.fromkeys(terms, 1), table
 
 
 def test_reads_and_searcher_load_run_no_inference_jobs(spark, mutated):
